@@ -10,7 +10,7 @@ The interleaved-span corpus is derived deterministically from the
 ``documents`` view by rules valid in BOTH Spark SQL and DuckDB
 (corpus.flat_spans_sql), so the oracle recomputes *intended* outputs
 from the construction rules while the Spark side runs the real pipeline
-(trie UDF over decoded bytes, mapInPandas OCR, regex field parse) —
+(trie when-chain over decoded bytes, Arrow-UDF OCR, regex field parse) —
 agreement certifies the pipeline, not just the plumbing.
 """
 

@@ -10,7 +10,8 @@ Usage (cluster):
         --num-parts 256 --salt-buckets 1024
 
 On a cluster the session comes from spark-submit's conf (master/executors
-set by the cluster manager); locally it falls back to local[$SPARK_GRAFT_CPUS].
+set by the cluster manager); locally it falls back to session.get_spark's
+host-derived defaults ($SPARK_GRAFT_CPUS / $SPARK_DRIVER_MEM override them).
 The job is resumable: re-submitting with the same --out continues from
 the last committed partition (see nolock_social_ocr_services_spark.lineage).
 """
@@ -36,49 +37,21 @@ def main() -> None:
     ap.add_argument("--batch-size", type=int, default=8,
                     help="resume units extracted per Spark job (1 = one "
                     "scan PER unit; 8-64 amortizes scans at scale)")
-    ap.add_argument("--table-format", choices=("manifest", "snap"),
-                    default="manifest",
-                    help="manifest = per-unit marker files (lineage.py); "
-                    "snap = snapshot-isolated table with Iceberg commit "
-                    "semantics (sources/snaptable.py): atomic partition "
-                    "overwrite, time travel, metadata-only resume")
     args = ap.parse_args()
 
     spark = SparkSession.getActiveSession() or get_spark(app_name="extract_job")
     docs = spark.read.parquet(args.corpus)
-    if args.table_format == "snap":
-        from nolock_social_ocr_services_spark.sources import snap_job
-
-        processed = snap_job.run_extract_job_snap(
-            spark,
-            docs,
-            args.out,
-            run_id=args.run_id,
-            num_parts=args.num_parts,
-            salt_buckets=args.salt_buckets,
-            batch_size=args.batch_size,
-        )
-        lin = snap_job.read_lineage_snap(spark, args.out)
-        from nolock_social_ocr_services_spark.sources.snaptable import SnapTable
-
-        committed = sorted(
-            int(v)
-            for v in SnapTable(args.out)
-            .current_summary()
-            .get("committed_parts", [])
-        )
-    else:
-        processed = lineage.run_extract_job(
-            spark,
-            docs,
-            args.out,
-            run_id=args.run_id,
-            num_parts=args.num_parts,
-            salt_buckets=args.salt_buckets,
-            batch_size=args.batch_size,
-        )
-        lin = lineage.read_lineage(spark, args.out)
-        committed = sorted(lineage.committed_parts(spark, args.out))
+    processed = lineage.run_extract_job(
+        spark,
+        docs,
+        args.out,
+        run_id=args.run_id,
+        num_parts=args.num_parts,
+        salt_buckets=args.salt_buckets,
+        batch_size=args.batch_size,
+    )
+    lin = lineage.read_lineage(spark, args.out)
+    committed = sorted(lineage.committed_parts(spark, args.out))
     total = lin.groupBy().sum("doc_count", "span_count").first()
     print(
         json.dumps(

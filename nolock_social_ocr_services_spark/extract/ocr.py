@@ -2,9 +2,9 @@
 
 Architectural stand-in for the reference's external OCR call
 (MistralOcrApiService.SendRequestAsync, MistralOcrApiService.cs:127-192):
-a *batched* ``mapInPandas`` stage, exactly where a real engine would put
-the network call — batches arrive via Arrow, results leave via Arrow, no
-per-row Python beyond vectorized pandas ops. The OCR text is a pure
+a scalar Arrow UDF, exactly where a real engine would put the network
+call — batches arrive via Arrow, results leave via Arrow, no per-row
+Python beyond vectorized pandas ops. The OCR text is a pure
 function of ``md5(media_ref)`` (computed JVM-side with the built-in
 ``md5`` before the UDF), so goldens are stable, the pipeline has zero
 network dependencies, and the DuckDB oracle can recompute every field.
@@ -630,7 +630,7 @@ def sql_receipt_item_line(d: Dialect, e: dict[str, str]) -> str:
 def oracle_ocr_text_sql(d: Dialect, mime: str = "mime", h: str = "h") -> str:
     """SQL expression for the FULL concatenated OCR text (pages in index
     order) given mime + h = md5(media_ref). Lets the DuckDB oracle verify
-    the mapInPandas OCR stage + ordered page concat end to end."""
+    the Arrow-UDF OCR stage + ordered page concat end to end."""
     e = ocr_field_exprs(d, h)
     nl = "chr(10)"
     item_lines = d.concat_over_series(
@@ -693,55 +693,3 @@ __all__ = [
     "DUCK",
 ]
 
-
-# -- fused classify + OCR (one Python stage) ----------------------------------
-
-FUSED_SCHEMA = T.StructType(
-    [T.StructField("mime", T.StringType(), True)] + list(OCR_RESULT_SCHEMA.fields)
-)
-
-
-def make_fused_classify_ocr_udf(spark, compiled_trie, fallback: str):
-    """Single scalar Arrow UDF: (payload_prefix, md5) -> (mime + flat OCR).
-
-    Fuses the trie classification and the synthetic OCR into ONE
-    ArrowEvalPython stage: the classifier's mime output feeds the OCR
-    routing inside the same batch, saving one JVM<->Python Arrow round
-    trip per row versus two chained scalar UDFs.
-
-    Measured (paired A/B, local[16], 1.5M docs): byte-identical output,
-    ~1.03x at best — the chained-UDF Arrow boundary pipelines well, so
-    fusion is NOT the default (pipeline.extract_spans(fused=False));
-    it exists as the measured option for deployments where the Python
-    worker pool, not the boundary, is the constraint.
-    """
-    bc = spark.sparkContext.broadcast(compiled_trie)
-
-    @F.pandas_udf(FUSED_SCHEMA)
-    def fused(prefix: pd.Series, h: pd.Series) -> pd.DataFrame:
-        trie = bc.value
-        n = len(prefix)
-        L = max(trie.max_depth, 1)
-        mat = np.zeros((n, L), dtype=np.uint8)
-        lengths = np.zeros(n, dtype=np.int64)
-        vals = prefix.to_numpy(dtype=object)
-        for i, p in enumerate(vals):
-            if p is not None and len(p) > 0:
-                lengths[i] = len(p)
-                head = p[:L]
-                mat[i, : len(head)] = np.frombuffer(head, dtype=np.uint8)
-        ids = trie.classify_batch(mat, lengths)
-        lut = np.array(list(trie.mimes) + [fallback], dtype=object)
-        mime_arr = lut[ids]
-        # classify_mime semantics: NULL media_ref (h NULL, non-media row)
-        # -> NULL mime; media row with undecodable/NULL prefix -> the
-        # lenient fallback (ids already -1 for empty prefixes).
-        mime_arr[h.isna().to_numpy()] = None
-        mime = pd.Series(mime_arr, dtype=object)
-        out = _ocr_batch(h, mime)
-        out.insert(0, "mime", mime)
-        return out
-
-    # same rationale as _ocr_udf: keep success filters from duplicating
-    # the Python stage (the fused UDF carries the OCR cost too).
-    return fused.asNondeterministic()

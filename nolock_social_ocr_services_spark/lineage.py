@@ -27,7 +27,7 @@ ReactiveMistralOcrPipeline.cs:262-269) map onto the lineage rows.
 from __future__ import annotations
 
 import os
-import time
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,42 +56,14 @@ def pending_docs(docs_with_part: DataFrame, manifest_df: DataFrame) -> DataFrame
     return docs_with_part.join(F.broadcast(done), on="part_id", how="left_anti")
 
 
-def _lineage_row(flat_out: DataFrame, run_id: str, part_id: int) -> DataFrame:
-    """(run_id, part_id, doc_count, span_count, trie_hits, committed_at)
-    computed from the committed partition output in one aggregation."""
-    spark = flat_out.sparkSession
-    hits = (
-        flat_out.filter(F.col("mime").isNotNull())
-        .groupBy("mime")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("mime"), F.col("n")))
-            ).alias("trie_hits")
-        )
-    )
-    counts = flat_out.agg(
-        F.countDistinct("doc_id").alias("doc_count"),
-        F.count("*").alias("span_count"),
-    )
-    return (
-        counts.crossJoin(hits)
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("part_id", F.lit(part_id))
-        .withColumn("committed_at", F.current_timestamp())
-        .select(
-            "run_id", "part_id", "doc_count", "span_count", "trie_hits",
-            "committed_at",
-        )
-    )
-
-
-def _lineage_rows_batch(
-    flat_out: DataFrame, run_id: str
+def _lineage_rows(
+    flat_out: DataFrame, run_id: str, empty_parts: list[int]
 ) -> DataFrame:
-    """Batch form of the lineage row: one (run_id, part_id, doc_count,
-    span_count, trie_hits, committed_at) row per part_id in one
-    aggregation over the re-read committed output."""
+    """One (run_id, part_id, doc_count, span_count, trie_hits,
+    committed_at) row per part_id in one aggregation over the re-read
+    committed output, plus a zero-count row for each unit in
+    ``empty_parts`` (no spans, so absent from ``flat_out``)."""
+    spark = flat_out.sparkSession
     hits = (
         flat_out.filter(F.col("mime").isNotNull())
         .groupBy("part_id", "mime")
@@ -107,8 +79,13 @@ def _lineage_rows_batch(
         F.countDistinct("doc_id").alias("doc_count"),
         F.count("*").alias("span_count"),
     )
+    zero = spark.createDataFrame(
+        [(p, 0, 0, {}) for p in empty_parts],
+        "part_id int, doc_count long, span_count long, trie_hits map<string,long>",
+    )
     return (
         counts.join(hits, on="part_id", how="left")
+        .unionByName(zero)
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())
         .select(
@@ -135,16 +112,15 @@ def run_extract_job(
     ``fail_after=k`` injects a crash after >= k units commit (kill/resume
     tests; checked at batch boundaries).
 
-    ``batch_size``: units extracted per Spark job. At 1 (default) each
-    unit is its own job — finest resume granularity, but every unit
-    RE-SCANS the full input (the part_id filter is a hash of doc_id, so
-    no partition pruning), i.e. P scans for P units. At scale set
-    batch_size ~ 8-64: one scan + one dynamic-partition-overwrite write
-    per batch (ceil(P/B) scans total), manifests still committed per
-    unit AFTER the batch's data lands, so a kill mid-batch just
-    re-extracts that batch's uncommitted units on resume (idempotent
-    overwrite). Resume granularity coarsens to the batch only for
-    in-flight work, never for committed units.
+    ``batch_size``: units extracted per Spark job — one scan + one
+    dynamic-partition-overwrite write per batch, i.e. ceil(P/B) scans
+    for P units (the part_id filter is a hash of doc_id, so a scan reads
+    the whole input). At 1 (default) every unit is its own job, the
+    finest resume granularity; at scale set batch_size ~ 8-64. Manifests
+    are committed per unit AFTER the batch's data lands, so a kill
+    mid-batch just re-extracts that batch's uncommitted units on resume
+    (idempotent overwrite). Resume granularity coarsens to the batch
+    only for in-flight work, never for committed units.
     """
     docsp = with_part_id(docs, num_parts)
     done = committed_parts(spark, out_dir)
@@ -154,21 +130,12 @@ def run_extract_job(
         if fail_after is not None and len(processed) >= fail_after:
             raise RuntimeError(f"injected failure after {fail_after} commits")
         batch = pending[i : i + max(batch_size, 1)]
-        if len(batch) == 1:
-            part = batch[0]
-            part_docs = docsp.filter(F.col("part_id") == part).drop("part_id")
-            data_path = f"{out_dir}/data/part_id={part}"
-            extract_spans(part_docs, salt_buckets=salt_buckets).write.mode(
-                "overwrite"
-            ).parquet(data_path)
-            # data committed -> now lineage + manifest (ordering = crash safety)
-            flat_out = spark.read.parquet(data_path)
-            _lineage_row(flat_out, run_id, part).write.mode("append").parquet(
-                f"{out_dir}/_lineage"
-            )
-            _write_manifest(spark, out_dir, run_id, [part])
-            processed.append(part)
-            continue
+        unit_dirs = {p: f"{out_dir}/data/part_id={p}" for p in batch}
+        # a killed attempt may have left files in these uncommitted units;
+        # clearing them means that after the write a unit has a directory
+        # exactly when it has spans.
+        for path in unit_dirs.values():
+            shutil.rmtree(path, ignore_errors=True)
         batch_docs = docsp.filter(F.col("part_id").isin(batch)).drop("part_id")
         flat = extract_spans(batch_docs, salt_buckets=salt_buckets)
         # part_id is a pure function of doc_id -> re-derive after
@@ -180,10 +147,16 @@ def run_extract_job(
             .partitionBy("part_id")
             .parquet(f"{out_dir}/data")
         )
+        # the partitioned write makes no directory for a unit without
+        # spans; an empty file keeps every committed unit readable.
+        empty = [p for p, path in unit_dirs.items() if not os.path.exists(path)]
+        for p in empty:
+            spark.createDataFrame([], flat.schema).write.parquet(unit_dirs[p])
+        # data committed -> now lineage + manifest (ordering = crash safety)
         re_read = spark.read.parquet(f"{out_dir}/data").filter(
             F.col("part_id").isin(batch)
         )
-        _lineage_rows_batch(re_read, run_id).write.mode("append").parquet(
+        _lineage_rows(re_read, run_id, empty).write.mode("append").parquet(
             f"{out_dir}/_lineage"
         )
         _write_manifest(spark, out_dir, run_id, batch)

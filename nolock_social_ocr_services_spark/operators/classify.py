@@ -2,30 +2,21 @@
 
 Vectorized re-creation of the reference's classify step
 (``OcrRequestHandler.DetectMimeType``, OcrRequestHandler.cs:115-118, and
-``PipelineNodeImageToUrl``, PipelineNodeImageToUrl.cs:22-48): a compiled
-trie is broadcast and applied to Arrow batches inside a pandas UDF.
+``PipelineNodeImageToUrl``, PipelineNodeImageToUrl.cs:22-48): the trie's
+signature table is compiled into a codegen'd ``when`` chain, so
+classification runs entirely in the JVM with no Python stage.
 
-Scale notes (SURVEY.md §4 O1):
-  * only a ``PREFIX_LEN``-byte slice of each payload crosses the
-    JVM->Python Arrow boundary — the slice happens JVM-side via
-    ``substring`` on the binary / base64 string column, so full payloads
-    never ship to the Python worker;
-  * the trie tables are compiled once on the driver and broadcast; the
-    UDF does ``max_depth`` (<= 8) vectorized NumPy steps per batch, no
-    per-row Python.
+Scale note (SURVEY.md §4 O1): only a ``PREFIX_LEN``-byte slice of each
+payload is ever decoded — the slice happens via ``substring`` on the
+binary / base64 string column before ``hex``.
 """
 
 from __future__ import annotations
 
-import base64 as _b64
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from ..trie import OCTET_STREAM, PREFIX_LEN, CompiledTrie, lenient_trie
+from ..trie import OCTET_STREAM, PREFIX_LEN, lenient_trie
 
 # base64 chars needed to decode PREFIX_LEN bytes (4 chars per 3 bytes).
 _B64_PREFIX_CHARS = ((PREFIX_LEN + 2) // 3) * 4
@@ -53,32 +44,6 @@ def decode_data_url_prefix(media_ref: Column) -> Column:
     )
 
 
-def _make_classifier_udf(spark: SparkSession, compiled: CompiledTrie, fallback: str | None):
-    bc = spark.sparkContext.broadcast(compiled)
-
-    @pandas_udf("string")
-    def classify_prefix(prefix: pd.Series) -> pd.Series:
-        trie: CompiledTrie = bc.value
-        n = len(prefix)
-        L = max(trie.max_depth, 1)
-        mat = np.zeros((n, L), dtype=np.uint8)
-        lengths = np.zeros(n, dtype=np.int64)
-        vals = prefix.to_numpy(dtype=object)
-        # one tight loop to unpack variable-length byte strings into the
-        # fixed matrix; all classification below is fully vectorized.
-        for i, p in enumerate(vals):
-            if p is not None and len(p) > 0:
-                lengths[i] = len(p)
-                head = p[:L]
-                mat[i, : len(head)] = np.frombuffer(head, dtype=np.uint8)
-        ids = trie.classify_batch(mat, lengths)
-        lut = np.array(list(trie.mimes) + [fallback], dtype=object)
-        out = lut[ids]  # ids == -1 -> last element == fallback
-        return pd.Series(out)
-
-    return classify_prefix
-
-
 def trie_match_expr(
     prefix: Column, trie=None, fallback: str | None = OCTET_STREAM
 ) -> Column:
@@ -86,15 +51,15 @@ def trie_match_expr(
 
     Longest-prefix match as a ``when`` chain over ``hex(prefix)``:
     signatures are tested longest-first (built innermost-out, so the
-    longest ends up outermost), which is exactly the deepest-node-wins
-    rule of ``MimeTypeTrie.search`` (MimeTypeTrie.cs:36-58). Semantics
-    are identical to the compiled-NumPy UDF (property-tested); NULL /
-    empty / unmatched prefixes yield ``fallback``.
+    longest ends up outermost). That is the deepest-node-wins rule of
+    ``MimeTypeTrie.search`` (MimeTypeTrie.cs:36-58), the reference the
+    tests check it against. NULL / empty / unmatched prefixes yield
+    ``fallback``.
 
-    This is the measured fast path (see classify_mime(engine=...)):
-    the signature table is static and tiny, so a codegen'd branch chain
-    beats shipping prefixes over Arrow to a Python worker — and at
-    cluster scale it removes one whole Python-worker stage.
+    The signature table is static and tiny, so a codegen'd branch chain
+    beats shipping prefixes over Arrow to a Python worker (measured on
+    the sf0.1 x20 corpus, local[16]: 2.07-2.28 s vs 2.27-2.78 s for the
+    whole pipeline against a broadcast NumPy-trie pandas UDF).
     """
     sigs = (trie or lenient_trie()).signatures()
     hexcol = F.hex(prefix)
@@ -114,7 +79,7 @@ def classify_mime(
     data_url_col: str | None = None,
     strict: bool = False,
     trie=None,
-    engine: str = "udf",
+    engine: str = "expr",
 ) -> DataFrame:
     """Add ``out_col`` with the trie-detected MIME of each row's payload.
 
@@ -126,27 +91,18 @@ def classify_mime(
             quarantine; the reference throws NotSupportedException,
             PipelineNodeImageToUrl.cs:38-48); lenient mode (default) falls
             back to application/octet-stream (OcrRequestHandler.cs:115-118).
-        engine: ``"udf"`` (default) = broadcast compiled-NumPy trie in a
-            pandas UDF (the north-star architecture); ``"expr"`` = the
-            same trie compiled to a codegen'd ``when`` chain
-            (:func:`trie_match_expr`) — identical outputs, no Python
-            stage. Both are kept: the UDF shape is where a *learned*
-            classifier would slot in; the expr shape is the fast path
-            for the fixed signature table.
+        engine: only ``"expr"``, the trie compiled to a codegen'd
+            ``when`` chain (:func:`trie_match_expr`); kept as a keyword
+            so existing callers that name it keep working.
     """
-    spark = df.sparkSession
+    if engine != "expr":
+        raise ValueError(f"unknown classify engine {engine!r}")
     fallback = None if strict else OCTET_STREAM
     if data_url_col is not None:
         prefix = decode_data_url_prefix(F.col(data_url_col))
     else:
         prefix = F.substring(F.col(payload_col), 1, PREFIX_LEN)
-    if engine == "expr":
-        matched = trie_match_expr(prefix, trie=trie, fallback=fallback)
-    elif engine == "udf":
-        compiled = (trie or lenient_trie()).compile()
-        matched = _make_classifier_udf(spark, compiled, fallback)(prefix)
-    else:
-        raise ValueError(f"unknown classify engine {engine!r}")
+    matched = trie_match_expr(prefix, trie=trie, fallback=fallback)
     # NULL payload stays NULL mime in both modes (nothing to classify).
     src = F.col(data_url_col) if data_url_col is not None else F.col(payload_col)
     return df.withColumn(

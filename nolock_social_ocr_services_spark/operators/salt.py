@@ -16,9 +16,9 @@ caps scaling at high core counts. Hashing ``(doc_id, offset)`` makes
 every row its own key, so partition sizes converge to uniform (binomial
 with n=rows, not n=K) while staying fully deterministic.
 
-Order is restored afterwards by :mod:`.reassemble` (window over
-``offset``), which is why span-spreading is safe for the span-sequence
-invariant.
+Order is restored afterwards by :mod:`.reassemble` (``array_sort`` of
+each document's collected spans by ``offset``), which is why
+span-spreading is safe for the span-sequence invariant.
 """
 
 from __future__ import annotations

@@ -4,8 +4,8 @@ SURVEY.md §3, re-expressed as one declarative Spark plan):
     documents(doc_id, spans[])                  Iceberg/parquet scan
       -> explode(spans)                         U2 flatten
       -> salted repartition                     §4 custom #1 (skew)
-      -> trie classify (prefix-only UDF)        C1-C4
-      -> synthetic OCR (mapInPandas)            T2 stand-in
+      -> trie classify (codegen'd when-chain)   C1-C4
+      -> synthetic OCR (scalar Arrow UDF)       T2 stand-in
       -> ordered page concat (built-ins)        T3 / W1
       -> html boilerplate strip                 north_rule text path
       -> typed field extraction (built-ins)     T4-T8
@@ -26,24 +26,6 @@ from .extract.records import route_and_extract
 from .operators.classify import classify_mime
 from .operators.reassemble import reassemble_spans, span_sequence_equal
 from .operators.salt import salted_repartition
-
-FLAT_COLUMNS = (
-    "doc_id",
-    "offset",
-    "kind",
-    "mime",
-    "text",
-    "media_ref",
-    "receipt",
-    "check",
-    "receipt_full",
-    "check_full",
-    "schema_used",
-    "extract_error",
-    "confidence",
-    "ocr_model",
-    "ocr_tokens",
-)
 
 
 def barrier_filter(df: DataFrame, cond) -> DataFrame:
@@ -80,13 +62,7 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
 
 
-def extract_spans(
-    docs: DataFrame,
-    salt_buckets: int | None = None,
-    partitions: int | None = None,
-    fused: bool = False,
-    classify_engine: str = "expr",
-) -> DataFrame:
+def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
     """Flat extracted spans: classify + extract every span.
 
     ``text`` holds the extraction result per kind: raw text for 'text'
@@ -102,70 +78,21 @@ def extract_spans(
     on the transfer: text spans never ship their text into the OCR UDF,
     media spans never ship into the boilerplate stripper.
 
-    ``classify_engine`` defaults to ``"expr"`` — the trie compiled to a
-    codegen'd when-chain (classify.trie_match_expr). Measured on the
-    sf0.1 x20 corpus, local[16], interleaved A/B: expr 2.07-2.28 s vs
-    udf 2.27-2.78 s warm (~10-20% whole-pipeline), and it removes one of
-    the two Python stages entirely (one Arrow boundary, half the Python
-    worker pressure) — the gap widens at cluster scale. ``"udf"`` keeps
-    the broadcast compiled-NumPy trie stage (byte-identical outputs,
-    property-tested equivalent) as the slot where a learned classifier
-    would go; the oracle-checked ``classify_spans`` query exercises it
-    every round.
+    Classification is the trie compiled to a codegen'd when-chain
+    (classify.trie_match_expr), so the OCR UDF is the pipeline's only
+    Python stage.
     """
     exploded = explode_spans(docs)
-    if partitions is None:
-        # explicit partition count: AQE would coalesce the salted
-        # exchange to ~64MB partitions, leaving cores idle and a
-        # straggler tail; 3 tasks/core keeps the wave granular.
-        cores = docs.sparkSession.sparkContext.defaultParallelism
-        partitions = max(salt_buckets or 0, cores * 3, 64)
+    # explicit partition count: AQE would coalesce the salted exchange
+    # to ~64MB partitions, leaving cores idle and a straggler tail;
+    # 3 tasks/core keeps the wave granular.
+    cores = docs.sparkSession.sparkContext.defaultParallelism
+    partitions = max(salt_buckets or 0, cores * 3, 64)
     salted = salted_repartition(
         exploded, num_partitions=partitions, salt_buckets=salt_buckets
     )
-    if fused:
-        # one ArrowEvalPython stage instead of two: the trie classify
-        # and the OCR run in the same Python batch (see
-        # make_fused_classify_ocr_udf); identical outputs, one fewer
-        # JVM<->Python Arrow round trip per row.
-        from .extract.ocr import _H as _OCR_H
-        from .extract.ocr import make_fused_classify_ocr_udf
-        from .operators.classify import decode_data_url_prefix
-        from .trie import OCTET_STREAM, lenient_trie
-
-        spark = docs.sparkSession
-        udf = make_fused_classify_ocr_udf(
-            spark, lenient_trie().compile(), OCTET_STREAM
-        )
-        res = udf(
-            decode_data_url_prefix(F.col("media_ref")),
-            F.md5(F.col("media_ref")),
-        )
-        r = F.col(_OCR_H)
-        full = F.array(
-            F.struct(F.lit(2).alias("index"), r["app2_md"].alias("markdown")),
-            F.struct(F.lit(1).alias("index"), r["app1_md"].alias("markdown")),
-            F.struct(F.lit(0).alias("index"), r["main_md"].alias("markdown")),
-        )
-        npages = r["npages"]
-        from .extract.ocr import PAGE_SCHEMA
-
-        pages = F.when(
-            npages.isNull(), F.lit(None).cast(PAGE_SCHEMA)
-        ).otherwise(F.slice(full, F.lit(4) - npages, npages))
-        ocred = concat_pages(
-            salted.withColumn(_OCR_H, res)
-            .withColumn("mime", r["mime"])
-            .withColumn("ocr_pages", pages)
-            .withColumn("ocr_model", r["model"])
-            .withColumn("ocr_tokens", r["tokens"])
-            .drop(_OCR_H)
-        )
-    else:
-        classified = classify_mime(
-            salted, data_url_col="media_ref", out_col="mime", engine=classify_engine
-        )
-        ocred = concat_pages(run_ocr(classified))
+    classified = classify_mime(salted, data_url_col="media_ref", out_col="mime")
+    ocred = concat_pages(run_ocr(classified))
     html_only = F.when(F.col("kind") == "html", F.col("text"))  # masked input
     extracted = ocred.withColumn(
         "extracted_text",

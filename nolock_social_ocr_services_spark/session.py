@@ -12,6 +12,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory: in local mode the driver JVM is
+    the whole cluster, and its Python workers need the other half."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "nolock_ocr_spark",
     cpus: int | None = None,
@@ -20,13 +27,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
+    The driver heap defaults to $SPARK_DRIVER_MEM, else half the host's
+    physical memory.
+
     Args:
-        cpus: local[] thread count; defaults to $SPARK_GRAFT_CPUS or 32.
+        cpus: local[] thread count; defaults to $SPARK_GRAFT_CPUS, else
+            the host's CPU count.
         shuffle_partitions: defaults to cpus (local mode: 1 thread per
             partition keeps all cores busy without tiny-task overhead).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -41,7 +52,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # large text payloads -> keep Arrow batches moderate (SURVEY.md §4 O6)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         # shuffle/spill scratch on tmpfs: local-mode shuffles are disk
         # round-trips; a spinning/virtio /tmp adds minutes of jitter
         .config(

@@ -1,20 +1,10 @@
-"""Checkpointed extraction over SnapTable: the lineage.run_extract_job
-protocol re-based on snapshot commits.
+"""Jobs over SnapTable: resumable ingest dedup, an exactly-once
+foreachBatch sink and incremental aggregate maintenance.
 
-Differences from the ``_manifest``-marker variant (lineage.py):
-
-* the committed-unit set is answered from the CURRENT SNAPSHOT's
-  manifest (``committed_values``) — pure metadata, no parquet scan;
-* each batch lands as ONE atomic ``overwrite_partitions`` commit, so a
-  re-run of a half-finished batch replaces its partitions instead of
-  layering duplicate files;
-* readers time-travel: ``table.read(spark, snapshot_id=k)`` reproduces
-  the output exactly as of any earlier commit, which is the audit
-  surface the reference's progress events (ReactivePipelineExtensions
-  .cs:199-251) only approximate.
-
-On a real cluster this is ``df.writeTo(tbl).overwritePartitions()`` on
-an Iceberg table; see sources/snaptable.py for the swap map.
+Each job commits its data and its progress marker in one snapshot, so a
+kill at any point resumes from table metadata alone. On a real cluster
+these are Iceberg ``overwritePartitions`` / ``append`` commits; see
+sources/snaptable.py for the swap map.
 """
 
 from __future__ import annotations
@@ -22,70 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lineage import _lineage_rows_batch, with_part_id
-from ..pipeline import extract_spans
+from ..lineage import with_part_id
 from .snaptable import SnapTable
-
-
-def run_extract_job_snap(
-    spark: SparkSession,
-    docs: DataFrame,
-    table_dir: str,
-    run_id: str,
-    num_parts: int = 16,
-    batch_size: int = 4,
-    salt_buckets: int | None = None,
-    fail_after: int | None = None,
-) -> list[int]:
-    """Run (or resume) extraction into a SnapTable at ``table_dir`` with
-    a sibling lineage table at ``table_dir + "_lineage"``.
-
-    Commit order per batch: data snapshot first, lineage append second —
-    a kill between them loses only a lineage row for data that is
-    already durable, and the resume pass re-derives nothing (lineage is
-    re-appended only for units the manifest says are new).
-    Returns part_ids processed by THIS invocation.
-    """
-    out = SnapTable(table_dir)
-    lin = SnapTable(table_dir + "_lineage")
-    docsp = with_part_id(docs, num_parts)
-    # resume set = the cumulative summary record, NOT the file manifest:
-    # an empty partition commits no files, and must still count as done.
-    done = {int(v) for v in out.current_summary().get("committed_parts", [])}
-    done |= {int(v) for v in out.committed_values("part_id")}
-    pending = [p for p in range(num_parts) if p not in done]
-    processed: list[int] = []
-    for i in range(0, len(pending), max(batch_size, 1)):
-        if fail_after is not None and len(processed) >= fail_after:
-            raise RuntimeError(f"injected failure after {fail_after} commits")
-        batch = pending[i : i + max(batch_size, 1)]
-        batch_docs = docsp.filter(F.col("part_id").isin(batch)).drop("part_id")
-        flat = with_part_id(
-            extract_spans(batch_docs, salt_buckets=salt_buckets), num_parts
-        )
-        out.overwrite_partitions(
-            flat,
-            "part_id",
-            batch,
-            extra_summary={
-                "committed_parts": sorted(done | set(processed) | set(batch))
-            },
-        )
-        # read() restores part_id from the path and casts it back to the
-        # declared int type (recorded partition_by in the manifest)
-        committed = out.read(spark, parts=batch)
-        lin.append(_lineage_rows_batch(committed, run_id))
-        processed.extend(batch)
-    return processed
-
-
-def read_output_snap(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Committed extraction output at the current snapshot."""
-    return SnapTable(table_dir).read(spark)
-
-
-def read_lineage_snap(spark: SparkSession, table_dir: str) -> DataFrame:
-    return SnapTable(table_dir + "_lineage").read(spark)
 
 
 def run_ingest_dedup(

@@ -1,4 +1,4 @@
-"""Magic-byte MIME classification: prefix trie + compiled NumPy tables.
+"""Magic-byte MIME classification: byte-prefix trie + signature tables.
 
 Re-creation (from scratch, Spark-first) of the reference's byte-signature
 classifier:
@@ -12,14 +12,9 @@ classifier:
   ``get_all_mime_types`` enumerates every stored MIME
   (``MimeTypeTrie.cs:60-79``).
 
-* ``CompiledTrie`` is the scale path: the trie is compiled ONCE on the
-  driver into flat NumPy tables — ``transitions[state, byte] -> state``
-  and ``emit[state] -> mime_id`` — that are broadcast to executors and
-  applied to whole Arrow batches with a fixed number of vectorized steps
-  (max signature length, not payload length).  No per-row Python runs in
-  the hot path; this is the vectorized equivalent of the reference's
-  early-exit scan (``MimeTypeTrie.cs:44-47``) because only the first
-  ``max_depth`` bytes of each payload are ever examined.
+* The Spark stage (``operators.classify.trie_match_expr``) compiles
+  ``signatures()`` into a codegen'd when-chain over the payload's first
+  ``PREFIX_LEN`` bytes; it is property-tested against ``search``.
 
 Production signature tables reproduce the reference exactly:
 
@@ -30,10 +25,6 @@ Production signature tables reproduce the reference exactly:
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
-
-import numpy as np
 
 OCTET_STREAM = "application/octet-stream"
 
@@ -114,107 +105,6 @@ class MimeTypeTrie:
                 stack.append((prefix + bytes([b]), node[0][b]))
         return out
 
-    # -- compilation ------------------------------------------------------
-
-    def compile(self) -> "CompiledTrie":
-        """Flatten into NumPy transition/emit tables (driver-side, once)."""
-        # BFS assign state ids; state 0 = root.
-        nodes = [self._root]
-        ids: dict[int, int] = {id(self._root): 0}
-        i = 0
-        while i < len(nodes):
-            for child in nodes[i][0].values():
-                if id(child) not in ids:
-                    ids[id(child)] = len(nodes)
-                    nodes.append(child)
-            i += 1
-        n = len(nodes)
-        transitions = np.full((n, 256), -1, dtype=np.int32)
-        emit = np.full(n, -1, dtype=np.int32)
-        mimes: list[str] = []
-        mime_ids: dict[str, int] = {}
-        max_depth = 0
-
-        def depth_of(node_idx: int, seen_depths: dict[int, int]) -> int:
-            return seen_depths[node_idx]
-
-        depths = {0: 0}
-        for idx, node in enumerate(nodes):
-            for b, child in node[0].items():
-                cidx = ids[id(child)]
-                transitions[idx, b] = cidx
-                depths[cidx] = depths[idx] + 1
-                max_depth = max(max_depth, depths[cidx])
-            if node[1] is not None:
-                mid = mime_ids.setdefault(node[1], len(mime_ids))
-                if mid == len(mimes):
-                    mimes.append(node[1])
-                emit[idx] = mid
-        return CompiledTrie(
-            transitions=transitions,
-            emit=emit,
-            mimes=tuple(mimes),
-            max_depth=max_depth,
-        )
-
-
-@dataclass(frozen=True)
-class CompiledTrie:
-    """Flat-table form of the trie, safe to pickle into a Spark broadcast.
-
-    ``classify_batch`` advances the whole batch through the tables in
-    ``max_depth`` vectorized steps — the batch-level analogue of the
-    per-payload early exit in MimeTypeTrie.cs:44-47.
-    """
-
-    transitions: np.ndarray  # (n_states, 256) int32, -1 = missing edge
-    emit: np.ndarray  # (n_states,) int32, -1 = no mime at this node
-    mimes: tuple[str, ...]
-    max_depth: int
-
-    def classify_batch(self, prefixes: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-        """Classify a batch of payload prefixes.
-
-        Args:
-            prefixes: (n, L) uint8 array, L >= max_depth, zero-padded.
-            lengths: (n,) actual payload lengths (pre-truncation).
-
-        Returns:
-            (n,) int32 array of mime ids; -1 = no match.
-        """
-        n = prefixes.shape[0]
-        state = np.zeros(n, dtype=np.int32)
-        result = np.full(n, -1, dtype=np.int32)
-        active = lengths > 0
-        steps = min(self.max_depth, prefixes.shape[1])
-        for i in range(steps):
-            idx = np.flatnonzero(active & (lengths > i))
-            if idx.size == 0:
-                break
-            nxt = self.transitions[state[idx], prefixes[idx, i]]
-            dead = nxt < 0
-            live = idx[~dead]
-            active[idx[dead]] = False
-            state[live] = nxt[~dead]
-            em = self.emit[state[live]]
-            hit = em >= 0
-            result[live[hit]] = em[hit]
-        return result
-
-    def classify_bytes_batch(self, payloads: "list[bytes | None]") -> list:
-        """Convenience: list of raw byte strings -> list of mime | None."""
-        n = len(payloads)
-        L = max(self.max_depth, 1)
-        prefixes = np.zeros((n, L), dtype=np.uint8)
-        lengths = np.zeros(n, dtype=np.int64)
-        for i, p in enumerate(payloads):
-            if p:
-                lengths[i] = len(p)
-                head = p[:L]
-                prefixes[i, : len(head)] = np.frombuffer(head, dtype=np.uint8)
-        ids = self.classify_batch(prefixes, lengths)
-        return [self.mimes[m] if m >= 0 else None for m in ids]
-
 
 # -- production signature tables (reference parity) -------------------------
 
@@ -256,6 +146,6 @@ def lenient_trie() -> MimeTypeTrie:
 
 
 #: Max bytes the classifier ever needs from a payload (longest signature = 8;
-#: 16 leaves headroom). Slice payloads to this length BEFORE any UDF so Spark
-#: never ships full payloads into the Python worker (SURVEY.md §4 O1).
+#: 16 leaves headroom). Payloads are sliced to this length JVM-side, so the
+#: classifier never decodes a full payload (SURVEY.md §4 O1).
 PREFIX_LEN = 16

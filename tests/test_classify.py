@@ -1,8 +1,11 @@
-"""Spark-side classification stage: the compiled-trie pandas UDF over the
+"""Spark-side classification stage: the trie's when-chain over the
 synthesized corpus must detect exactly the MIME each payload was
-constructed with (unknown signatures -> octet-stream fallback), and the
-plan must never ship more than a 16-byte-equivalent prefix into Python.
+constructed with (unknown signatures -> octet-stream fallback), agree
+with the reference ``MimeTypeTrie.search`` on every decoded prefix, and
+decode no more than a 16-byte-equivalent prefix of each payload.
 """
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,8 +14,14 @@ from nolock_social_ocr_services_spark import corpus
 from nolock_social_ocr_services_spark.operators.classify import (
     classify_mime,
     decode_data_url_prefix,
+    trie_match_expr,
 )
-from nolock_social_ocr_services_spark.trie import MimeTypeTrie, strict_trie
+from nolock_social_ocr_services_spark.trie import (
+    OCTET_STREAM,
+    MimeTypeTrie,
+    lenient_trie,
+    strict_trie,
+)
 
 
 @pytest.fixture(scope="module")
@@ -94,11 +103,12 @@ def test_custom_trie_longest_prefix_in_spark(spark):
 
 
 def test_prefix_slicing_stays_jvm_side(media_spans):
-    # The physical plan must show ArrowEvalPython receiving a substring /
-    # unbase64 projection, i.e. full payloads never cross into Python.
+    # Classification is one JVM expression over a substring of the
+    # payload: no Python stage, so no payload crosses into Python.
     out = classify_mime(media_spans, data_url_col="media_ref", out_col="detected")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # vectorized (Arrow) UDF, not BatchEvalPython
+    assert "substring" in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_mime_from_url_map(spark):
@@ -145,23 +155,53 @@ def test_classify_with_url_fallback(spark, media_spans):
     assert unknown.filter(F.col("combined") != "image/webp").count() == 0
 
 
-def test_expr_engine_equivalent_to_udf(media_spans):
-    """trie_match_expr (codegen'd fast path) must agree with the
-    compiled-NumPy UDF on EVERY corpus span, in both modes."""
-    for kwargs in (
-        {},
-        {"strict": True, "trie": strict_trie()},
+def test_expr_engine_equivalent_to_search(media_spans):
+    """classify_mime must agree with the reference MimeTypeTrie.search,
+    run locally on the same decoded prefixes, on EVERY corpus span in
+    both modes."""
+    for trie, strict, fallback in (
+        (lenient_trie(), False, OCTET_STREAM),
+        (strict_trie(), True, None),
     ):
-        a = classify_mime(
+        out = classify_mime(
             media_spans, data_url_col="media_ref", out_col="m",
-            engine="udf", **kwargs
-        ).select("doc_id", "offset", "m")
-        b = classify_mime(
-            media_spans, data_url_col="media_ref", out_col="m",
-            engine="expr", **kwargs
-        ).select("doc_id", "offset", F.col("m").alias("m2"))
-        j = a.join(b, on=["doc_id", "offset"])
-        assert j.filter(~F.col("m").eqNullSafe(F.col("m2"))).count() == 0
+            strict=strict, trie=trie,
+        ).select("m", decode_data_url_prefix(F.col("media_ref")).alias("p"))
+        rows = out.collect()
+        assert rows
+        for r in rows:
+            want = trie.search(bytes(r.p)) if r.p is not None else None
+            assert r.m == (want or fallback), (bytes(r.p or b"").hex(), r.m, want)
+
+
+def test_expr_engine_random_trie_parity(spark):
+    """trie_match_expr == MimeTypeTrie.search on a seeded random trie:
+    1-8 byte signatures grown from shared stems (so longest-prefix
+    choices are exercised), probed with each signature plus a tail, its
+    truncations, divergent last bytes, random bytes and empty input."""
+    rng = random.Random(20261017)
+    stems = [bytes(rng.randrange(256) for _ in range(rng.randint(1, 3))) for _ in range(6)]
+    trie = MimeTypeTrie()
+    sigs = set()
+    while len(sigs) < 60:
+        stem = rng.choice(stems)
+        sig = stem + bytes(rng.randrange(256) for _ in range(rng.randint(0, 8 - len(stem))))
+        if sig not in sigs:
+            sigs.add(sig)
+            trie.add(sig, f"x/{len(sigs)}")
+    probes = [b""]
+    for sig in sorted(sigs):
+        probes.append(sig + bytes(rng.randrange(256) for _ in range(4)))
+        probes.extend(sig[:k] for k in range(1, len(sig)))
+        probes.append(sig[:-1] + bytes([(sig[-1] + 1) % 256]))
+    for _ in range(100):
+        probes.append(bytes(rng.randrange(256) for _ in range(rng.randint(1, 12))))
+    df = spark.createDataFrame([(p,) for p in probes], "p binary")
+    got = df.select("p", trie_match_expr(F.col("p"), trie=trie, fallback=None).alias("m"))
+    rows = got.collect()
+    assert len(rows) == len(probes)
+    for r in rows:
+        assert r.m == trie.search(bytes(r.p)), bytes(r.p).hex()
 
 
 def test_expr_engine_golden_vectors(spark):
@@ -187,5 +227,6 @@ def test_expr_engine_golden_vectors(spark):
 
 
 def test_unknown_engine_raises(media_spans):
-    with pytest.raises(ValueError, match="unknown classify engine"):
-        classify_mime(media_spans, data_url_col="media_ref", engine="bogus")
+    for engine in ("udf", "bogus"):
+        with pytest.raises(ValueError, match="unknown classify engine"):
+            classify_mime(media_spans, data_url_col="media_ref", engine=engine)

@@ -2,6 +2,8 @@
 committed partition, recomputes nothing already committed, and the final
 output is identical to an uninterrupted run (FIXTURES.md §5)."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -151,3 +153,41 @@ def test_batched_kill_resume(spark, docs, tmp_path_factory):
     assert _rows(lineage.read_output(spark, out)) == _rows(
         lineage.read_output(spark, clean)
     )
+
+
+@pytest.mark.parametrize("batch_size", [1, 2])
+def test_empty_units_still_commit(spark, sf_dir, batch_size, tmp_path):
+    """A resume unit with zero documents writes no spans; it must still
+    commit with a zero-count lineage row, and read_output must return
+    every committed span — also when the run starts over the data files
+    of an attempt killed before its manifest commit."""
+    units = 4
+    only_unit_0 = (
+        corpus.synthesize_documents(spark, sf_dir)
+        .filter(F.pmod(F.hash("doc_id"), F.lit(units)) == 0)
+        .cache()
+    )
+    out = str(tmp_path / "out")
+    first = lineage.run_extract_job(
+        spark, only_unit_0, out, run_id="r1", num_parts=units, batch_size=batch_size
+    )
+    assert first == list(range(units))
+    assert lineage.run_extract_job(
+        spark, only_unit_0, out, run_id="r2", num_parts=units, batch_size=batch_size
+    ) == []
+    # data files stay, commit records go: as if killed before the manifest
+    shutil.rmtree(f"{out}/_manifest")
+    shutil.rmtree(f"{out}/_lineage")
+    assert lineage.run_extract_job(
+        spark, only_unit_0, out, run_id="r3", num_parts=units, batch_size=batch_size
+    ) == list(range(units))
+    lin = {
+        r.part_id: (r.doc_count, r.span_count, r.trie_hits)
+        for r in lineage.read_lineage(spark, out).collect()
+    }
+    assert lineage.read_lineage(spark, out).count() == units
+    assert {p: lin[p] for p in (1, 2, 3)} == {p: (0, 0, {}) for p in (1, 2, 3)}
+    n_spans = only_unit_0.agg(F.sum(F.size("spans"))).first()[0]
+    assert lin[0][:2] == (only_unit_0.count(), n_spans)
+    assert lineage.read_output(spark, out).count() == n_spans
+    only_unit_0.unpersist()

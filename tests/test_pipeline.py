@@ -196,26 +196,6 @@ def test_malformed_field_values_become_unparsed_records(spark):
     assert out["g4"].receipt is not None and out["g4"].confidence == 0.8
 
 
-def test_fused_classify_ocr_identical(spark, sf_dir):
-    """The fused single-UDF path must be byte-identical to the chained
-    classify->OCR path, including NULL-mime (non-media) and
-    octet-stream (undecodable media) semantics, and collapse the plan
-    to ONE ArrowEvalPython stage."""
-    from nolock_social_ocr_services_spark import corpus as _corpus
-
-    docs = _corpus.synthesize_documents(spark, sf_dir).cache()
-    cols = ["doc_id", "offset", "kind", "mime", "text", "media_ref",
-            "extract_error", "confidence", "ocr_model", "ocr_tokens"]
-    a = sorted(tuple(r) for r in
-               pipeline.extract_spans(docs, fused=False).select(cols).collect())
-    b = sorted(tuple(r) for r in
-               pipeline.extract_spans(docs, fused=True).select(cols).collect())
-    assert a == b
-    plan = (pipeline.extract_spans(docs, fused=True)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("ArrowEvalPython") == 1
-
-
 def test_adversarial_text_content_roundtrips(spark):
     """SecurityTests.cs analogue: XSS/SQLi payloads, unicode, embedded
     newlines/quotes/control chars in span TEXT are data, not code — the

@@ -88,11 +88,14 @@ def test_cleanup_chain_materialized_once(spark, corpus_path):
     assert n <= 12, f"cleanup chain re-inlined: {n} regexp_replace nodes"
 
 
-def test_extract_pipeline_udf_engine_two_arrow_stages(spark, corpus_path):
-    docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16, classify_engine="udf")
-    assert arrow_eval_count(flat) == 2  # classify UDF + ocr UDF
-    assert batch_eval_count(flat) == 0
+def test_classify_spans_has_no_arrow_stage(spark, sf_dir):
+    """The driver's classify_spans query runs the pipeline's classifier,
+    the codegen'd when-chain: no Python stage at all."""
+    import __spark_entry__ as entrymod
+
+    q = entrymod.queries()["classify_spans"](spark, sf_dir)
+    assert arrow_eval_count(q) == 0
+    assert batch_eval_count(q) == 0
 
 
 def test_extracted_documents_two_shuffles_total(spark, corpus_path):
@@ -122,8 +125,8 @@ def test_customer_revenue_join_is_broadcast(spark, sf_dir):
 
 
 def test_classifier_udf_input_is_prefix_projection(spark, corpus_path):
-    # the ArrowEvalPython node's input must be the unbase64(substring(...))
-    # projection, never the raw media_ref/spans payload column
+    # the classifier's when-chain reads a decoded substring(...) slice of
+    # media_ref, never the whole payload
     docs = spark.read.parquet(corpus_path)
     flat = pipeline.extract_spans(docs, salt_buckets=16)
     plan = explain_str(flat)

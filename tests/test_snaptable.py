@@ -13,12 +13,7 @@ import os
 import pytest
 from pyspark.sql import Row, functions as F
 
-from nolock_social_ocr_services_spark.sources.snap_job import (
-    maintain_agg_snap,
-    read_lineage_snap,
-    read_output_snap,
-    run_extract_job_snap,
-)
+from nolock_social_ocr_services_spark.sources.snap_job import maintain_agg_snap
 from nolock_social_ocr_services_spark.sources.snaptable import (
     CommitConflict,
     SnapTable,
@@ -154,65 +149,6 @@ def test_expire_snapshots_drops_orphans(spark, tmp_path):
     assert removed == 1  # snapshot-1's files are unreferenced
     assert tx_dirs() == 1
     assert sorted(r.k for r in t.read(spark).collect()) == [10, 11, 12]
-
-
-def test_snap_job_kill_resume_matches_direct(spark, sf_dir, tmp_path):
-    from nolock_social_ocr_services_spark.corpus import synthesize_documents
-    from nolock_social_ocr_services_spark.pipeline import extract_spans
-
-    docs = synthesize_documents(spark, sf_dir).cache()
-    table_dir = str(tmp_path / "out")
-
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extract_job_snap(
-            spark, docs, table_dir, run_id="r1", num_parts=8,
-            batch_size=2, fail_after=2,
-        )
-    done_mid = SnapTable(table_dir).committed_values("part_id")
-    assert 0 < len(done_mid) < 8
-
-    resumed = run_extract_job_snap(
-        spark, docs, table_dir, run_id="r2", num_parts=8, batch_size=2
-    )
-    assert {int(v) for v in done_mid}.isdisjoint(resumed)
-    assert len(done_mid) + len(resumed) == 8
-
-    got = read_output_snap(spark, table_dir).drop("part_id")
-    want = extract_spans(docs)
-    cols = want.columns
-    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    lin = read_lineage_snap(spark, table_dir)
-    rows = lin.groupBy("part_id").count().collect()
-    assert len(rows) == 8 and all(r["count"] == 1 for r in rows)
-    assert lin.agg(F.sum("span_count")).first()[0] == want.count()
-    docs.unpersist()
-
-
-def test_snap_job_empty_parts_still_commit(spark, sf_dir, tmp_path):
-    """A resume unit with zero documents writes zero files — the summary
-    record (not the file manifest) must still mark it committed, or
-    every resume would re-run it forever."""
-    from nolock_social_ocr_services_spark.corpus import synthesize_documents
-
-    docs = (
-        synthesize_documents(spark, sf_dir)
-        .filter(F.pmod(F.hash("doc_id"), F.lit(4)) == 0)
-        .cache()
-    )
-    table_dir = str(tmp_path / "out")
-    first = run_extract_job_snap(
-        spark, docs, table_dir, run_id="r1", num_parts=4, batch_size=2
-    )
-    assert first == [0, 1, 2, 3]
-    again = run_extract_job_snap(
-        spark, docs, table_dir, run_id="r2", num_parts=4, batch_size=2
-    )
-    assert again == []
-    got = read_output_snap(spark, table_dir)
-    assert got.count() > 0
-    docs.unpersist()
 
 
 def test_compact_rewrites_small_files(spark, tmp_path):

@@ -1,7 +1,7 @@
 """MIME-trie unit vectors, mirroring the reference's
 OCRservices.Tests/Utils/MimeTypeTrieTests.cs (see FIXTURES.md §2).
-Pure-Python trie and compiled NumPy form are asserted to agree on every
-vector (the compiled form is what runs inside the pandas UDF).
+``MimeTypeTrie.search`` is the reference the Spark when-chain is checked
+against (tests/test_classify.py).
 """
 
 import time
@@ -17,14 +17,6 @@ from nolock_social_ocr_services_spark.trie import (
     lenient_trie,
     strict_trie,
 )
-
-
-def both(trie, payload):
-    """Run plain search and compiled classify; assert they agree."""
-    plain = trie.search(payload)
-    compiled = trie.compile().classify_bytes_batch([payload])[0]
-    assert plain == compiled, f"plain={plain} compiled={compiled} for {payload!r:.40}"
-    return plain
 
 
 # -- production-table golden vectors (MimeTypeTrieTests.cs:171-205,241-276,813) --
@@ -51,13 +43,13 @@ GOLDEN = [
 
 @pytest.mark.parametrize("payload,expected", GOLDEN, ids=[m for _, m in GOLDEN])
 def test_lenient_table_golden(payload, expected):
-    assert both(lenient_trie(), payload) == expected
+    assert lenient_trie().search(payload) == expected
 
 
 def test_partial_signature_is_null():
     # MimeTypeTrieTests.cs:104-115 — '89 50' alone matches nothing
     # (shortest PNG form in the lenient table is 4 bytes).
-    assert both(lenient_trie(), bytes.fromhex("8950")) is None
+    assert lenient_trie().search(bytes.fromhex("8950")) is None
 
 
 def test_divergent_suffix_is_null_on_full_signature_trie():
@@ -65,12 +57,12 @@ def test_divergent_suffix_is_null_on_full_signature_trie():
     # signature must NOT match 89504E47 + garbage.
     t = MimeTypeTrie()
     t.add(bytes.fromhex("89504E470D0A1A0A"), "image/png")
-    assert both(t, bytes.fromhex("89504E47FFFFFFFF")) is None
+    assert t.search(bytes.fromhex("89504E47FFFFFFFF")) is None
 
 
 def test_lenient_table_short_png_form_matches_divergent_suffix():
     # With the production lenient table the 4-byte short form matches.
-    assert both(lenient_trie(), bytes.fromhex("89504E47FFFFFFFF")) == "image/png"
+    assert lenient_trie().search(bytes.fromhex("89504E47FFFFFFFF")) == "image/png"
 
 
 def test_longest_prefix_wins():
@@ -78,16 +70,16 @@ def test_longest_prefix_wins():
     t = MimeTypeTrie()
     t.add(b"\xff\xd8", "short/type")
     t.add(b"\xff\xd8\xff\xe0", "long/type")
-    assert both(t, b"\xff\xd8\xff\xe0rest") == "long/type"
-    assert both(t, b"\xff\xd8\xff") == "short/type"  # falls back to shorter
-    assert both(t, b"\xff\xd8") == "short/type"
+    assert t.search(b"\xff\xd8\xff\xe0rest") == "long/type"
+    assert t.search(b"\xff\xd8\xff") == "short/type"  # falls back to shorter
+    assert t.search(b"\xff\xd8") == "short/type"
 
 
 def test_only_leading_prefix_counts():
     # MimeTypeTrieTests.cs:341-360 — embedded PNG signature later in the
     # payload is ignored; only the leading bytes classify.
     payload = b"\xff\xd8" + b"garbage" + bytes.fromhex("89504E470D0A1A0A")
-    assert both(lenient_trie(), payload) == "image/jpeg"
+    assert lenient_trie().search(payload) == "image/jpeg"
 
 
 @pytest.mark.parametrize(
@@ -97,7 +89,7 @@ def test_only_leading_prefix_counts():
 )
 def test_no_match_vectors(payload):
     # MimeTypeTrieTests.cs:93-101,325-338,378-395
-    assert both(lenient_trie(), payload) is None
+    assert lenient_trie().search(payload) is None
 
 
 def test_conflicting_signature_raises():
@@ -130,30 +122,22 @@ def test_get_all_mime_types():
 def test_branching_gif_signatures():
     # MimeTypeTrieTests.cs:594-608 — GIF87a vs GIF89a share a 4-byte stem.
     t = lenient_trie()
-    assert both(t, bytes.fromhex("474946383761")) == "image/gif"
-    assert both(t, bytes.fromhex("474946383961")) == "image/gif"
-    assert both(t, bytes.fromhex("474946383861")) is None  # GIF88a is not a thing
+    assert t.search(bytes.fromhex("474946383761")) == "image/gif"
+    assert t.search(bytes.fromhex("474946383961")) == "image/gif"
+    assert t.search(bytes.fromhex("474946383861")) is None  # GIF88a is not a thing
 
 
 def test_prefix_len_covers_longest_signature():
     assert max(len(s) for s, _ in LENIENT_SIGNATURES) <= PREFIX_LEN
 
 
-def test_compiled_batch_classification():
-    compiled = lenient_trie().compile()
-    payloads = [p for p, _ in GOLDEN] + [b"", b"\x00\x00", None, b"\xab\xcd\xef"]
-    got = compiled.classify_bytes_batch(payloads)
-    expected = [m for _, m in GOLDEN] + [None, None, None, None]
-    assert got == expected
-
-
-def test_compiled_large_batch_only_reads_prefix():
-    # scale analogue of MimeTypeTrieTests.cs:480-498 (early exit): payload
-    # size must not matter because only PREFIX_LEN bytes are ever passed in.
-    compiled = lenient_trie().compile()
+def test_search_early_exit_on_large_payload():
+    # MimeTypeTrieTests.cs:480-498: the walk stops at the first missing
+    # edge, so payload size must not matter.
     big = bytes.fromhex("FFD8FF") + b"\x00" * (10 * 1024 * 1024)
+    trie = lenient_trie()
     t0 = time.monotonic()
-    assert compiled.classify_bytes_batch([big[:PREFIX_LEN]] * 10_000) == ["image/jpeg"] * 10_000
+    assert all(trie.search(big) == "image/jpeg" for _ in range(10_000))
     assert time.monotonic() - t0 < 1.0  # 10k classifications well under 1s
 
 
@@ -169,7 +153,5 @@ def test_thousand_signatures():
     for sig, mime in sigs.items():
         t.add(sig, mime)
     assert time.monotonic() - t0 < 1.0
-    compiled = t.compile()
-    payloads = [sig + b"tail" for sig in sigs]
-    got = compiled.classify_bytes_batch(payloads)
+    got = [t.search(sig + b"tail") for sig in sigs]
     assert got == list(sigs.values())

@@ -179,7 +179,7 @@ def main() -> None:
     lines = [
         "# PLANS — physical-plan evidence (generated by tools/dump_plans.py)",
         "",
-        f"Input: `{sf_dir}`, local[32], AQE on. Every Python crossing is",
+        f"Input: `{sf_dir}`, {spark.sparkContext.master}, AQE on. Every Python crossing is",
         "Arrow-vectorized (`ArrowEvalPython`/`FlatMapGroupsInPandas`);",
         "`BatchEvalPython` (row-at-a-time Python) appears 0 times in every",
         "plan below. Shuffle (`Exchange`) counts are the minimum the",
