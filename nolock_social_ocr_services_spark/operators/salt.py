@@ -37,8 +37,8 @@ def salted_repartition(
 ) -> DataFrame:
     """Repartition rows on a hash of ``key_cols`` (deterministic, even).
 
-    ``num_partitions``: target partition count (None -> session
-    ``spark.sql.shuffle.partitions``).
+    ``num_partitions``: fixed partition count, which AQE leaves alone.
+    None: ``spark.sql.shuffle.partitions`` as a ceiling, coalesced by AQE.
 
     ``salt_buckets``: optional cap on the spread of one document's rows.
     When set, partitioning uses ``pmod(hash(*key_cols), salt_buckets)``

@@ -69,7 +69,8 @@ def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame
     spans, boilerplate-stripped for 'html', ordered-page OCR markdown for
     media spans ('' for unknown payloads, flagged in extract_error).
 
-    Plan shape (scale-deliberate): ONE scan, ONE salted exchange, no
+    Plan shape (scale-deliberate): ONE scan, ONE salted exchange sized
+    by AQE from the input (at most spark.sql.shuffle.partitions), no
     branch-and-union (Catalyst would push branch filters below the
     exchange and triple the scan+shuffle). Pandas UDFs are evaluated
     unconditionally on every row even under when(), so instead the UDF
@@ -83,14 +84,12 @@ def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame
     Python stage.
     """
     exploded = explode_spans(docs)
-    # explicit partition count: AQE would coalesce the salted exchange
-    # to ~64MB partitions, leaving cores idle and a straggler tail;
-    # 3 tasks/core keeps the wave granular.
-    cores = docs.sparkSession.sparkContext.defaultParallelism
-    partitions = max(salt_buckets or 0, cores * 3, 64)
-    salted = salted_repartition(
-        exploded, num_partitions=partitions, salt_buckets=salt_buckets
-    )
+    # No count: AQE coalesces the exchange below spark.sql.shuffle.partitions
+    # from its shuffle bytes; parallelismFirst aims at bytes/defaultParallelism
+    # (at least 1 MB), so a large input still fills every core. A small one
+    # gets few tasks: each Python task pays ~0.25 CPU-s up front, mostly in
+    # pyspark's setup_spark_files re-reading its zipimport directories.
+    salted = salted_repartition(exploded, salt_buckets=salt_buckets)
     classified = classify_mime(salted, data_url_col="media_ref", out_col="mime")
     ocred = concat_pages(run_ocr(classified))
     html_only = F.when(F.col("kind") == "html", F.col("text"))  # masked input

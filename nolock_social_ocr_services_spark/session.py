@@ -33,8 +33,8 @@ def get_spark(
     Args:
         cpus: local[] thread count; defaults to $SPARK_GRAFT_CPUS, else
             the host's CPU count.
-        shuffle_partitions: defaults to cpus (local mode: 1 thread per
-            partition keeps all cores busy without tiny-task overhead).
+        shuffle_partitions: defaults to cpus; the task-count ceiling after
+            both pipeline exchanges (AQE coalesces below it).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)

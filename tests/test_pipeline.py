@@ -53,28 +53,36 @@ def test_extracted_documents_nested_order(spark, docs, sf_dir):
 
 
 def test_typed_receipt_fields(spark, docs):
+    """Every receipt row, not whichever comes first: the row order after
+    the salted exchange depends on its partition count."""
     flat = pipeline.extract_spans(docs, salt_buckets=8)
     receipts = flat.filter(F.col("receipt").isNotNull())
-    assert receipts.count() > 0
-    r = receipts.select("receipt.*", "mime").first()
-    assert r.merchant_name.startswith("M-")
-    assert r.receipt_date.startswith("2024-")
-    assert isinstance(r.total_amount, Decimal)
-    assert r.payment_method in ("cash", "card", "check")
-    assert 1 <= r.items_count <= 9
+    rows = receipts.select("receipt.*", "text").collect()
+    assert rows
+    for r in rows:
+        assert r.merchant_name.startswith("M-")
+        assert r.receipt_date.startswith("2024-")
+        assert isinstance(r.total_amount, Decimal)
+        assert 1 <= r.items_count <= 9
+        # an out-of-domain enum validates to NULL, and only that one
+        if "Payment: crypto" in r.text:
+            assert r.payment_method is None
+        else:
+            assert r.payment_method in ("cash", "card", "check")
+    assert any(r.payment_method is not None for r in rows)
     # receipts only from image mimes
     assert receipts.filter(~F.col("mime").startswith("image/")).count() == 0
 
 
 def test_typed_check_fields(spark, docs):
     flat = pipeline.extract_spans(docs, salt_buckets=8)
-    checks = flat.filter(F.col("check").isNotNull())
-    assert checks.count() > 0
-    c = checks.select("check.*").first()
-    assert c.payee.startswith("P-")
-    assert c.bank_name.startswith("B-")
-    assert isinstance(c.amount, Decimal)
-    assert c.is_signed in (True, False)
+    rows = flat.filter(F.col("check").isNotNull()).select("check.*").collect()
+    assert rows
+    for c in rows:
+        assert c.payee.startswith("P-")
+        assert c.bank_name.startswith("B-")
+        assert isinstance(c.amount, Decimal)
+        assert c.is_signed in (True, False)
 
 
 def test_empty_ocr_guard_for_unknown_payloads(spark, docs):

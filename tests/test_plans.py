@@ -30,10 +30,46 @@ def test_extract_pipeline_one_scan_one_shuffle(spark, corpus_path):
     flat = pipeline.extract_spans(docs, salt_buckets=16)
     assert scan_count(flat) == 1
     assert exchange_count(flat) == 1  # the salted repartition only
+    # repartition by columns only: a fixed count (REPARTITION_BY_NUM)
+    # would forbid AQE from sizing the stage to the input
+    plan = explain_str(flat)
+    assert "REPARTITION_BY_COL" in plan
+    assert "REPARTITION_BY_NUM" not in plan
     # default engine: classify is a codegen'd expression, so the OCR UDF
     # is the ONLY Python stage in the whole pipeline
     assert arrow_eval_count(flat) == 1
     assert batch_eval_count(flat) == 0  # no row-at-a-time Python anywhere
+
+
+def _shuffle_read_partitions(plan) -> list[int]:
+    """Partition counts of the AQEShuffleRead nodes in a physical plan."""
+    name = plan.getClass().getSimpleName()
+    if name == "AQEShuffleReadExec":
+        return [plan.partitionSpecs().size()]
+    if name.endswith("QueryStageExec"):  # a leaf that wraps its stage
+        return _shuffle_read_partitions(plan.plan())
+    children = plan.children()
+    return [
+        n for i in range(children.size()) for n in _shuffle_read_partitions(children.apply(i))
+    ]
+
+
+def test_salted_exchange_coalesced_to_input(spark, corpus_path):
+    """After a small input runs, the final adaptive plan reads the
+    salted exchange through an AQEShuffleRead with fewer partitions
+    than the spark.sql.shuffle.partitions ceiling: AQE sized the
+    post-exchange stage, not a constant."""
+    docs = spark.read.parquet(corpus_path)
+    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    # execute through the SAME Dataset: only its QueryExecution carries
+    # the final adaptive plan
+    assert flat.collect()
+    adaptive = flat._jdf.queryExecution().executedPlan()
+    assert "isFinalPlan=true" in adaptive.toString()
+    reads = _shuffle_read_partitions(adaptive.executedPlan())
+    ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(reads) == 1, adaptive.toString()[:2000]
+    assert 1 <= reads[0] < ceiling
 
 
 def test_filtered_extract_single_ocr_stage(spark, corpus_path):
