@@ -2,7 +2,7 @@
 pipeline (from scratch — NOT a port of the C# reference at /root/reference).
 
 Core surface:
-    trie         — magic-byte MIME trie + compiled NumPy tables
+    trie         — magic-byte MIME trie + strict/lenient signature tables
     corpus       — deterministic interleaved documents synthesizer
     operators    — classify / salt / reassemble DataFrame stages
     extract      — html boilerplate strip, synthetic OCR, typed records

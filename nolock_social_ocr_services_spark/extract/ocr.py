@@ -140,12 +140,6 @@ def _matrix_of(h: pd.Series, digits: pd.Series | None) -> np.ndarray:
 _P6 = np.array([100000, 10000, 1000, 100, 10, 1], dtype=np.int64)
 
 
-def full_mode_of(digits: pd.Series) -> pd.Series:
-    """0 = simple-only markdown, 1 = full block w/ invalid enum,
-    2/3 = full block valid."""
-    return digits.str.slice(19, 20).astype(int) % 4
-
-
 def digits_of(h: pd.Series) -> pd.Series:
     """First 20 of (strip non-digits from md5 hex, right-pad '0') — the
     shared derivation, as a string series (the markdown builders consume
@@ -153,15 +147,6 @@ def digits_of(h: pd.Series) -> pd.Series:
     dig = _digit_matrix(h.astype(object).to_numpy())
     out = np.frombuffer((dig + ord("0")).tobytes(), dtype="S20").astype("U20")
     return pd.Series(out, index=h.index, dtype="string")
-
-
-def receipt_item_fields(
-    digits: pd.Series, i: int
-) -> tuple[pd.Series, pd.Series]:
-    """(quantity, unit_price_cents) for line item ``i`` (1-based)."""
-    qty = 1 + (digits.str.slice(0, 2).astype(int) + 3 * i) % 9
-    unit = 100 + (digits.str.slice(4, 8).astype(int) + 137 * i) % 9900
-    return qty, unit
 
 
 def receipt_markdown(h: pd.Series, digits: pd.Series | None = None) -> pd.Series:
@@ -679,8 +664,6 @@ __all__ = [
     "concat_pages",
     "receipt_markdown",
     "check_markdown",
-    "receipt_item_fields",
-    "full_mode_of",
     "ocr_field_exprs",
     "sql_receipt_item_line",
     "sql_money",

@@ -10,7 +10,8 @@ strategy #3), so this module implements the protocol explicitly:
   across runs and cluster sizes);
 * each unit is extracted and written to ``data/part_id=K/`` with
   idempotent overwrite, THEN a lineage row (doc/span counts + trie-hit
-  histogram, FIXTURES.md §5) and a manifest marker are committed —
+  histogram, FIXTURES.md §5, overwritten the same way under
+  ``_lineage/part_id=K/``) and a manifest marker are committed —
   write-data-then-manifest ordering makes a kill at any point safe:
   an uncommitted unit is simply re-overwritten on resume;
 * resume = anti-join the unit list against the committed manifest and
@@ -33,6 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_spans
+
+
+LINEAGE_COLUMNS = (
+    "run_id", "part_id", "doc_count", "span_count", "trie_hits", "committed_at"
+)
 
 
 def with_part_id(docs: DataFrame, num_parts: int) -> DataFrame:
@@ -88,10 +94,7 @@ def _lineage_rows(
         .unionByName(zero)
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())
-        .select(
-            "run_id", "part_id", "doc_count", "span_count", "trie_hits",
-            "committed_at",
-        )
+        .select(*LINEAGE_COLUMNS)
     )
 
 
@@ -152,12 +155,18 @@ def run_extract_job(
         empty = [p for p, path in unit_dirs.items() if not os.path.exists(path)]
         for p in empty:
             spark.createDataFrame([], flat.schema).write.parquet(unit_dirs[p])
-        # data committed -> now lineage + manifest (ordering = crash safety)
+        # data committed -> now lineage + manifest (ordering = crash safety).
+        # A kill between the two leaves the batch uncommitted; its resume
+        # replaces these units' lineage rows rather than adding to them.
         re_read = spark.read.parquet(f"{out_dir}/data").filter(
             F.col("part_id").isin(batch)
         )
-        _lineage_rows(re_read, run_id, empty).write.mode("append").parquet(
-            f"{out_dir}/_lineage"
+        (
+            _lineage_rows(re_read, run_id, empty)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("part_id")
+            .parquet(f"{out_dir}/_lineage")
         )
         _write_manifest(spark, out_dir, run_id, batch)
         processed.extend(batch)
@@ -184,4 +193,5 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/_lineage")
+    """One row per committed unit (``_lineage`` is partitioned by part_id)."""
+    return spark.read.parquet(f"{out_dir}/_lineage").select(*LINEAGE_COLUMNS)

@@ -28,12 +28,18 @@ def reassemble_spans(
     offset is embedded in each struct and the array is ``array_sort``-ed
     by it — one aggregation, no window + second shuffle. At 100 TB this is
     a single hash-aggregate exchange on ``doc_id``; per-doc arrays stay
-    small (spans per doc, not corpus-wide).
+    small (spans per doc, not corpus-wide). Spans tied on ``order_col``
+    come out in unspecified order: the comparator returns 0 on ties.
+
+    A row whose ``order_col`` is NULL contributes no span (its struct is
+    NULL and ``collect_list`` drops it) but still yields its document:
+    ``explode_spans`` emits one such row for a document whose spans are
+    empty or NULL, which therefore comes out with ``[]``.
     """
     span_struct = F.struct(*[F.col(f).alias(f) for f in span_fields])
     collected = exploded.groupBy(doc_col).agg(
         F.array_sort(
-            F.collect_list(span_struct),
+            F.collect_list(F.when(F.col(order_col).isNotNull(), span_struct)),
             lambda a, b: F.when(a[order_col] < b[order_col], -1)
             .when(a[order_col] > b[order_col], 1)
             .otherwise(0),

@@ -31,17 +31,14 @@ def salted_repartition(
     df: DataFrame,
     num_partitions: int | None = None,
     salt_buckets: int | None = None,
-    key_cols: tuple[str, ...] = ("doc_id", "offset"),
-    salt_col: str = "salt",
-    keep_salt: bool = False,
 ) -> DataFrame:
-    """Repartition rows on a hash of ``key_cols`` (deterministic, even).
+    """Repartition rows on a hash of ``(doc_id, offset)`` (deterministic, even).
 
     ``num_partitions``: fixed partition count, which AQE leaves alone.
     None: ``spark.sql.shuffle.partitions`` as a ceiling, coalesced by AQE.
 
     ``salt_buckets``: optional cap on the spread of one document's rows.
-    When set, partitioning uses ``pmod(hash(*key_cols), salt_buckets)``
+    When set, partitioning uses ``pmod(hash(doc_id, offset), salt_buckets)``
     so one doc lands on at most ``salt_buckets`` partitions — only
     useful when a downstream stage exploits per-doc locality; pick
     ``salt_buckets >> num_partitions`` or accept empty partitions.
@@ -51,19 +48,9 @@ def salted_repartition(
     Deterministic re-runs produce identical partition assignment (no
     ``rand()``), which the checkpoint/resume protocol relies on.
     """
+    key = [F.col("doc_id"), F.col("offset")]
     if salt_buckets is not None:
-        salted = df.withColumn(
-            salt_col,
-            F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(salt_buckets)),
-        )
-        part_cols = [salt_col]
-    else:
-        salted = df
-        part_cols = [F.col(c) for c in key_cols]
+        key = [F.pmod(F.hash(*key), F.lit(salt_buckets))]
     if num_partitions is not None:
-        out = salted.repartition(num_partitions, *part_cols)
-    else:
-        out = salted.repartition(*part_cols)
-    if salt_buckets is not None and not keep_salt:
-        out = out.drop(salt_col)
-    return out
+        return df.repartition(num_partitions, *key)
+    return df.repartition(*key)

@@ -2,7 +2,7 @@
 SURVEY.md §3, re-expressed as one declarative Spark plan):
 
     documents(doc_id, spans[])                  Iceberg/parquet scan
-      -> explode(spans)                         U2 flatten
+      -> explode_outer(spans)                   U2 flatten
       -> salted repartition                     §4 custom #1 (skew)
       -> trie classify (codegen'd when-chain)   C1-C4
       -> synthetic OCR (scalar Arrow UDF)       T2 stand-in
@@ -55,34 +55,19 @@ def barrier_filter(df: DataFrame, cond) -> DataFrame:
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans[]) -> one row per span. Catalyst prunes unselected
-    nested fields out of the scan (check ReadSchema in .explain)."""
+    """(doc_id, spans[]) -> one row per span. A document whose ``spans``
+    is empty or NULL keeps one row with every span field NULL; its NULL
+    ``offset`` marks that row as no span (``reassemble_spans`` turns it
+    back into ``[]``). Catalyst prunes unselected nested fields out of
+    the scan (check ReadSchema in .explain)."""
     return docs.select(
-        "doc_id", F.explode("spans").alias("s")
+        "doc_id", F.explode_outer("spans").alias("s")
     ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
 
 
-def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
-    """Flat extracted spans: classify + extract every span.
-
-    ``text`` holds the extraction result per kind: raw text for 'text'
-    spans, boilerplate-stripped for 'html', ordered-page OCR markdown for
-    media spans ('' for unknown payloads, flagged in extract_error).
-
-    Plan shape (scale-deliberate): ONE scan, ONE salted exchange sized
-    by AQE from the input (at most spark.sql.shuffle.partitions), no
-    branch-and-union (Catalyst would push branch filters below the
-    exchange and triple the scan+shuffle). Pandas UDFs are evaluated
-    unconditionally on every row even under when(), so instead the UDF
-    *inputs* are masked to NULL for non-applicable rows — a scalar Arrow
-    UDF ships only its argument columns, and NULL inputs cost ~1 bit/row
-    on the transfer: text spans never ship their text into the OCR UDF,
-    media spans never ship into the boilerplate stripper.
-
-    Classification is the trie compiled to a codegen'd when-chain
-    (classify.trie_match_expr), so the OCR UDF is the pipeline's only
-    Python stage.
-    """
+def _extract(docs: DataFrame, salt_buckets: int | None) -> DataFrame:
+    """Every layer over ``explode_spans(docs)``: one row per span plus
+    the NULL-offset row of each document without spans."""
     exploded = explode_spans(docs)
     # No count: AQE coalesces the exchange below spark.sql.shuffle.partitions
     # from its shuffle bytes; parallelismFirst aims at bytes/defaultParallelism
@@ -119,12 +104,39 @@ def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame
     )
 
 
+def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
+    """Flat extracted spans: classify + extract every span, one row per
+    span. A document without spans, like a span without an offset, has
+    no row here.
+
+    ``text`` holds the extraction result per kind: raw text for 'text'
+    spans, boilerplate-stripped for 'html', ordered-page OCR markdown for
+    media spans ('' for unknown payloads, flagged in extract_error).
+
+    Plan shape (scale-deliberate): ONE scan, ONE salted exchange sized
+    by AQE from the input (at most spark.sql.shuffle.partitions), no
+    branch-and-union (Catalyst would push branch filters below the
+    exchange and triple the scan+shuffle). Pandas UDFs are evaluated
+    unconditionally on every row even under when(), so instead the UDF
+    *inputs* are masked to NULL for non-applicable rows — a scalar Arrow
+    UDF ships only its argument columns, and NULL inputs cost ~1 bit/row
+    on the transfer: text spans never ship their text into the OCR UDF,
+    media spans never ship into the boilerplate stripper.
+
+    Classification is the trie compiled to a codegen'd when-chain
+    (classify.trie_match_expr), so the OCR UDF is the pipeline's only
+    Python stage.
+    """
+    return _extract(docs, salt_buckets).filter(F.col("offset").isNotNull())
+
+
 def extracted_documents(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
     """Nested output: (doc_id, spans[]) with extracted text, offset order
-    restored after the salted shuffle — the span-sequence contract."""
-    flat = extract_spans(docs, salt_buckets=salt_buckets)
+    restored after the salted shuffle — the span-sequence contract. Every
+    input document comes out exactly once; one whose ``spans`` is empty
+    or NULL comes out with ``spans = []``."""
     return reassemble_spans(
-        flat, span_fields=("kind", "text", "media_ref", "offset")
+        _extract(docs, salt_buckets), span_fields=("kind", "text", "media_ref", "offset")
     )
 
 

@@ -5,14 +5,10 @@ runtime jar (``pyspark/jars`` has no table-format jars and installs are
 not allowed), so this module re-implements the part of the Iceberg spec
 the pipeline depends on — atomic snapshot commits, snapshot-isolated
 reads, time travel, rollback, partition-level overwrite, copy-on-write
-MERGE and merge-on-read row-level DELETE (equality-delete files with
-v2 data-sequence semantics), metadata-only schema evolution
-(``evolve_schema``: add/widen/drop with Iceberg's legal type
-promotions), named snapshot refs (``tag``/``drop_tag``,
-retention-protected from expiry), changelog (CDC) scans, and
-maintenance (compaction with sort or multi-column z-order clustering,
-snapshot expiry with orphan cleanup) — over plain parquet, from the
-published spec (https://iceberg.apache.org/spec/).
+MERGE, opt-in mergeSchema appends, changelog (CDC) scans, and
+maintenance (compaction with sort clustering, snapshot expiry with
+orphan cleanup) — over plain parquet, from the published spec
+(https://iceberg.apache.org/spec/).
 
 On a real cluster this entire module is replaced by the Iceberg catalog:
 ``spark.read.table("docs")``, ``df.writeTo("docs").overwritePartitions()``,
@@ -44,16 +40,8 @@ the previous snapshot, and a half-written writer directory is never
 visible.  This is the invariant ``lineage.read_output`` provides with
 its ``_manifest`` markers, generalized to whole-table versioning.
 
-Scale notes (10^12-doc corpus): up to ``_MANIFEST_INLINE_LIMIT`` files
-the snapshot lists them inline; beyond that the list is split into
-SHARDED MANIFESTS (``metadata/man-*.json``) grouped by partition value
-— Iceberg's manifest-list -> manifest-file structure. The snapshot then
-carries only per-shard metadata (partition values, file count, column
-stat envelopes); appends REUSE the parent's shards by reference, so
-commit cost is O(new files), and partition/range pruning happens at the
-manifest level first (``read(..., parts=...)``/``between=`` opens only
-the touched shard files) and file level second — the metadata-level
-pruning that makes Iceberg scans cheap on huge tables.
+Every snapshot lists its files inline, so a commit rewrites the whole
+file list: O(table files) per commit.
 """
 
 from __future__ import annotations
@@ -67,7 +55,7 @@ import shutil
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -109,61 +97,6 @@ _MERGE_KEYSET_LIMIT = 10_000
 # only costs an unnecessary file open (never correctness).
 _BLOOM_M = 4096
 _BLOOM_K = 3
-
-# A snapshot lists its files inline up to this many entries; beyond it
-# the list is split into SHARDED MANIFESTS (Iceberg's manifest-list ->
-# manifest-file structure): the snapshot holds only per-shard metadata
-# (partition values, n_files, stat envelopes) and readers open just the
-# shards their partition/range filters touch. Appends REUSE the parent's
-# shards untouched (commit cost = O(new files), not O(table)).
-_MANIFEST_INLINE_LIMIT = 512
-# max file entries per manifest shard (within one partition group)
-_MANIFEST_SHARD_ROWS = 10_000
-
-
-def _zorder_value(df: DataFrame, cols: list[str], bits: int = 6) -> Column:
-    """Z-order (Morton) key over ``cols`` for multi-dimensional file
-    clustering — the rewrite sort key behind Delta/Iceberg's
-    OPTIMIZE ZORDER BY: per column, map each value to a QUANTILE bucket
-    id (``2**bits`` buckets from one ``percentile_approx`` pass, so
-    skewed columns still spread evenly — equi-width buckets would not),
-    then bit-interleave the bucket ids round-robin. Rows close in z are
-    close in EVERY dimension, so range-partitioning the rewrite by z
-    gives per-file min/max bounds that are narrow for EACH column at
-    once — one clustered layout prunes scans on either predicate,
-    where a single-column sort prunes only its own column.
-
-    Cost model at scale: one percentile_approx agg over the table
-    (boundaries: ``2**bits - 1`` doubles per column, broadcast as
-    literals), then a pure projection — the when-chain bucket id and
-    the shift/or interleave are codegen'd, no Python, no extra
-    shuffle beyond the rewrite's own repartitionByRange. NULL and
-    non-castable values land in bucket 0 (clustered together, still
-    correct: stats-based skipping never excludes a file whose bounds
-    cover the probe). Columns must be numeric/timestamp-castable;
-    give strings a numeric surrogate upstream."""
-    nb = (1 << bits) - 1  # interior cutpoints per column
-    probs = [(i + 1) / (1 << bits) for i in range(nb)]
-    row = df.agg(
-        *[
-            F.percentile_approx(F.col(c).cast("double"), probs, 10_000).alias(c)
-            for c in cols
-        ]
-    ).first()
-    m = len(cols)
-    z = F.lit(0).cast("long")
-    for i, c in enumerate(cols):
-        cuts = [b for b in (row[c] or []) if b is not None]
-        v = F.col(c).cast("double")
-        bucket = F.lit(0)
-        for b in cuts:
-            bucket = bucket + F.when(v >= F.lit(float(b)), 1).otherwise(0)
-        bucket = F.coalesce(bucket, F.lit(0)).cast("long")
-        for k in range(bits):
-            z = z + F.shiftleft(
-                F.shiftright(bucket, k).bitwiseAND(F.lit(1)), k * m + i
-            )
-    return z
 
 
 def _footer_stats(path: str, cols: set[str]) -> dict:
@@ -355,102 +288,21 @@ class SnapTable:
             return json.load(fh)
 
     def snapshots(self) -> list[dict]:
-        """History, oldest first (snapshot_id, operation, summary, ts).
-        n_files comes from shard metadata when manifests are sharded —
-        no shard file is opened."""
+        """History, oldest first (snapshot_id, operation, summary, ts)."""
         out = []
         for f in self._snapshot_files():
             with open(f) as fh:
                 s = json.load(fh)
-            n = (
-                sum(m["n_files"] for m in s["manifests"])
-                if "manifests" in s
-                else len(s["files"])
-            )
             out.append(
                 {
                     "snapshot_id": s["snapshot_id"],
                     "parent_id": s["parent_id"],
                     "operation": s["operation"],
                     "summary": s.get("summary", {}),
-                    "n_files": n,
+                    "n_files": len(s["files"]),
                 }
             )
         return out
-
-    # ------------------------------------------------------------------
-    # sharded manifests (Iceberg manifest-list -> manifest-file shape)
-    # ------------------------------------------------------------------
-    def _load_manifest(self, rel_path: str) -> list[dict]:
-        """One shard's file entries. Separate method so tests can count
-        which shards a pruned scan actually opens."""
-        with open(os.path.join(self.path, rel_path)) as fh:
-            return json.load(fh)["files"]
-
-    def _snap_files(self, snap: dict) -> list[dict]:
-        """Materialize a snapshot's full file list (all shards)."""
-        if "manifests" in snap:
-            out: list[dict] = []
-            for m in snap["manifests"]:
-                out.extend(self._load_manifest(m["path"]))
-            return out
-        return snap.get("files", [])
-
-    def _write_manifest_shards(self, entries: list[dict]) -> list[dict]:
-        """Write file entries as manifest shards grouped by partition
-        value (the grouping Iceberg uses so partition pruning can skip
-        whole shards), chunked at _MANIFEST_SHARD_ROWS. Returns the
-        manifest-list records: per-shard path, n_files, partition
-        values, and per-column [min,max] stat envelopes."""
-        groups: dict[str, list[dict]] = {}
-        for e in entries:
-            part = e.get("partition")
-            key = json.dumps(part, sort_keys=True) if part else "_"
-            groups.setdefault(key, []).append(e)
-        records = []
-        for key in sorted(groups):
-            grp = groups[key]
-            for i in range(0, len(grp), _MANIFEST_SHARD_ROWS):
-                chunk = grp[i : i + _MANIFEST_SHARD_ROWS]
-                rel = os.path.join(
-                    "metadata", f"man-{uuid.uuid4().hex}.json"
-                )
-                with open(os.path.join(self.path, rel), "w") as fh:
-                    json.dump({"files": chunk}, fh)
-                parts = sorted(
-                    {
-                        v
-                        for e in chunk
-                        if e.get("partition")
-                        for v in e["partition"].values()
-                    }
-                )
-                # a column's shard envelope is only sound if EVERY file
-                # in the shard contributed bounds for it (same coverage
-                # rule as _footer_stats at the row-group level)
-                env: dict[str, list] | None = None
-                for e in chunk:
-                    st = e.get("stats") or {}
-                    if env is None:
-                        env = {c: list(b) for c, b in st.items()}
-                    else:
-                        for c in list(env):
-                            if c not in st:
-                                del env[c]
-                            else:
-                                env[c] = [
-                                    min(env[c][0], st[c][0]),
-                                    max(env[c][1], st[c][1]),
-                                ]
-                records.append(
-                    {
-                        "path": rel,
-                        "n_files": len(chunk),
-                        "partitions": parts or None,
-                        "stats": env or None,
-                    }
-                )
-        return records
 
     # ------------------------------------------------------------------
     # writes
@@ -526,9 +378,6 @@ class SnapTable:
         expected_parent: int | None = None,
         partition_by: str | None = None,
         protocol: dict | None = None,
-        dropped: list | None = None,
-        refs: dict | None = None,
-        deletes: list | None = None,
     ) -> int:
         """keep_parent_files: callable(parent_files) -> surviving subset.
         Appends rebase on conflict; anything that removes files raises
@@ -544,17 +393,7 @@ class SnapTable:
         stream epochs). Unlike ``summary`` (per-commit bookkeeping),
         protocol state is FOLDED FORWARD from the parent by every
         commit — an interleaved plain append or a compact can never
-        silently erase another job's resume/dedup record.
-        ``deletes``: merge-on-read delete-file records (see
-        ``delete_keys``); like refs they fold forward from the parent
-        unless explicitly replaced (compaction clears them)."""
-        added_shards: list[dict] | None = None  # cached across rebases
-        shards_seq: int | None = None  # snap id the cached shards embed
-        # only files WRITTEN by this commit get (re)stamped with a data
-        # sequence — a rollback resurrects old entries whose original
-        # seq must survive, or the target's pending deletes would stop
-        # applying to them
-        fresh = [e for e in added if "seq" not in e]
+        silently erase another job's resume/dedup record."""
         for _ in range(retries):
             parent_id = self.current_snapshot_id()
             if expected_parent is not None and parent_id != expected_parent:
@@ -575,57 +414,11 @@ class SnapTable:
                 ),
                 "summary": summary,
                 "protocol": {**parent.get("protocol", {}), **(protocol or {})},
-                # dropped-column tombstones fold forward like protocol
-                # state: a name that ever held data in surviving files
-                # stays unavailable for re-add (no field ids -> a
-                # re-added name would resurrect old values on read)
-                "dropped": (
-                    sorted(dropped)
-                    if dropped is not None
-                    else parent.get("dropped", [])
-                ),
-                # named snapshot refs (Iceberg tags): fold forward so an
-                # interleaved append/compact never drops a tag
-                "refs": refs if refs is not None else parent.get("refs", {}),
-                # pending MoR delete files fold forward until an
-                # operation (compact/overwrite/rollback) replaces them
-                "deletes": (
-                    deletes
-                    if deletes is not None
-                    else parent.get("deletes", [])
-                ),
+                "files": keep_parent_files(parent.get("files", [])) + added,
             }
-            # data-sequence number (Iceberg v2): every added file records
-            # the snapshot it lands in, so an equality delete at seq d
-            # suppresses only rows from files with seq < d. Re-stamped on
-            # every rebase — a file that ends up landing AFTER a delete
-            # must not be suppressed by it.
-            for e in fresh:
-                e["seq"] = parent_id + 1
-            if operation in ("append", "evolve", "tag") and "manifests" in parent:
-                # manifest REUSE: an append never rewrites (or even
-                # reads) the parent's shards — commit cost is O(added),
-                # the property that keeps appends cheap on a 10^12-row
-                # table. Shards for the added files are written once and
-                # survive CAS rebases (they reference only tx data).
-                if added_shards is None or shards_seq != parent_id + 1:
-                    # (re)write shards so their entries carry the seq of
-                    # the snapshot actually being attempted; a stale
-                    # cached shard would mis-order files vs deletes
-                    added_shards = (
-                        self._write_manifest_shards(added) if added else []
-                    )
-                    shards_seq = parent_id + 1
-                snap["manifests"] = list(parent["manifests"]) + added_shards
-            else:
-                files = keep_parent_files(self._snap_files(parent)) + added
-                if len(files) <= _MANIFEST_INLINE_LIMIT:
-                    snap["files"] = files
-                else:
-                    snap["manifests"] = self._write_manifest_shards(files)
             if self._try_commit(snap):
                 return snap["snapshot_id"]
-            if operation not in ("append", "evolve", "tag"):
+            if operation != "append":
                 raise CommitConflict(
                     f"{operation} lost the race at snapshot {parent_id + 1}"
                 )
@@ -645,8 +438,7 @@ class SnapTable:
         """``merge_schema``: Iceberg's opt-in mergeSchema write — new
         writer columns auto-ADD (optional) and legally-wider writer
         types auto-WIDEN the table schema in this commit; the default
-        rejects them (writers conform, changes go through
-        evolve_schema).
+        rejects them (writers conform to the table schema).
 
         ``cluster_by``: range-partition + sort rows by that column
         before writing, so each file covers a TIGHT, mostly-disjoint
@@ -688,56 +480,44 @@ class SnapTable:
         protocol: dict | None = None,
     ) -> int:
         # a full overwrite may legitimately redefine the schema (no old
-        # file survives to disagree), and clears the dropped-name
-        # tombstones for the same reason. ``protocol`` entries fold
-        # forward through later commits like any protocol state (used
-        # by e.g. the materialized-view maintenance cursor).
+        # file survives to disagree). ``protocol`` entries fold forward
+        # through later commits like any protocol state.
         added = self._write_tx(df, partition_by)
         return self._commit(
             "overwrite", added, lambda pf: [], df.schema.json(),
             {"added_files": len(added)}, partition_by=partition_by,
-            dropped=[], protocol=protocol, deletes=[],
+            protocol=protocol,
         )
 
     def _write_schema_json(self, df: DataFrame, merge: bool = False) -> str:
         """Validate a writer's schema against the table's and return the
         schema JSON the commit must record (Iceberg: writers conform to
-        the TABLE schema; schema changes go through evolve_schema).
+        the TABLE schema).
 
         A writer may omit table columns (they read back NULL — Iceberg
         optional columns) and may write a NARROWER type the table has
-        since widened (the reader promotes it), but an unknown column,
-        an incompatible type, or a tombstoned (dropped) name is an
-        error — silently recording the writer's schema would regress an
-        evolved table or resurrect dropped values.
+        since widened (the reader promotes it), but an unknown column or
+        an incompatible type is an error — silently recording the
+        writer's schema would regress an evolved table.
 
         ``merge`` (Iceberg's opt-in mergeSchema write mode): instead of
         rejecting them, unknown columns are APPENDED as optional fields
-        and legally-WIDER writer types widen the table column — the
-        same changes evolve_schema would make, folded into this commit.
-        Tombstoned names and illegal promotions stay errors."""
+        and legally-WIDER writer types widen the table column, folded
+        into this commit. Illegal promotions stay errors."""
         sid = self.current_snapshot_id()
         if not sid:
             return df.schema.json()
         snap = self._load(sid)
         table = StructType.fromJson(json.loads(snap["schema"]))
         tcols = {f.name: f for f in table.fields}
-        dropped = set(snap.get("dropped", []))
         merged = list(table.fields)
         for f in df.schema.fields:
-            if f.name in dropped:
-                raise ValueError(
-                    f"{self.path}: column {f.name!r} was dropped; re-adding "
-                    "it would resurrect old values from surviving files "
-                    "(no field ids) — overwrite() the table to reuse the name"
-                )
             tf = tcols.get(f.name)
             if tf is None:
                 if not merge:
                     raise ValueError(
                         f"{self.path}: column {f.name!r} is not in the "
-                        "table schema — evolve_schema(add=[...]) or "
-                        "append(..., merge_schema=True)"
+                        "table schema — append(..., merge_schema=True)"
                     )
                 merged.append(StructField(f.name, f.dataType, True))
                 continue
@@ -759,141 +539,6 @@ class SnapTable:
         if merge:
             return StructType(merged).json()
         return snap["schema"]
-
-    def evolve_schema(
-        self,
-        add: list | None = None,
-        widen: dict | None = None,
-        drop: list | None = None,
-    ) -> int:
-        """Iceberg-style METADATA-ONLY schema evolution: no data file is
-        read or rewritten; one new snapshot records the changed schema
-        and every existing file reads back under it.
-
-        ``add``: new ``StructField``s, appended as optional (nullable is
-        forced True — existing files lack the column and read back
-        NULL). ``widen``: {column: DataType} restricted to Iceberg's
-        legal promotions (int->long, float->double, decimal precision
-        growth at fixed scale) — the parquet reader applies them to old
-        files in place. ``drop``: removes columns from the schema (old
-        files keep the bytes; readers prune them) and TOMBSTONES the
-        name: without Iceberg's field ids, re-adding a dropped name
-        would resurrect the old values, so it is rejected until a full
-        overwrite. The partition column can be widened but not dropped.
-
-        Scale: the commit reuses the parent's manifest shards by
-        reference — O(1) metadata, never O(files) — and CAS-races like
-        an append (a concurrent writer landing first raises
-        CommitConflict rather than silently clobbering its schema)."""
-        sid = self.current_snapshot_id()
-        if not sid:
-            raise ValueError(f"{self.path}: empty table, nothing to evolve")
-        snap = self._load(sid)
-        schema = StructType.fromJson(json.loads(snap["schema"]))
-        dropped = set(snap.get("dropped", []))
-        part = snap.get("partition_by")
-        fields = list(schema.fields)
-        names = {f.name for f in fields}
-        changes: list[str] = []
-        for col in drop or []:
-            if col == part:
-                raise ValueError(f"cannot drop partition column {col!r}")
-            if col not in names:
-                raise ValueError(f"cannot drop unknown column {col!r}")
-            fields = [f for f in fields if f.name != col]
-            names.discard(col)
-            dropped.add(col)
-            changes.append(f"drop {col}")
-        for col, new_t in (widen or {}).items():
-            if col not in names:
-                raise ValueError(f"cannot widen unknown column {col!r}")
-            old = next(f for f in fields if f.name == col)
-            if old.dataType == new_t:
-                continue
-            if not _widens_to(old.dataType, new_t):
-                raise ValueError(
-                    f"{old.dataType.simpleString()} -> "
-                    f"{new_t.simpleString()} is not a legal promotion "
-                    f"for column {col!r}"
-                )
-            fields = [
-                StructField(f.name, new_t, f.nullable)
-                if f.name == col
-                else f
-                for f in fields
-            ]
-            changes.append(
-                f"widen {col} to {new_t.simpleString()}"
-            )
-        for f in add or []:
-            if f.name in dropped:
-                raise ValueError(
-                    f"column {f.name!r} was dropped; re-adding it would "
-                    "resurrect old values (no field ids)"
-                )
-            if f.name in names:
-                raise ValueError(f"column {f.name!r} already exists")
-            fields.append(StructField(f.name, f.dataType, True))
-            names.add(f.name)
-            changes.append(f"add {f.name} {f.dataType.simpleString()}")
-        return self._commit(
-            "evolve",
-            [],
-            lambda pf: pf,
-            StructType(fields).json(),
-            {"changes": changes},
-            expected_parent=sid,
-            dropped=sorted(dropped),
-        )
-
-    def refs(self) -> dict:
-        """Current named snapshot refs (Iceberg tags): name ->
-        snapshot_id. Folded forward by every commit."""
-        sid = self.current_snapshot_id()
-        return dict(self._load(sid).get("refs", {})) if sid else {}
-
-    def tag(
-        self, name: str, snapshot_id: int | None = None, replace: bool = False
-    ) -> int:
-        """Iceberg snapshot tag: pin ``name`` to ``snapshot_id``
-        (default: the current snapshot). METADATA-ONLY commit (parent
-        manifests reused by reference); a tagged snapshot and the data
-        files it references are PROTECTED from expire_snapshots until
-        the tag is dropped — the retention contract tags exist for
-        (audited releases, reproducible training-set versions)."""
-        cur = self.current_snapshot_id()
-        if not cur:
-            raise ValueError(f"{self.path}: empty table, nothing to tag")
-        target = cur if snapshot_id is None else snapshot_id
-        if not 1 <= target <= cur:
-            raise ValueError(f"snapshot {target} does not exist (1..{cur})")
-        refs = self.refs()
-        if name in refs and not replace:
-            raise ValueError(
-                f"tag {name!r} already points at snapshot {refs[name]}; "
-                "pass replace=True to move it"
-            )
-        refs[name] = target
-        return self._commit(
-            "tag", [], lambda pf: pf,
-            self._load(cur)["schema"],
-            {"tag": name, "target": target},
-            expected_parent=cur, refs=refs,
-        )
-
-    def drop_tag(self, name: str) -> int:
-        """Remove a tag; its snapshot becomes expirable again."""
-        cur = self.current_snapshot_id()
-        refs = self.refs()
-        if name not in refs:
-            raise ValueError(f"{self.path}: no tag {name!r}")
-        del refs[name]
-        return self._commit(
-            "tag", [], lambda pf: pf,
-            self._load(cur)["schema"],
-            {"drop_tag": name},
-            expected_parent=cur, refs=refs,
-        )
 
     def overwrite_partitions(
         self,
@@ -960,14 +605,6 @@ class SnapTable:
         import bisect
 
         base = self.current_snapshot_id()
-        if base and self._load(base).get("deletes"):
-            # a copy-on-write rewrite of a touched file would RESURRECT
-            # rows a pending MoR delete suppresses (the rewritten file
-            # gets a fresh seq above the delete's) — materialize first
-            raise ValueError(
-                f"{self.path}: pending row-level deletes; run "
-                "compact() to materialize them before merge_upsert"
-            )
         rows = (
             df.select(key).distinct().limit(_MERGE_KEYSET_LIMIT + 1).collect()
         )
@@ -1034,7 +671,7 @@ class SnapTable:
             survivors = old.join(
                 df.select(key).distinct(), on=key, how="left_anti"
             )
-            # allowMissingColumns: after evolve_schema(add=...) a writer
+            # allowMissingColumns: after a mergeSchema append a writer
             # may omit the new column — survivors carry it, incoming
             # rows null-fill (and the union widens any legally-narrower
             # incoming type to the table's)
@@ -1066,78 +703,6 @@ class SnapTable:
             partition_by=partition_by,
         )
 
-    def delete_keys(self, spark: SparkSession, keys_df: DataFrame, key: str) -> int:
-        """Merge-on-read row-level DELETE (Iceberg v2 equality-delete
-        files): the keys land in a DELETE FILE; data files are
-        untouched; readers apply an anti-join. Commit cost is
-        O(deleted keys) where ``merge_upsert``'s copy-on-write pays a
-        file rewrite — the right trade for frequent small deletions
-        (GDPR erasure, retraction feeds) against a 10^12-row table.
-        ``compact()`` materializes pending deletes into the data files
-        and clears them.
-
-        Sequence semantics (the Iceberg v2 rule): the delete records
-        the snapshot it commits at, every data file records the
-        snapshot it was added at, and the delete suppresses only rows
-        from OLDER files — so a later append may re-insert a deleted
-        key and reads it back correctly. Deletes are destructive, so
-        losing a commit race raises rather than rebasing; and
-        ``merge_upsert`` refuses to run over pending deletes (its
-        rewrite would re-sequence carried-over rows above the delete,
-        resurrecting them)."""
-        base = self.current_snapshot_id()
-        if not base:
-            raise ValueError(f"{self.path}: cannot delete from an empty table")
-        snap = self._load(base)
-        schema = StructType.fromJson(json.loads(snap["schema"]))
-        if key not in schema.fieldNames():
-            raise ValueError(f"delete key {key!r} is not a table column")
-        added = self._write_tx(keys_df.select(key).distinct(), None)
-        del_entries = [
-            {"path": e["path"], "key": key, "seq": None} for e in added
-        ]
-        # seq is stamped by _commit on `added`; mirror it post-commit is
-        # racy — instead the delete's seq IS its snapshot id, recorded
-        # below after the commit shape is known. _commit stamps added
-        # entries with parent_id+1 and a delete never rebases, so the
-        # planned id is the committed id.
-        planned = base + 1
-        for d in del_entries:
-            d["seq"] = planned
-        return self._commit(
-            "delete",
-            [],  # no new DATA files; the delete files ride `deletes`
-            lambda pf: pf,
-            snap["schema"],
-            {"delete_files": len(del_entries), "delete_key": key},
-            expected_parent=base,
-            deletes=snap.get("deletes", []) + del_entries,
-        )
-
-    def delete_where(
-        self,
-        spark: SparkSession,
-        key: str,
-        between: dict | None = None,
-        point: dict | None = None,
-    ) -> int:
-        """DELETE WHERE sugar over :meth:`delete_keys`: resolve the
-        matching keys with a PRUNED scan (manifest/file skipping and
-        bloom probes via ``read(between=/point=)``), then commit them
-        as an equality-delete file. A point retraction against a
-        clustered table therefore reads the one file that can hold the
-        key and writes a one-row delete file — O(predicate), never
-        O(table)."""
-        keys = self.read(spark, between=between, point=point).select(key)
-        return self.delete_keys(spark, keys, key=key)
-
-    def pending_deletes(self, snapshot_id: int | None = None) -> list[dict]:
-        """The MoR delete-file records pending at a snapshot."""
-        sid = (
-            self.current_snapshot_id() if snapshot_id is None else snapshot_id
-        )
-        return self._load(sid).get("deletes", []) if sid else []
-
     def current_summary(self) -> dict:
         """Latest snapshot's summary, with the folded-forward protocol
         state merged in (protocol keys win): readers of durable job
@@ -1160,12 +725,9 @@ class SnapTable:
         # rollback must not silently lose a concurrent commit -> treated
         # as a removing operation (raises on race).
         return self._commit(
-            "rollback", self._snap_files(old), keep, old["schema"],
+            "rollback", old["files"], keep, old["schema"],
             {"rolled_back_to": snapshot_id},
             partition_by=old.get("partition_by"),
-            # table state reverts wholesale: the target's pending
-            # deletes, not the current tip's, are what apply
-            deletes=old.get("deletes", []),
         )
 
     # ------------------------------------------------------------------
@@ -1198,8 +760,8 @@ class SnapTable:
         per-file bloom bitset when one was written (files without a
         bloom are kept — conservative, never unsound)."""
         if point:
-            # a point probe is a degenerate range for every envelope
-            # (shard + file min/max) check below; blooms refine after.
+            # a point probe is a degenerate range for the file min/max
+            # check below; blooms refine after.
             between = {
                 **(between or {}),
                 **{c: (v, v) for c, v in point.items()},
@@ -1215,40 +777,7 @@ class SnapTable:
             if partition_by is None:
                 # recorded at write time: callers need not re-specify
                 partition_by = snap.get("partition_by")
-            if "manifests" in snap:
-                # MANIFEST-LEVEL pruning first: a shard is opened only
-                # if its recorded partition values / stat envelopes can
-                # match — on a sharded 10^12-row table the planner reads
-                # O(touched shards), not the whole file list. Both
-                # filters are conservative (missing metadata -> keep),
-                # and the file-level filters below re-check exactly.
-                shards = snap["manifests"]
-                if parts is not None:
-                    want = {str(v) for v in parts}
-                    shards = [
-                        s
-                        for s in shards
-                        if s.get("partitions") is None
-                        or want & set(s["partitions"])
-                    ]
-                if between:
-                    def shard_survives(s: dict) -> bool:
-                        env = s.get("stats") or {}
-                        for col, (lo, hi) in between.items():
-                            b = env.get(col)
-                            if b is None:
-                                continue
-                            if (hi is not None and b[0] > hi) or (
-                                lo is not None and b[1] < lo
-                            ):
-                                return False
-                        return True
-
-                    shards = [s for s in shards if shard_survives(s)]
-                for m in shards:
-                    files.extend(self._load_manifest(m["path"]))
-            else:
-                files = snap["files"]
+            files = snap["files"]
         if parts is not None and partition_by is not None:
             want = {str(v) for v in parts}
             files = [
@@ -1293,12 +822,8 @@ class SnapTable:
         partition_by: str | None = None,
         between: dict | None = None,
         point: dict | None = None,
-        tag: str | None = None,
     ) -> DataFrame:
         """Snapshot-isolated read. ``snapshot_id`` = time travel;
-        ``tag`` = time travel by name (``VERSION AS OF 'tag'``) — the
-        ref resolves to its pinned snapshot, read under THAT snapshot's
-        schema;
         ``parts`` prunes files by recorded partition value BEFORE Spark
         plans the scan; ``between`` = {col: (lo, hi)} skips files whose
         recorded min/max bounds miss the range (Iceberg file skipping)
@@ -1314,13 +839,6 @@ class SnapTable:
         manifest at write time, so a partitioned table reads back with
         its partition column restored (and cast to the declared type)
         without every caller re-specifying it."""
-        if tag is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id or tag, not both")
-            refs = self.refs()
-            if tag not in refs:
-                raise ValueError(f"{self.path}: no tag {tag!r}")
-            snapshot_id = refs[tag]
         if partition_by is None:
             partition_by = self._recorded_partition_by(snapshot_id)
         files, schema_hint = self.scan_files(
@@ -1334,11 +852,7 @@ class SnapTable:
             )
         paths = [os.path.join(self.path, f["path"]) for f in files]
         schema = StructType.fromJson(json.loads(schema_hint))
-        dels = self.pending_deletes(snapshot_id)
-        if dels:
-            df = self._read_with_deletes(spark, files, schema, dels)
-        else:
-            df = spark.read.schema(schema).parquet(*paths)
+        df = spark.read.schema(schema).parquet(*paths)
         if partition_by:
             # partition value lives in the path, not the file; restore it
             # as a column (url-decoded, cast to the declared type) the
@@ -1356,44 +870,6 @@ class SnapTable:
             for col, v in point.items():
                 df = df.where(F.col(col) == F.lit(v))
         return df
-
-    def _read_with_deletes(
-        self, spark: SparkSession, files: list[dict], schema, dels: list[dict]
-    ) -> DataFrame:
-        """Apply MoR equality-delete files with Iceberg v2 sequence
-        semantics: a delete at seq d suppresses rows only from data
-        files with seq < d. Files are grouped by WHICH deletes apply
-        (the delete seqs cut file seqs into <= n_deletes+1 intervals);
-        each group is anti-joined against the union of its applicable
-        delete keysets and the groups are unioned back. Work is
-        bounded by the number of PENDING delete commits (compaction
-        clears them), never by table size."""
-        del_seqs = sorted({d["seq"] for d in dels})
-        groups: dict[tuple, list] = {}
-        for f in files:
-            fseq = f.get("seq") or 0
-            app = tuple(s for s in del_seqs if s > fseq)
-            groups.setdefault(app, []).append(f)
-        out = None
-        for app, fs in sorted(groups.items()):
-            part = spark.read.schema(schema).parquet(
-                *(os.path.join(self.path, f["path"]) for f in fs)
-            )
-            by_key: dict[str, list] = {}
-            for d in dels:
-                if d["seq"] in app:
-                    by_key.setdefault(d["key"], []).append(d["path"])
-            for k, dpaths in sorted(by_key.items()):
-                kdf = (
-                    spark.read.parquet(
-                        *(os.path.join(self.path, p) for p in dpaths)
-                    )
-                    .select(k)
-                    .distinct()
-                )
-                part = part.join(kdf, on=k, how="left_anti")
-            out = part if out is None else out.unionByName(part)
-        return out
 
     def read_incremental(
         self,
@@ -1432,9 +908,9 @@ class SnapTable:
         for sid in range(from_snapshot_id + 1, to_id + 1):
             snap = self._load(sid)
             schema_hint = snap["schema"]
-            if snap["operation"] in ("compact", "evolve", "tag"):
-                # none adds logical rows: a compact rewrites them, an
-                # evolve/tag touches only metadata — nothing to re-emit
+            if snap["operation"] == "compact":
+                # a compact adds no logical rows, it rewrites them —
+                # nothing to re-emit
                 continue
             if snap["operation"] != "append":
                 raise ValueError(
@@ -1442,23 +918,10 @@ class SnapTable:
                     f"({snap['operation']}): rows were removed in range"
                 )
             psnap = self._load(snap["parent_id"]) if snap["parent_id"] else {}
-            if "manifests" in snap and "manifests" in psnap:
-                # shard-diff fast path: appends only ADD shards (parent
-                # shards are reused by reference), so the delta is the
-                # new shard files — O(delta) metadata reads
-                pshards = {m["path"] for m in psnap["manifests"]}
-                for m in snap["manifests"]:
-                    if m["path"] not in pshards:
-                        added.extend(self._load_manifest(m["path"]))
-            else:
-                parent_paths = {
-                    f["path"] for f in self._snap_files(psnap)
-                }
-                added.extend(
-                    f
-                    for f in self._snap_files(snap)
-                    if f["path"] not in parent_paths
-                )
+            parent_paths = {f["path"] for f in psnap.get("files", [])}
+            added.extend(
+                f for f in snap["files"] if f["path"] not in parent_paths
+            )
         if schema_hint is None:  # empty range: current schema, zero rows
             sid = self.current_snapshot_id()
             if not sid:
@@ -1488,9 +951,9 @@ class SnapTable:
 
         Cost scales with the CHANGE, not the table: candidates are
         only the files present in one snapshot but not the other —
-        appends reuse parent manifest shards by reference and merges
-        rewrite only overlapping files, so the untouched majority of a
-        10^12-row table never enters the diff. A pure-append range is
+        appends keep the parent's files and merges rewrite only
+        overlapping files, so the untouched majority of a table never
+        enters the diff. A pure-append range is
         recognized from metadata alone and returns the added files as
         inserts with zero diff compute. Otherwise a net multiset diff
         (union with a +/- sign, one groupBy over ALL columns) cancels
@@ -1507,18 +970,6 @@ class SnapTable:
             if to_snapshot_id is None
             else to_snapshot_id
         )
-        d_from = {d["path"] for d in self.pending_deletes(from_snapshot_id)}
-        d_to = {d["path"] for d in self.pending_deletes(to_id)}
-        if d_from != d_to:
-            # a MoR delete changes VISIBLE rows without touching data
-            # files, so the file-set diff below would miss it; equal
-            # sets are fine (both endpoints suppress identically and
-            # pre-delete files can only leave via operations that also
-            # clear the set, which lands in the other branch)
-            raise ValueError(
-                f"{self.path}: changelog undefined across row-level "
-                "delete commits; compact() to materialize them first"
-            )
         from_files, _ = self.scan_files(snapshot_id=from_snapshot_id)
         to_files, schema_hint = self.scan_files(snapshot_id=to_id)
         fpaths = {f["path"] for f in from_files}
@@ -1577,18 +1028,11 @@ class SnapTable:
 
     def committed_values(self, partition_by: str) -> set[str]:
         """Distinct partition values present in the current snapshot —
-        the resume set, answered from metadata without touching data.
-        On a sharded table it reads only the manifest-LIST records
-        (shards carry their partition-value sets), no shard files."""
+        the resume set, answered from metadata without touching data."""
         sid = self.current_snapshot_id()
         if not sid:
             return set()
         snap = self._load(sid)
-        if "manifests" in snap:
-            vals: set[str] = set()
-            for m in snap["manifests"]:
-                vals.update(m.get("partitions") or [])
-            return vals
         return {
             f["partition"][partition_by]
             for f in snap["files"]
@@ -1604,7 +1048,6 @@ class SnapTable:
         target_files: int = 1,
         partition_by: str | None = None,
         cluster_by: str | None = None,
-        zorder_by: list[str] | None = None,
     ) -> int:
         """Small-file compaction (Iceberg's rewrite_data_files): rewrite
         the current snapshot's rows into ``target_files`` files (per
@@ -1622,16 +1065,6 @@ class SnapTable:
         order: the rewrite range-clusters rows and records per-file
         min/max bounds, so a table of unsorted streaming appends GAINS
         file-skipping stats at its next compaction.
-
-        ``zorder_by`` = OPTIMIZE ZORDER BY: multi-column Morton
-        clustering (see ``_zorder_value``) — the rewrite
-        range-partitions on the interleaved quantile-bucket key, so
-        per-file bounds are narrow for EVERY listed column and a
-        ``between=``/``point=`` scan prunes on any of them. A
-        single-column ``cluster_by`` makes the OTHER column's bounds
-        span the table; z-order is the 100-TB answer when scans filter
-        on more than one dimension. Mutually exclusive with
-        ``cluster_by``; costs one extra percentile_approx pass.
 
         The rewrite is planned against a pinned snapshot and the commit
         CAS-checks that parent (``expected_parent``): an append landing
@@ -1655,17 +1088,7 @@ class SnapTable:
         stats_cols = {c for f in cur for c in (f.get("stats") or {})}
         bloom_cols = {c for f in cur for c in (f.get("bloom") or {})}
         df = self.read(spark, snapshot_id=base, partition_by=partition_by)
-        if cluster_by and zorder_by:
-            raise ValueError("pass cluster_by or zorder_by, not both")
-        if zorder_by:
-            stats_cols.update(zorder_by)
-            df = (
-                df.withColumn("__z", _zorder_value(df, zorder_by))
-                .repartitionByRange(target_files, F.col("__z"))
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif cluster_by:
+        if cluster_by:
             stats_cols.add(cluster_by)
             df = df.repartitionByRange(
                 target_files, F.col(cluster_by)
@@ -1684,25 +1107,21 @@ class SnapTable:
             "compact", added, lambda pf: [], df.schema.json(),
             {"compacted_to": len(added)},
             expected_parent=base, partition_by=partition_by,
-            # the rewrite read through read(), which applied pending MoR
-            # deletes — they are now materialized in the data files
-            deletes=[],
         )
 
     def expire_snapshots(
         self, keep_last: int = 1, orphan_grace_s: float = 600.0
     ) -> int:
-        """Drop old snapshot manifests, orphaned manifest SHARDS (from
-        expired snapshots or lost commit races), and any tx dir no
-        surviving snapshot references (Iceberg's expire_snapshots +
-        orphan-file cleanup). Returns number of tx dirs deleted.
+        """Drop old snapshot manifests and any tx dir no surviving
+        snapshot references (Iceberg's expire_snapshots + orphan-file
+        cleanup). Returns number of tx dirs deleted.
 
-        ``orphan_grace_s``: shards/tx dirs younger than this survive the
-        sweep even when unreferenced — an IN-FLIGHT concurrent commit
-        writes its shards and data files BEFORE its CAS, so without the
-        grace window this sweep could delete files a commit that lands a
-        moment later points at (the age-threshold guard Iceberg's orphan
-        cleanup uses). Pass 0 only when no writer can be live."""
+        ``orphan_grace_s``: tx dirs younger than this survive the sweep
+        even when unreferenced — an IN-FLIGHT concurrent commit writes
+        its data files BEFORE its CAS, so without the grace window this
+        sweep could delete files a commit that lands a moment later
+        points at (the age-threshold guard Iceberg's orphan cleanup
+        uses). Pass 0 only when no writer can be live."""
         import time as _time
 
         now = _time.time()
@@ -1715,32 +1134,15 @@ class SnapTable:
 
         snaps = self._snapshot_files()
         survivors = set(snaps[-keep_last:] if keep_last else [])
-        # tagged snapshots (Iceberg refs) are retention-protected: the
-        # tag exists to make that snapshot reproducible, so neither its
-        # manifest nor the files it references may be swept
-        for sid in self.refs().values():
-            p = os.path.join(self.meta_dir, f"snap-{sid:010d}.json")
-            if os.path.exists(p):
-                survivors.add(p)
         live_tx: set[str] = set()
-        live_man: set[str] = set()
         for s in survivors:
             with open(s) as fh:
                 snap = json.load(fh)
-            for m in snap.get("manifests", []):
-                live_man.add(os.path.basename(m["path"]))
-            for f in self._snap_files(snap):
+            for f in snap["files"]:
                 live_tx.add(f["path"].split(os.sep)[1])
-            for d in snap.get("deletes", []):
-                # MoR delete files live in tx dirs too: a sweep that
-                # missed them would un-delete rows at surviving snaps
-                live_tx.add(d["path"].split(os.sep)[1])
         for s in snaps:
             if s not in survivors:
                 os.unlink(s)
-        for man in glob.glob(os.path.join(self.meta_dir, "man-*.json")):
-            if os.path.basename(man) not in live_man and aged(man):
-                os.unlink(man)
         removed = 0
         for tx in glob.glob(os.path.join(self.data_dir, "tx-*")):
             if os.path.basename(tx) not in live_tx and aged(tx):

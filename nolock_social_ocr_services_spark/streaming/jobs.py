@@ -199,6 +199,6 @@ def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
     shuffles — per-trigger cost is a map-side hash lookup, which is the
     only join shape that stays flat as trigger rate grows. The static
     side is re-resolved per micro-batch, so a dim TABLE (e.g. a
-    SnapTable path re-read in foreachBatch) can be updated mid-stream.
+    parquet path re-read in foreachBatch) can be updated mid-stream.
     """
     return stream.join(F.broadcast(dim), on=on, how="left")

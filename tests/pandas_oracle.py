@@ -110,6 +110,30 @@ def _strip_html(html: str) -> str:
     return s.strip()
 
 
+def _extracted_text(kind: str, text: str | None, media_ref: str | None) -> str | None:
+    """One span's extraction result, by kind."""
+    if kind == "text":
+        return text
+    if kind == "html":
+        return _strip_html(text)
+    payload = base64.b64decode(media_ref.split(";base64,", 1)[1])
+    return _ocr_text(media_ref, _TRIE.search(payload) or OCTET_STREAM)
+
+
+def expected_documents(docs: list[dict]) -> dict[str, list[tuple]]:
+    """doc_id -> ordered [(kind, text, media_ref, offset)] for input rows
+    ``{"doc_id", "spans"}``: every document exactly once, and ``[]`` for
+    one whose ``spans`` is empty or NULL."""
+    return {
+        d["doc_id"]: [
+            (s["kind"], _extracted_text(s["kind"], s["text"], s["media_ref"]),
+             s["media_ref"], s["offset"])
+            for s in sorted(d["spans"] or [], key=lambda s: s["offset"])
+        ]
+        for d in docs
+    }
+
+
 def expected_extracted_spans(sf_dir: str) -> dict[str, list[tuple]]:
     """doc_id -> ordered [(kind, text, media_ref, offset)] after extraction.
 
@@ -131,18 +155,17 @@ def expected_extracted_spans(sf_dir: str) -> dict[str, list[tuple]]:
             start = (did + i * 13) % max(n_chars - 60, 1)
             content = text[start : start + 60]
             if kind == "text":
-                spans.append((kind, content, None, i))
+                raw, ref = content, None
             elif kind == "html":
-                raw = HTML_PREFIX + content + HTML_SUFFIX
-                spans.append((kind, _strip_html(raw), None, i))
+                raw, ref = HTML_PREFIX + content + HTML_SUFFIX, None
             else:
                 if kind == "image":
                     mime = IMAGE_MIME_CYCLE[v] if v < 7 else OCTET_STREAM
                 else:
                     mime = "application/pdf" if v < 7 else OCTET_STREAM
                 payload = bytes.fromhex(SIG_HEX[mime]) + f"{doc_key}:{i}".encode()
+                raw = None
                 ref = f"data:{mime};base64," + base64.b64encode(payload).decode()
-                detected = _TRIE.search(payload) or OCTET_STREAM
-                spans.append((kind, _ocr_text(ref, detected), ref, i))
+            spans.append((kind, _extracted_text(kind, raw, ref), ref, i))
         out[doc_key] = spans
     return out

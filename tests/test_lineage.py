@@ -91,6 +91,43 @@ def test_lineage_rows_cover_corpus(spark, docs, tmp_path_factory):
     assert hist_total == media
 
 
+def test_kill_before_manifest_leaves_one_lineage_row_per_unit(
+    spark, docs, tmp_path, monkeypatch
+):
+    """A kill after a batch's lineage write but before its manifest
+    commit: the resume re-extracts the batch and replaces its lineage
+    rows, so every unit ends with exactly one."""
+    out = str(tmp_path / "out")
+    write_manifest = lineage._write_manifest
+    killed = []
+
+    def kill_once(*args):
+        if not killed:
+            killed.append(True)
+            raise RuntimeError("killed before the manifest commit")
+        write_manifest(*args)
+
+    monkeypatch.setattr(lineage, "_write_manifest", kill_once)
+    with pytest.raises(RuntimeError, match="before the manifest commit"):
+        lineage.run_extract_job(
+            spark, docs, out, run_id="k", num_parts=N_PARTS, batch_size=2
+        )
+    assert lineage.committed_parts(spark, out) == set()
+    assert lineage.run_extract_job(
+        spark, docs, out, run_id="r", num_parts=N_PARTS, batch_size=2
+    ) == list(range(N_PARTS))
+    lin = lineage.read_lineage(spark, out)
+    assert lin.columns == [
+        "run_id", "part_id", "doc_count", "span_count", "trie_hits", "committed_at"
+    ]
+    got = lin.agg(
+        F.count("*"), F.countDistinct("part_id"),
+        F.sum("doc_count"), F.sum("span_count"),
+    ).first()
+    n_spans = docs.agg(F.sum(F.size("spans"))).first()[0]
+    assert tuple(got) == (N_PARTS, N_PARTS, docs.count(), n_spans)
+
+
 def test_pending_docs_anti_join(spark, docs, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("anti"))
     with pytest.raises(RuntimeError):

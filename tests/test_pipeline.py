@@ -14,7 +14,7 @@ from nolock_social_ocr_services_spark.extract.records import (
     clean_extracted_text,
     parse_receipt,
 )
-from tests.pandas_oracle import expected_extracted_spans
+from tests.pandas_oracle import expected_documents, expected_extracted_spans
 
 
 @pytest.fixture(scope="module")
@@ -50,6 +50,30 @@ def test_extracted_documents_nested_order(spark, docs, sf_dir):
     row = nested.filter(F.size("spans") >= 6).first()
     offsets = [s.offset for s in row.spans]
     assert offsets == sorted(offsets)
+
+
+def test_every_document_comes_out_once_whatever_its_spans(spark):
+    """A document whose spans are [] or NULL comes out with spans = [];
+    the flat output stays one row per span."""
+    rows = [
+        {"doc_id": "t1", "spans": [
+            {"kind": "text", "text": "héllo wörld", "media_ref": None, "offset": 0}
+        ]},
+        {"doc_id": "e1", "spans": []},
+        {"doc_id": "n1", "spans": None},
+    ]
+    schema = (
+        "doc_id string, spans array<struct<"
+        "kind:string,text:string,media_ref:string,offset:int>>"
+    )
+    docs = spark.createDataFrame([(r["doc_id"], r["spans"]) for r in rows], schema)
+    got = sorted(
+        (r.doc_id, [tuple(s) for s in r.spans])
+        for r in pipeline.extracted_documents(docs).collect()
+    )
+    assert got == sorted(expected_documents(rows).items())
+    flat = pipeline.extract_spans(docs).select("doc_id", "offset").collect()
+    assert [tuple(r) for r in flat] == [("t1", 0)]
 
 
 def test_typed_receipt_fields(spark, docs):
