@@ -62,16 +62,15 @@ def strip_boilerplate(col: Column) -> Column:
     """NULL-safe boilerplate strip — pure built-ins (JVM regexp, inside
     whole-stage codegen; no Python worker in this stage).
 
-    Same rule chain as :func:`strip_boilerplate_series`: comments out,
-    non-content DOM blocks out (backreferenced close tag), remaining
-    tags out, common entities unescaped (&amp; last so &amp;lt; does
-    not double-decode), trim.
+    Same rule chain and patterns as :func:`strip_boilerplate_series`:
+    comments out, non-content DOM blocks out (backreferenced close tag),
+    remaining tags out, common entities unescaped (&amp; last so &amp;lt;
+    does not double-decode), trim. The pipeline builds this Column once
+    per SparkContext (``pipeline._extracted_text``).
     """
-    c = F.regexp_replace(col, r"(?s)<!--.*?-->", "")
-    c = F.regexp_replace(
-        c, r"(?is)<(" + "|".join(_BLOCK_TAGS) + r")\b[^>]*>.*?</\1\s*>", ""
-    )
-    c = F.regexp_replace(c, r"(?s)<[^>]+>", "")
+    c = F.regexp_replace(col, _COMMENT_RE.pattern, "")
+    c = F.regexp_replace(c, _BLOCK_RE.pattern, "")
+    c = F.regexp_replace(c, _TAG_RE.pattern, "")
     for ent, ch in _ENTITIES:
         c = F.replace(c, F.lit(ent), F.lit(ch))
     return F.trim(c)

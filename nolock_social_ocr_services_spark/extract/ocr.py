@@ -22,11 +22,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corpus import DUCK, SPARK, Dialect
+from ..session import per_context
 
 OCR_MODEL = "synth-ocr-v1"
 
@@ -351,8 +352,14 @@ def run_ocr(
     codegen'd ``array``/``slice`` — pages highest-index-first, so the
     downstream order-by-index concat (T3) is genuinely exercised.
     """
+    res, fields = _ocr_exprs(media_ref_col, mime_col)
+    # two projections: the UDF result, then the page fields read out of it
+    return df.withColumn(_H, res).withColumns(fields).drop(_H)
+
+
+@per_context
+def _ocr_exprs(media_ref_col: str, mime_col: str) -> tuple[Column, dict[str, Column]]:
     res = _ocr_udf(F.md5(F.col(media_ref_col)), F.col(mime_col))
-    tmp = df.withColumn(_H, res)
     r = F.col(_H)
     # reversed full page array [idx2, idx1, idx0]; slice keeps the LAST
     # npages entries (npages=2 -> [{1,app1},{0,main}]), npages=0 -> [].
@@ -365,12 +372,7 @@ def run_ocr(
     pages = F.when(npages.isNull(), F.lit(None).cast(PAGE_SCHEMA)).otherwise(
         F.slice(full, F.lit(4) - npages, npages)
     )
-    return (
-        tmp.withColumn("ocr_pages", pages)
-        .withColumn("ocr_model", r["model"])
-        .withColumn("ocr_tokens", r["tokens"])
-        .drop(_H)
-    )
+    return res, {"ocr_pages": pages, "ocr_model": r["model"], "ocr_tokens": r["tokens"]}
 
 
 def concat_pages(df: DataFrame, pages_col: str = "ocr_pages", out_col: str = "ocr_text") -> DataFrame:
@@ -379,6 +381,11 @@ def concat_pages(df: DataFrame, pages_col: str = "ocr_pages", out_col: str = "oc
     arrays yield '' for media rows (empty-OCR guard input) and NULL for
     non-media rows.
     """
+    return df.withColumn(out_col, _page_text(pages_col))
+
+
+@per_context
+def _page_text(pages_col: str) -> Column:
     pages = F.col(pages_col)
     ordered = F.array_sort(
         pages,
@@ -387,9 +394,7 @@ def concat_pages(df: DataFrame, pages_col: str = "ocr_pages", out_col: str = "oc
         .otherwise(0),
     )
     joined = F.array_join(F.transform(ordered, lambda p: p["markdown"]), "\n\n")
-    return df.withColumn(
-        out_col, F.when(pages.isNull(), F.lit(None).cast("string")).otherwise(joined)
-    )
+    return F.when(pages.isNull(), F.lit(None).cast("string")).otherwise(joined)
 
 
 # -- OCR result metadata: page regions, dimensions, meta map, timing ---------

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import per_context
+
 MONEY = T.DecimalType(38, 6)
 
 SIMPLE_RECEIPT_SCHEMA = T.StructType(
@@ -339,6 +341,20 @@ def route_and_extract(
     only the simple one did — the full->simple fallback, O9),
     ``extract_error``, ``confidence`` (OcrExtractionService.cs:231-241).
     """
+    levels, hidden = _route_exprs(text_col, mime_col, kind_col)
+    for level in levels:
+        df = df.withColumns(level)
+    return df.drop(*hidden)
+
+
+@per_context
+def _route_exprs(
+    text_col: str, mime_col: str, kind_col: str
+) -> tuple[tuple[dict[str, Column], ...], tuple[str, ...]]:
+    """:func:`route_and_extract`'s projections, in order, and the hidden
+    columns it drops at the end. Each level reads only the columns of
+    the levels before it, and each stays its own projection: see the
+    comments for why the first two must."""
     # Materialize the T5 cleanup chain ONCE as its own projected column:
     # Catalyst does not CSE a deterministic expression across the many
     # per-field regexp_extracts that consume it, so inlining `text` here
@@ -347,7 +363,7 @@ def route_and_extract(
     # CollapseProject keeps this projection separate because the alias is
     # non-cheap and multiply referenced, so the chain runs once per row.
     _clean = "__cleaned_text"
-    df = df.withColumn(_clean, clean_extracted_text(F.col(text_col)))
+    cleaned = {_clean: clean_extracted_text(F.col(text_col))}
     text = F.col(_clean)
     mime = F.col(mime_col)
     kind = F.col(kind_col)
@@ -368,41 +384,30 @@ def route_and_extract(
     is_check_row = (mime == "application/pdf") & ~empty_text
     hidden = {f"__rf_{k}": F.when(is_receipt_row, v) for k, v in rfields.items()}
     hidden |= {f"__cf_{k}": F.when(is_check_row, v) for k, v in cfields.items()}
-    df = df.withColumns(hidden)
     rf = {k: F.col(f"__rf_{k}") for k in rfields}
     cf = {k: F.col(f"__cf_{k}") for k in cfields}
 
-    out = (
-        df.withColumn("receipt", _receipt_simple_from(rf))
-        .withColumn("check", _check_simple_from(cf))
-        .withColumn("receipt_full", _receipt_full_from(rf))
-        .withColumn("check_full", _check_full_from(cf))
-        .withColumn(
-            "schema_used",
-            F.when(
-                F.col("receipt_full").isNotNull() | F.col("check_full").isNotNull(),
-                F.lit("full"),
-            ).when(
-                F.col("receipt").isNotNull() | F.col("check").isNotNull(),
-                F.lit("simple"),
-            ),
-        )
-        .withColumn(
-            "extract_error",
-            F.when(empty_text, F.lit("empty_ocr_text")).otherwise(
-                F.lit(None).cast("string")
-            ),
-        )
-    )
-    # confidence: 0.8 for a parsed simple model, 0.5 unknown/unparsed
-    # (OcrExtractionService.cs:231-241; OcrConfiguration.cs:36).
-    return out.withColumn(
-        "confidence",
-        F.when(
-            F.col("receipt").isNotNull() | F.col("check").isNotNull(), F.lit(0.8)
-        ).otherwise(
+    structs = {
+        "receipt": _receipt_simple_from(rf),
+        "check": _check_simple_from(cf),
+        "receipt_full": _receipt_full_from(rf),
+        "check_full": _check_full_from(cf),
+    }
+    parsed = F.col("receipt").isNotNull() | F.col("check").isNotNull()
+    outcome = {
+        "schema_used": F.when(
+            F.col("receipt_full").isNotNull() | F.col("check_full").isNotNull(),
+            F.lit("full"),
+        ).when(parsed, F.lit("simple")),
+        "extract_error": F.when(empty_text, F.lit("empty_ocr_text")).otherwise(
+            F.lit(None).cast("string")
+        ),
+        # confidence: 0.8 for a parsed simple model, 0.5 unknown/unparsed
+        # (OcrExtractionService.cs:231-241; OcrConfiguration.cs:36).
+        "confidence": F.when(parsed, F.lit(0.8)).otherwise(
             F.when(is_media & ~empty_text, F.lit(0.5)).otherwise(
                 F.lit(None).cast("double")
             )
         ),
-    ).drop(_clean, *hidden)
+    }
+    return (cleaned, hidden, structs, outcome), (_clean, *hidden)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import per_context
 from ..trie import OCTET_STREAM, PREFIX_LEN, lenient_trie
 
 # base64 chars needed to decode PREFIX_LEN bytes (4 chars per 3 bytes).
@@ -97,18 +98,24 @@ def classify_mime(
     """
     if engine != "expr":
         raise ValueError(f"unknown classify engine {engine!r}")
+    build = _mime_expr if trie is None else _mime_expr.__wrapped__
+    return df.withColumn(out_col, build(payload_col, data_url_col, strict, trie))
+
+
+@per_context
+def _mime_expr(payload_col: str, data_url_col: str | None, strict: bool, trie) -> Column:
+    """The MIME Column of :func:`classify_mime`, built once per context
+    for the default trie (a custom ``trie`` is built per call)."""
     fallback = None if strict else OCTET_STREAM
     if data_url_col is not None:
-        prefix = decode_data_url_prefix(F.col(data_url_col))
+        src = F.col(data_url_col)
+        prefix = decode_data_url_prefix(src)
     else:
-        prefix = F.substring(F.col(payload_col), 1, PREFIX_LEN)
+        src = F.col(payload_col)
+        prefix = F.substring(src, 1, PREFIX_LEN)
     matched = trie_match_expr(prefix, trie=trie, fallback=fallback)
     # NULL payload stays NULL mime in both modes (nothing to classify).
-    src = F.col(data_url_col) if data_url_col is not None else F.col(payload_col)
-    return df.withColumn(
-        out_col,
-        F.when(src.isNull(), F.lit(None).cast("string")).otherwise(matched),
-    )
+    return F.when(src.isNull(), F.lit(None).cast("string")).otherwise(matched)
 
 
 # -- S4: extension -> MIME fallback (URL sources) -----------------------------

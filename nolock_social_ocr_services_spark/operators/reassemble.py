@@ -11,8 +11,10 @@ guardian of the span-sequence-equality invariant
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import per_context
 
 
 def reassemble_spans(
@@ -36,16 +38,18 @@ def reassemble_spans(
     ``explode_spans`` emits one such row for a document whose spans are
     empty or NULL, which therefore comes out with ``[]``.
     """
+    return exploded.groupBy(doc_col).agg(_ordered_spans(span_fields, order_col, out_col))
+
+
+@per_context
+def _ordered_spans(span_fields: tuple[str, ...], order_col: str, out_col: str) -> Column:
     span_struct = F.struct(*[F.col(f).alias(f) for f in span_fields])
-    collected = exploded.groupBy(doc_col).agg(
-        F.array_sort(
-            F.collect_list(F.when(F.col(order_col).isNotNull(), span_struct)),
-            lambda a, b: F.when(a[order_col] < b[order_col], -1)
-            .when(a[order_col] > b[order_col], 1)
-            .otherwise(0),
-        ).alias(out_col)
-    )
-    return collected
+    return F.array_sort(
+        F.collect_list(F.when(F.col(order_col).isNotNull(), span_struct)),
+        lambda a, b: F.when(a[order_col] < b[order_col], -1)
+        .when(a[order_col] > b[order_col], 1)
+        .otherwise(0),
+    ).alias(out_col)
 
 
 def span_sequence_fingerprint(

@@ -23,8 +23,10 @@ span-spreading is safe for the span-sequence invariant.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import per_context
 
 
 def salted_repartition(
@@ -48,9 +50,15 @@ def salted_repartition(
     Deterministic re-runs produce identical partition assignment (no
     ``rand()``), which the checkpoint/resume protocol relies on.
     """
-    key = [F.col("doc_id"), F.col("offset")]
-    if salt_buckets is not None:
-        key = [F.pmod(F.hash(*key), F.lit(salt_buckets))]
+    key = _salt_key(salt_buckets)
     if num_partitions is not None:
         return df.repartition(num_partitions, *key)
     return df.repartition(*key)
+
+
+@per_context
+def _salt_key(salt_buckets: int | None) -> tuple[Column, ...]:
+    key = (F.col("doc_id"), F.col("offset"))
+    if salt_buckets is not None:
+        key = (F.pmod(F.hash(*key), F.lit(salt_buckets)),)
+    return key

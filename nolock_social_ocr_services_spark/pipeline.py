@@ -17,7 +17,7 @@ failing the job for one row (ST6, ReactivePipelineExtensions.cs:180-188).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .extract.html import strip_boilerplate
@@ -26,6 +26,7 @@ from .extract.records import route_and_extract
 from .operators.classify import classify_mime
 from .operators.reassemble import reassemble_spans, span_sequence_equal
 from .operators.salt import salted_repartition
+from .session import per_context
 
 
 def barrier_filter(df: DataFrame, cond) -> DataFrame:
@@ -60,14 +61,54 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     ``offset`` marks that row as no span (``reassemble_spans`` turns it
     back into ``[]``). Catalyst prunes unselected nested fields out of
     the scan (check ReadSchema in .explain)."""
-    return docs.select(
-        "doc_id", F.explode_outer("spans").alias("s")
-    ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
+    exploded, fields = _explode_exprs()
+    return docs.select(*exploded).select(*fields)
+
+
+@per_context
+def _explode_exprs() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    return (
+        (F.col("doc_id"), F.explode_outer("spans").alias("s")),
+        tuple(F.col(c) for c in ("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")),
+    )
+
+
+@per_context
+def _extracted_text() -> Column:
+    html_only = F.when(F.col("kind") == "html", F.col("text"))  # masked input
+    return (
+        F.when(F.col("kind") == "html", strip_boilerplate(html_only))
+        .when(F.col("kind") == "text", F.col("text"))
+        .otherwise(F.col("ocr_text"))
+    )
+
+
+@per_context
+def _output() -> tuple[Column, ...]:
+    names = (
+        "doc_id", "offset", "kind", "mime", "text", "media_ref", "receipt", "check",
+        "receipt_full", "check_full", "schema_used", "extract_error", "confidence",
+        "ocr_model", "ocr_tokens",
+    )
+    return tuple(
+        F.col("extracted_text").alias("text") if c == "text" else F.col(c) for c in names
+    )
+
+
+@per_context
+def _has_offset() -> Column:
+    return F.col("offset").isNotNull()
 
 
 def _extract(docs: DataFrame, salt_buckets: int | None) -> DataFrame:
     """Every layer over ``explode_spans(docs)``: one row per span plus
-    the NULL-offset row of each document without spans."""
+    the NULL-offset row of each document without spans.
+
+    Every Column comes from a ``session.per_context`` memo, and each
+    layer adds its columns in one projection per level it needs (OCR:
+    the UDF result, then the page fields; records: cleaned text, masked
+    fields, structs, outcome), so a build after the first is ~200 py4j
+    calls and ~16 plan analyses."""
     exploded = explode_spans(docs)
     # No count: AQE coalesces the exchange below spark.sql.shuffle.partitions
     # from its shuffle bytes; parallelismFirst aims at bytes/defaultParallelism
@@ -77,31 +118,9 @@ def _extract(docs: DataFrame, salt_buckets: int | None) -> DataFrame:
     salted = salted_repartition(exploded, salt_buckets=salt_buckets)
     classified = classify_mime(salted, data_url_col="media_ref", out_col="mime")
     ocred = concat_pages(run_ocr(classified))
-    html_only = F.when(F.col("kind") == "html", F.col("text"))  # masked input
-    extracted = ocred.withColumn(
-        "extracted_text",
-        F.when(F.col("kind") == "html", strip_boilerplate(html_only))
-        .when(F.col("kind") == "text", F.col("text"))
-        .otherwise(F.col("ocr_text")),
-    )
+    extracted = ocred.withColumn("extracted_text", _extracted_text())
     typed = route_and_extract(extracted, text_col="ocr_text")
-    return typed.select(
-        "doc_id",
-        "offset",
-        "kind",
-        "mime",
-        F.col("extracted_text").alias("text"),
-        "media_ref",
-        "receipt",
-        "check",
-        "receipt_full",
-        "check_full",
-        "schema_used",
-        "extract_error",
-        "confidence",
-        "ocr_model",
-        "ocr_tokens",
-    )
+    return typed.select(*_output())
 
 
 def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
@@ -126,8 +145,13 @@ def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame
     Classification is the trie compiled to a codegen'd when-chain
     (classify.trie_match_expr), so the OCR UDF is the pipeline's only
     Python stage.
+
+    Build cost: the Columns are built once per SparkContext
+    (``session.per_context``) and each layer is one projection per level
+    it needs, so building this DataFrame again is a few hundred py4j
+    calls, not thousands. The plan is the same either way.
     """
-    return _extract(docs, salt_buckets).filter(F.col("offset").isNotNull())
+    return _extract(docs, salt_buckets).filter(_has_offset())
 
 
 def extracted_documents(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:

@@ -885,9 +885,13 @@ SQL_BITEXT_MINE_EXACT = _sql_bitext_mine_exact()
 # Brute side of the recall audits is CAPPED by a deterministic
 # hash-sample of the query side (hash60 % mod == 0) — at oracle scale
 # this halves the audit; at 100 TB the modulus grows with the corpus so
-# the brute cost stays ~constant (K sampled queries x |tgt|, linear)
-# while remaining an unbiased recall estimate. Seed-free: the same rows
-# are sampled on any cluster size and in the DuckDB twin.
+# the brute cost stays ~constant (K sampled queries x |tgt|, linear).
+# What each audit then measures differs. The bitext audit measures the
+# recall of the SAMPLED subproblem, not an unbiased estimate of the full
+# mine's: dropping src vectors changes each target's deg_tgt (its kNN
+# over the src side), so margins move. srp_recall is unaffected: whether
+# a pair shares a band depends only on its two vectors. Seed-free: the
+# same rows are sampled on any cluster size and in the DuckDB twin.
 _BTX_AUDIT_MOD = 2
 _SRP_AUDIT_MOD = 2
 

@@ -7,8 +7,10 @@ same builder works under ``spark-submit --py-files`` on a real cluster
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -73,7 +75,41 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def _context_key():
+    """The live JVM SparkContext (None before one starts): what a
+    memoized Column belongs to."""
+    sc = SparkContext._active_spark_context
+    return None if sc is None else sc._jsc
+
+
+_memo: dict = {}
+_memo_context = None
+
+
+def per_context(build):
+    """Memoize ``build(*args)`` for the live SparkContext.
+
+    Every ``F.*`` call and Column operator is a py4j round trip (several,
+    with PySpark's call-site capture), and the pipeline's expressions
+    depend only on column names. Each is therefore built once per context
+    and reused by every later build. A new context drops the whole memo,
+    so no Column outlives the JVM that made it; nothing is built at
+    import time, when no JVM exists. ``args`` must be hashable, and
+    every caller shares the cached value, so none may mutate it. Two
+    threads that miss at once both build; the later result wins.
+    """
+
+    @functools.wraps(build)
+    def cached(*args):
+        global _memo_context
+        context = _context_key()
+        if context is not _memo_context:
+            _memo.clear()
+            _memo_context = context
+        key = (build, args)
+        value = _memo.get(key)
+        if value is None:
+            value = _memo[key] = build(*args)
+        return value
+
+    return cached

@@ -76,6 +76,59 @@ def test_every_document_comes_out_once_whatever_its_spans(spark):
     assert [tuple(r) for r in flat] == [("t1", 0)]
 
 
+def test_second_build_makes_few_jvm_calls(spark, docs, monkeypatch):
+    """The pipeline's Columns are built once per context: a build after
+    the first is a few hundred py4j commands (the DataFrame calls and
+    their argument lists), not the thousands that rebuilding every
+    F.col/F.when/regex Column costs."""
+    import gc
+    import threading
+
+    import py4j.clientserver as cs
+
+    warm = pipeline.extracted_documents(docs)  # fills the memo
+    send = cs.ClientServerConnection.send_command
+    builder = threading.get_ident()
+    calls = 0
+
+    def counting(self, command):
+        nonlocal calls
+        # py4j's finalizer thread sends the releases of objects freed
+        # earlier; only the building thread's commands are the build's
+        calls += threading.get_ident() == builder
+        return send(self, command)
+
+    # a gc pass would free unrelated py4j objects inside the window
+    gc.disable()
+    try:
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+        again = pipeline.extracted_documents(docs)
+        monkeypatch.undo()
+    finally:
+        gc.enable()
+    assert calls <= 300, calls
+    assert again.columns == warm.columns
+
+
+def test_new_context_rebuilds_memoized_columns(spark, docs, monkeypatch):
+    """Memoized Columns belong to the JVM that made them: when the
+    context changes, the memo builds every Column afresh instead of
+    reusing the old handles, and the rebuilt pipeline still matches the
+    oracle. The context key is swapped, so no second JVM starts."""
+    from nolock_social_ocr_services_spark import session
+
+    pipeline.extracted_documents(docs)
+    old = dict(session._memo)
+    new_context = object()
+    monkeypatch.setattr(session, "_context_key", lambda: new_context)
+    rebuilt = pipeline.extracted_documents(docs)
+    assert session._memo and set(session._memo) <= set(old)
+    assert not [k for k, v in session._memo.items() if v is old[k]]
+    rows = [r.asDict(recursive=True) for r in docs.collect()]
+    got = {r.doc_id: [tuple(s) for s in r.spans] for r in rebuilt.collect()}
+    assert got == expected_documents(rows)
+
+
 def test_typed_receipt_fields(spark, docs):
     """Every receipt row, not whichever comes first: the row order after
     the salted exchange depends on its partition count."""

@@ -1,6 +1,8 @@
 """Plan-shape regression tests: the efficiency properties SURVEY.md §4
 commits to must hold in the physical plan, not just in intent."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -331,19 +333,50 @@ def test_domain_cap_plan_broadcast_thresholds(spark, sf_dir):
     assert batch_eval_count(capped) == 0
 
 
+def _plan_nodes(plan):
+    """A physical plan and every node below it (through AQE's wrapper)."""
+    yield plan
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.inputPlan())
+        return
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
 def test_recall_audits_brute_side_is_hash_capped(spark, sf_dir):
     """r5 audit contract: bitext_recall / srp_recall execute their
     brute (quadratic) twin only over a deterministic hash60-sampled
     slice — the audit can never itself become the scale-killer it
     measures, and the modulus is the dial that keeps the sampled
-    subproblem task-sized at any corpus scale. The cap must be visible
-    in the plan as the md5-derived pmod filter on the brute side."""
+    subproblem task-sized at any corpus scale. Every all-pairs join in
+    the plan must read through the cap itself: a Filter testing
+    ``pmod(hash60(vec_id), mod) = 0``, hash60 being the md5 prefix."""
     from nolock_social_ocr_services_spark.queries import (
+        _BTX_AUDIT_MOD,
+        _SRP_AUDIT_MOD,
         q_bitext_recall,
         q_srp_recall,
     )
 
-    for q in (q_bitext_recall, q_srp_recall):
-        plan = explain_str(q(spark, sf_dir))
-        assert "md5" in plan, q.__name__
-        assert "pmod" in plan, q.__name__
+    for q, mod in ((q_bitext_recall, _BTX_AUDIT_MOD), (q_srp_recall, _SRP_AUDIT_MOD)):
+        cap = re.compile(
+            r"pmod\(cast\(conv\(substring\(md5\(cast\(cast\(vec_id#\d+L as string\)"
+            rf" as binary\)\), 1, 15\), 16, 10, true\) as bigint\), {mod}\) = 0\)"
+        )
+        plan = q(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        brute = [
+            n
+            for n in _plan_nodes(plan)
+            if n.getClass().getSimpleName()
+            in ("CartesianProductExec", "BroadcastNestedLoopJoinExec")
+        ]
+        assert brute, q.__name__
+        for join in brute:
+            capped = [
+                n
+                for n in _plan_nodes(join)
+                if n.getClass().getSimpleName() == "FilterExec"
+                and cap.search(n.condition().toString())
+            ]
+            assert capped, f"{q.__name__}: {join.simpleString(200)}"
