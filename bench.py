@@ -23,9 +23,9 @@ from nolock_social_ocr_services_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # default 16, not 32: the sandbox VM's hypervisor supplies ~16-26
-    # effective cores for its 32 vCPUs (calibration in BENCH/BASELINE.md);
-    # local[32] oversubscribes and is measurably slower than local[16].
+    # default 16, not 32: the 32-vCPU host this default was measured on
+    # gave ~16-26 effective cores, and local[32] oversubscribed them and
+    # ran measurably slower than local[16].
     # An explicit $SPARK_GRAFT_CPUS always wins.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     replicate = int(os.environ.get("SPARK_GRAFT_SCALE", "20"))

@@ -6,7 +6,7 @@ Core surface:
     corpus       — deterministic interleaved documents synthesizer
     operators    — classify / salt / reassemble DataFrame stages
     extract      — html boilerplate strip, synthetic OCR, typed records
-    pipeline     — end-to-end extract pipeline + span-sequence invariant
+    pipeline     — end-to-end extract pipeline (flat spans, nested documents)
     lineage      — per-partition lineage + checkpoint manifest + resume
     functions    — text analysis, dedup, similarity, multimodal plumbing
     streaming    — Structured Streaming variants

@@ -304,22 +304,6 @@ def _check_full_from(f: dict[str, Column]) -> Column:
     return F.when(ok, struct).otherwise(F.lit(None).cast(FULL_CHECK_SCHEMA))
 
 
-def parse_receipt_full(text: Column) -> Column:
-    """Full Receipt struct (ReceiptModels.cs:408-445): merchant contact
-    block, totals (subtotal/tax/total), line items, computed warnings.
-    NULL unless the full-block fields (address, subtotal, >=1 item) parse
-    — the rows where they don't are exactly the full->simple fallback
-    rows (OcrExtractionService.cs:51-56)."""
-    return _receipt_full_from(_receipt_fields(text))
-
-
-def parse_check_full(text: Column) -> Column:
-    """Full Check struct (CheckModels.cs:85-162): bank routing/account
-    block + memo; ``account_type`` is domain-validated (out-of-domain
-    values -> NULL, quarantined by the enum battery)."""
-    return _check_full_from(_check_fields(text))
-
-
 def route_and_extract(
     df: DataFrame,
     text_col: str = "ocr_text",

@@ -30,7 +30,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_spans
@@ -56,19 +57,17 @@ def committed_parts(spark: SparkSession, out_dir: str) -> set[int]:
     return {r.part_id for r in rows}
 
 
-def pending_docs(docs_with_part: DataFrame, manifest_df: DataFrame) -> DataFrame:
-    """Anti-join resume: documents of not-yet-committed units only."""
-    done = manifest_df.select("part_id").distinct()
-    return docs_with_part.join(F.broadcast(done), on="part_id", how="left_anti")
-
-
 def _lineage_rows(
-    flat_out: DataFrame, run_id: str, empty_parts: list[int]
+    flat_out: DataFrame, run_id: str, doc_counts: dict[int, int], empty_parts: list[int]
 ) -> DataFrame:
     """One (run_id, part_id, doc_count, span_count, trie_hits,
     committed_at) row per part_id in one aggregation over the re-read
-    committed output, plus a zero-count row for each unit in
-    ``empty_parts`` (no spans, so absent from ``flat_out``)."""
+    committed output, plus a zero-span row for each unit in
+    ``empty_parts`` (no spans, so absent from ``flat_out``).
+
+    ``doc_count`` is looked up in ``doc_counts`` (part_id -> documents
+    read for the unit), not counted in ``flat_out``: a document whose
+    spans are empty or NULL has no flat row."""
     spark = flat_out.sparkSession
     hits = (
         flat_out.filter(F.col("mime").isNotNull())
@@ -81,21 +80,33 @@ def _lineage_rows(
             ).alias("trie_hits")
         )
     )
-    counts = flat_out.groupBy("part_id").agg(
-        F.countDistinct("doc_id").alias("doc_count"),
-        F.count("*").alias("span_count"),
-    )
+    counts = flat_out.groupBy("part_id").agg(F.count("*").alias("span_count"))
     zero = spark.createDataFrame(
-        [(p, 0, 0, {}) for p in empty_parts],
-        "part_id int, doc_count long, span_count long, trie_hits map<string,long>",
+        [(p, 0, {}) for p in empty_parts],
+        "part_id int, span_count long, trie_hits map<string,long>",
     )
+    docs_in = F.create_map(*[F.lit(x) for p, n in doc_counts.items() for x in (p, n)])
     return (
         counts.join(hits, on="part_id", how="left")
         .unionByName(zero)
+        .withColumn("doc_count", docs_in[F.col("part_id")].cast("long"))
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())
         .select(*LINEAGE_COLUMNS)
     )
+
+
+def _docs_read(docs_in: Observation, batch: list[int]) -> dict[int, int]:
+    """Documents the batch read per unit, from ``docs_in``. AQE replaces
+    a shuffle stage that wrote no rows with an empty relation and drops
+    the metrics observed inside it (PySpark then fails to convert the
+    schema-less row it gets); every document has at least one exploded
+    row, so that happens only when the batch read no document."""
+    try:
+        seen = docs_in.get
+    except Py4JJavaError:
+        seen = {}
+    return {p: seen.get(str(p), 0) for p in batch}
 
 
 def run_extract_job(
@@ -139,7 +150,15 @@ def run_extract_job(
         # exactly when it has spans.
         for path in unit_dirs.values():
             shutil.rmtree(path, ignore_errors=True)
-        batch_docs = docsp.filter(F.col("part_id").isin(batch)).drop("part_id")
+        # documents in per unit, counted by the write job itself: a
+        # document without spans has no row in the flat output
+        docs_in = Observation()
+        per_unit = [F.count_if(F.col("part_id") == p).alias(str(p)) for p in batch]
+        batch_docs = (
+            docsp.filter(F.col("part_id").isin(batch))
+            .observe(docs_in, *per_unit)
+            .drop("part_id")
+        )
         flat = extract_spans(batch_docs, salt_buckets=salt_buckets)
         # part_id is a pure function of doc_id -> re-derive after
         # extraction and write all units of the batch in ONE job.
@@ -162,7 +181,7 @@ def run_extract_job(
             F.col("part_id").isin(batch)
         )
         (
-            _lineage_rows(re_read, run_id, empty)
+            _lineage_rows(re_read, run_id, _docs_read(docs_in, batch), empty)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("part_id")

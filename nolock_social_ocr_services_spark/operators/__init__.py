@@ -1,3 +1,3 @@
 from .classify import classify_mime, decode_data_url_prefix  # noqa: F401
-from .reassemble import reassemble_spans, span_sequence_equal  # noqa: F401
+from .reassemble import reassemble_spans  # noqa: F401
 from .salt import salted_repartition  # noqa: F401

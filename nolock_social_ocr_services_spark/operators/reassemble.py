@@ -1,4 +1,4 @@
-"""Ordered per-document span re-assembly + span-sequence equality.
+"""Ordered per-document span re-assembly.
 
 Spark re-creation of the reference's page-order contract: OCR pages carry
 an ``index`` and text is joined in index order
@@ -51,62 +51,3 @@ def _ordered_spans(span_fields: tuple[str, ...], order_col: str, out_col: str) -
         .otherwise(0),
     ).alias(out_col)
 
-
-def span_sequence_fingerprint(
-    docs: DataFrame,
-    doc_col: str = "doc_id",
-    spans_col: str = "spans",
-    fields: tuple[str, ...] = ("kind", "text", "media_ref"),
-    order_field: str = "offset",
-) -> DataFrame:
-    """(doc_id, seq_hash) — order-sensitive hash of the span sequence.
-
-    The hash covers ``fields`` in ``order_field`` order with NULLs made
-    explicit, so two documents agree iff their ordered
-    (kind, text, media_ref, order) sequences agree.
-    """
-    spans = F.col(spans_col)
-    ordered = F.array_sort(
-        spans,
-        lambda a, b: F.when(a[order_field] < b[order_field], -1)
-        .when(a[order_field] > b[order_field], 1)
-        .otherwise(0),
-    )
-    parts = F.transform(
-        ordered,
-        lambda s: F.concat_ws(
-            "\x01",
-            *[F.coalesce(s[f].cast("string"), F.lit("\x00")) for f in fields],
-            s[order_field].cast("string"),
-        ),
-    )
-    return docs.select(
-        F.col(doc_col), F.md5(F.concat_ws("\x02", parts)).alias("seq_hash")
-    )
-
-
-def span_sequence_equal(
-    left: DataFrame,
-    right: DataFrame,
-    doc_col: str = "doc_id",
-    spans_col: str = "spans",
-    fields: tuple[str, ...] = ("kind", "text", "media_ref"),
-) -> DataFrame:
-    """Per-doc equality report: (doc_id, equal boolean).
-
-    Full-outer join on doc_id of both sides' sequence fingerprints; a doc
-    missing on either side is unequal. This is the distributed form of the
-    reference's deterministic text/page-order assertions
-    (ReceiptOcrTests.cs:23-40 assert on stable text properties).
-    """
-    lf = span_sequence_fingerprint(left, doc_col, spans_col, fields).alias("l")
-    rf = span_sequence_fingerprint(right, doc_col, spans_col, fields).alias("r")
-    joined = lf.join(rf, on=doc_col, how="full_outer")
-    return joined.select(
-        F.col(doc_col),
-        (
-            F.col("l.seq_hash").isNotNull()
-            & F.col("r.seq_hash").isNotNull()
-            & (F.col("l.seq_hash") == F.col("r.seq_hash"))
-        ).alias("equal"),
-    )

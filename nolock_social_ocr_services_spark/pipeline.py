@@ -24,7 +24,7 @@ from .extract.html import strip_boilerplate
 from .extract.ocr import concat_pages, run_ocr
 from .extract.records import route_and_extract
 from .operators.classify import classify_mime
-from .operators.reassemble import reassemble_spans, span_sequence_equal
+from .operators.reassemble import reassemble_spans
 from .operators.salt import salted_repartition
 from .session import per_context
 
@@ -163,20 +163,3 @@ def extracted_documents(docs: DataFrame, salt_buckets: int | None = None) -> Dat
         _extract(docs, salt_buckets), span_fields=("kind", "text", "media_ref", "offset")
     )
 
-
-def identity_roundtrip_report(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
-    """Build-plan step 3 invariant: explode -> salt -> reassemble with NO
-    extraction must reproduce the input spans exactly (per-doc equal flag).
-    """
-    exploded = explode_spans(docs)
-    salted = salted_repartition(exploded, salt_buckets=salt_buckets)
-    rebuilt = reassemble_spans(salted)
-    return span_sequence_equal(docs, rebuilt)
-
-
-def equality_pass_rate(report: DataFrame) -> float:
-    """Fraction of docs whose span sequence matches (north-star metric)."""
-    row = report.agg(
-        F.avg(F.col("equal").cast("double")).alias("rate")
-    ).first()
-    return float(row.rate) if row.rate is not None else 0.0

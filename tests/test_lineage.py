@@ -128,17 +128,22 @@ def test_kill_before_manifest_leaves_one_lineage_row_per_unit(
     assert tuple(got) == (N_PARTS, N_PARTS, docs.count(), n_spans)
 
 
-def test_pending_docs_anti_join(spark, docs, tmp_path_factory):
-    out_dir = str(tmp_path_factory.mktemp("anti"))
-    with pytest.raises(RuntimeError):
-        lineage.run_extract_job(
-            spark, docs, out_dir, run_id="r", num_parts=N_PARTS, fail_after=3
-        )
-    docsp = lineage.with_part_id(docs, N_PARTS)
-    manifest = spark.read.parquet(f"{out_dir}/_manifest")
-    pending = lineage.pending_docs(docsp, manifest)
-    assert pending.filter(F.col("part_id").isin(0, 1, 2)).count() == 0
-    assert pending.count() == docsp.filter(~F.col("part_id").isin(0, 1, 2)).count()
+def test_doc_count_includes_documents_without_spans(spark, tmp_path):
+    """doc_count counts the documents read for a unit, not those with a
+    flat output row: a document whose spans are [] or NULL has none."""
+    schema = (
+        "doc_id string, spans array<struct<"
+        "kind:string,text:string,media_ref:string,offset:int>>"
+    )
+    docs = spark.createDataFrame(
+        [("t1", [("text", "hello", None, 0)]), ("e1", []), ("n1", None)], schema
+    )
+    out = str(tmp_path / "out")
+    lineage.run_extract_job(spark, docs, out, run_id="r", num_parts=2, batch_size=2)
+    got = lineage.read_lineage(spark, out).agg(
+        F.sum("doc_count"), F.sum("span_count")
+    ).first()
+    assert tuple(got) == (3, 1)
 
 
 def test_batched_units_identical_to_per_unit(spark, docs, tmp_path_factory):

@@ -14,6 +14,8 @@ from nolock_social_ocr_services_spark.extract.records import (
     clean_extracted_text,
     parse_receipt,
 )
+from nolock_social_ocr_services_spark.operators.reassemble import reassemble_spans
+from nolock_social_ocr_services_spark.operators.salt import salted_repartition
 from tests.pandas_oracle import expected_documents, expected_extracted_spans
 
 
@@ -23,8 +25,20 @@ def docs(spark, sf_dir):
 
 
 def test_identity_roundtrip_under_salting(spark, docs):
-    report = pipeline.identity_roundtrip_report(docs, salt_buckets=16)
-    assert pipeline.equality_pass_rate(report) == 1.0
+    """explode -> salt -> reassemble with no extraction reproduces every
+    document's (kind, text, media_ref, offset) sequence in offset order."""
+    rebuilt = reassemble_spans(
+        salted_repartition(pipeline.explode_spans(docs), salt_buckets=16)
+    )
+    got = {r.doc_id: [tuple(s) for s in r.spans] for r in rebuilt.collect()}
+    expected = {
+        r.doc_id: sorted(
+            ((s.kind, s.text, s.media_ref, s.offset) for s in r.spans or []),
+            key=lambda t: t[3],
+        )
+        for r in docs.collect()
+    }
+    assert got == expected
 
 
 def test_span_sequence_equality_vs_python_oracle(spark, docs, sf_dir):

@@ -5,7 +5,9 @@ or tool can run; only its own tests keep it alive. This test walks the
 ``import`` / ``from ... import`` statements (including those inside
 functions) with ``ast``, starting from the entry points:
 ``__spark_entry__.py``, ``jobs/run_extract.py``, ``perfbench/*.py``,
-``tools/*.py`` and ``bench.py``. It needs no Spark.
+``tools/*.py`` and ``bench.py``. A second walk from the job and the
+benchmark alone (the extraction core) checks that the core imports no
+module of the query catalog. Neither needs Spark.
 """
 
 from __future__ import annotations
@@ -53,9 +55,9 @@ def _imported(path: str, module: str | None = None) -> set[str]:
     return names
 
 
-def _reachable(modules: dict[str, str]) -> set[str]:
+def _reachable(modules: dict[str, str], roots: tuple[str, ...] = ROOTS) -> set[str]:
     todo = []
-    for pattern in ROOTS:
+    for pattern in roots:
         for path in sorted(glob.glob(os.path.join(REPO, pattern))):
             todo.extend(_imported(path))
     seen: set[str] = set()
@@ -71,15 +73,28 @@ def _reachable(modules: dict[str, str]) -> set[str]:
     return seen
 
 
-# Unreachable modules kept only until their removal is finished (the
-# SnapTable format; see ROADMAP.md). The check is exact: a new orphan
-# fails it, and so does an entry here whose module is gone or in use.
-AWAITING_REMOVAL = {f"{PKG}.sources", f"{PKG}.sources.snaptable"}
-
-
 def test_every_package_module_is_reachable_from_an_entry_point():
     modules = _package_modules()
     unreachable = set(modules) - _reachable(modules)
-    assert unreachable == AWAITING_REMOVAL, (
+    assert not unreachable, (
         f"package modules no entry point imports: {sorted(unreachable)}"
     )
+
+
+# The extraction core is what the checkpointed job and the benchmark
+# import; the query catalog (SQL-style queries, the function library,
+# streaming variants, plan inspection and the non-extraction operators)
+# builds on the core, never the other way round.
+CORE_ROOTS = ("jobs/run_extract.py", "perfbench/*.py")
+CATALOG = ("queries", "functions", "streaming", "plans",
+           "operators.temporal", "operators.grouped", "operators.layout")
+
+
+def test_extraction_core_imports_no_catalog_module():
+    modules = _package_modules()
+    core = _reachable(modules, CORE_ROOTS)
+    catalog = {
+        m for m in core
+        if any(m == f"{PKG}.{c}" or m.startswith(f"{PKG}.{c}.") for c in CATALOG)
+    }
+    assert not catalog, f"the extraction core imports catalog modules: {sorted(catalog)}"

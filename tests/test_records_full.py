@@ -9,13 +9,7 @@ routing/account fields (CheckModels.cs:85-162), full->simple fallback
 
 from decimal import Decimal
 
-from pyspark.sql import functions as F
-
-from nolock_social_ocr_services_spark.extract.records import (
-    parse_check_full,
-    parse_receipt_full,
-    route_and_extract,
-)
+from nolock_social_ocr_services_spark.extract.records import route_and_extract
 
 FULL_RECEIPT_MD = (
     "# Receipt\n\nMerchant: M-1234abcd\nDate: 2024-03-07\nTotal: 120.50"
@@ -38,13 +32,20 @@ FULL_CHECK_MD = (
 )
 
 
-def _one(spark, md: str, parser):
-    df = spark.createDataFrame([(md,)], "t string")
-    return df.select(parser(F.col("t")).alias("r")).first().r
+# the route that fills each struct: receipts from images, checks from pdfs
+_ROUTE = {"receipt_full": ("image", "image/jpeg"), "check_full": ("pdf", "application/pdf")}
+
+
+def _one(spark, md: str, struct: str):
+    """``struct`` of a one-row ``route_and_extract`` frame over ``md``."""
+    df = spark.createDataFrame(
+        [(*_ROUTE[struct], md)], "kind string, mime string, ocr_text string"
+    )
+    return route_and_extract(df).first()[struct]
 
 
 def test_full_receipt_golden(spark):
-    r = _one(spark, FULL_RECEIPT_MD, parse_receipt_full)
+    r = _one(spark, FULL_RECEIPT_MD, "receipt_full")
     assert r is not None
     assert r.merchant.name == "M-1234abcd"
     assert r.merchant.address == "742 Main St"
@@ -67,25 +68,25 @@ def test_full_receipt_golden(spark):
 
 def test_full_receipt_items_total_warning(spark):
     md = FULL_RECEIPT_MD.replace("Subtotal: 110.00", "Subtotal: 109.00")
-    r = _one(spark, md, parse_receipt_full)
+    r = _one(spark, md, "receipt_full")
     assert list(r.warnings) == ["ITEMS_TOTAL_MISMATCH"]
 
 
 def test_receipt_full_requires_full_block(spark):
-    assert _one(spark, SIMPLE_RECEIPT_MD, parse_receipt_full) is None
+    assert _one(spark, SIMPLE_RECEIPT_MD, "receipt_full") is None
 
 
 def test_invalid_payment_enum_is_nulled(spark):
     r = _one(
         spark,
         FULL_RECEIPT_MD.replace("Payment: card", "Payment: crypto"),
-        parse_receipt_full,
+        "receipt_full",
     )
     assert r is not None and r.payment_method is None
 
 
 def test_full_check_golden(spark):
-    c = _one(spark, FULL_CHECK_MD, parse_check_full)
+    c = _one(spark, FULL_CHECK_MD, "check_full")
     assert c is not None
     assert c.check_number == "004242"
     assert c.check_date == "2024-05-09"
@@ -102,7 +103,7 @@ def test_invalid_account_type_is_nulled(spark):
     c = _one(
         spark,
         FULL_CHECK_MD.replace("Account Type: savings", "Account Type: bitcoin"),
-        parse_check_full,
+        "check_full",
     )
     assert c is not None and c.account_type is None
 
