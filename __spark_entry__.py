@@ -42,7 +42,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full classify->OCR->extract->reassemble pipeline on
     sf0.001, summarized per document."""
     docs = corpus.materialized_documents(spark, SF0001)
-    flat = pipeline.extract_spans(docs, salt_buckets=32)
+    flat = pipeline.extract_spans(docs)
     return flat.groupBy("doc_id").agg(
         F.count("*").alias("n_spans"),
         F.sum(F.col("receipt").isNotNull().cast("long")).alias("n_receipts"),
@@ -75,7 +75,7 @@ def _q_mime_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = corpus.materialized_documents(spark, sf_dir)
-    return pipeline.extract_spans(docs, salt_buckets=32)
+    return pipeline.extract_spans(docs)
 
 
 def _q_extract_receipts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,7 +127,7 @@ def _q_span_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/W2: offset-order reconstruction after explode + salted shuffle."""
     docs = corpus.materialized_documents(spark, sf_dir)
     exploded = pipeline.explode_spans(docs)
-    salted = salted_repartition(exploded, salt_buckets=32)
+    salted = salted_repartition(exploded)
     rebuilt = reassemble_spans(salted)
     return rebuilt.select(
         "doc_id",

@@ -7,7 +7,7 @@ Usage (cluster):
         --corpus /path/to/documents_parquet \
         --out /path/to/output \
         --run-id run-2026-08-16 \
-        --num-parts 256 --salt-buckets 1024
+        --num-parts 256
 
 On a cluster the session comes from spark-submit's conf (master/executors
 set by the cluster manager); locally it falls back to session.get_spark's
@@ -33,7 +33,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--num-parts", type=int, default=64)
-    ap.add_argument("--salt-buckets", type=int, default=None)
     ap.add_argument("--batch-size", type=int, default=8,
                     help="resume units extracted per Spark job (1 = one "
                     "scan PER unit; 8-64 amortizes scans at scale)")
@@ -47,7 +46,6 @@ def main() -> None:
         args.out,
         run_id=args.run_id,
         num_parts=args.num_parts,
-        salt_buckets=args.salt_buckets,
         batch_size=args.batch_size,
     )
     lin = lineage.read_lineage(spark, args.out)

@@ -82,24 +82,3 @@ def bloom_contains(
         term = F.array_contains(lit_pos, p)
         cond = term if cond is None else cond & term
     return cond
-
-
-def bloom_prefilter_join(
-    big: DataFrame,
-    small: DataFrame,
-    big_key: str,
-    small_key: str,
-    m_bits: int = BLOOM_M_BITS,
-    h: int = BLOOM_H,
-    how: str = "inner",
-) -> DataFrame:
-    """Exact join of big x small with a Bloom pre-filter on the big
-    side: build from small (bounded), filter big at scan speed, then
-    the exact (broadcast-eligible) join removes false positives.
-    Result rows are exactly ``big.join(small)``'s — the filter can only
-    shrink the exchange, never the answer."""
-    bloom = build_bloom(small, small_key, m_bits, h)
-    pre = big.filter(bloom_contains(F.col(big_key), bloom, m_bits, h))
-    return pre.join(
-        F.broadcast(small), on=pre[big_key] == small[small_key], how=how
-    )

@@ -604,20 +604,6 @@ def incremental_dedup(
     )
 
 
-def update_index(
-    index: DataFrame, verdicts: DataFrame, batch_index: DataFrame
-) -> DataFrame:
-    """Advance the ingest loop: the index grows by the batch's UNIQUE
-    survivors only (duplicates point at already-indexed docs and add no
-    new content to guard against). ``batch_index`` is
-    :func:`dedup_index` over the same batch ``verdicts`` was computed
-    from. One semi-join + union — in production each increment is a
-    snapshot-table ``append``, so the index is versioned and the loop
-    is resumable from any snapshot."""
-    survivors = verdicts.filter(F.col("verdict") == "unique").select("doc_id")
-    return index.unionByName(batch_index.join(survivors, on="doc_id"))
-
-
 def contrastive_triplets(
     df: DataFrame,
     text_col: str = "text",

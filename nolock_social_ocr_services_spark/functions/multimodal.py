@@ -312,24 +312,6 @@ def with_phash(
     ).drop("_fmean")
 
 
-def frame_sample_offsets(
-    duration_ms: F.Column, every_ms: int = 1000
-) -> F.Column:
-    """Video frame-sampling plan: offsets [0, every_ms, ...] < duration.
-    Pure built-ins; the decode of each offset would be another
-    mapInPandas stage over (payload, offset).
-
-    A zero-length or NULL-duration video has NO frame to grab: the plan
-    is the empty array (NULL duration -> empty, not a bogus [0] —
-    Spark's ``greatest`` skips NULLs, so the naive clamp would emit an
-    offset into a video of unknown length and fail row-by-row at the
-    decode stage)."""
-    return F.when(
-        duration_ms.isNotNull() & (duration_ms > 0),
-        F.sequence(F.lit(0), duration_ms - 1, F.lit(every_ms)),
-    ).otherwise(F.array().cast("array<long>"))
-
-
 def resize_dims(
     width: F.Column, height: F.Column, max_side: int = 256
 ) -> F.Column:

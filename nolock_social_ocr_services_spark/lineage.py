@@ -9,9 +9,11 @@ strategy #3), so this module implements the protocol explicitly:
   Iceberg partitions; hash-of-key keeps the unit assignment stable
   across runs and cluster sizes);
 * each unit is extracted and written to ``data/part_id=K/`` with
-  idempotent overwrite, THEN a lineage row (doc/span counts + trie-hit
-  histogram, FIXTURES.md §5, overwritten the same way under
-  ``_lineage/part_id=K/``) and a manifest marker are committed —
+  idempotent overwrite; the same write job counts the unit's documents
+  in, spans out and trie hits per MIME with ``DataFrame.observe``. THEN
+  a lineage row built on the driver from those counts (FIXTURES.md §5,
+  overwritten the same way under ``_lineage/part_id=K/``) and a
+  manifest marker are committed —
   write-data-then-manifest ordering makes a kill at any point safe:
   an uncommitted unit is simply re-overwritten on resume;
 * resume = anti-join the unit list against the committed manifest and
@@ -29,17 +31,25 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import defaultdict
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_spans
+from .trie import OCTET_STREAM, lenient_trie
 
 
 LINEAGE_COLUMNS = (
     "run_id", "part_id", "doc_count", "span_count", "trie_hits", "committed_at"
 )
+_LINEAGE_SCHEMA = (
+    "run_id string, part_id int, doc_count long, span_count long, "
+    "trie_hits map<string,long>"
+)
+#: every MIME the pipeline's (lenient) classifier can give a media span
+_MIMES = (*lenient_trie().get_all_mime_types(), OCTET_STREAM)
 
 
 def with_part_id(docs: DataFrame, num_parts: int) -> DataFrame:
@@ -57,56 +67,30 @@ def committed_parts(spark: SparkSession, out_dir: str) -> set[int]:
     return {r.part_id for r in rows}
 
 
-def _lineage_rows(
-    flat_out: DataFrame, run_id: str, doc_counts: dict[int, int], empty_parts: list[int]
-) -> DataFrame:
-    """One (run_id, part_id, doc_count, span_count, trie_hits,
-    committed_at) row per part_id in one aggregation over the re-read
-    committed output, plus a zero-span row for each unit in
-    ``empty_parts`` (no spans, so absent from ``flat_out``).
-
-    ``doc_count`` is looked up in ``doc_counts`` (part_id -> documents
-    read for the unit), not counted in ``flat_out``: a document whose
-    spans are empty or NULL has no flat row."""
-    spark = flat_out.sparkSession
-    hits = (
-        flat_out.filter(F.col("mime").isNotNull())
-        .groupBy("part_id", "mime")
-        .agg(F.count("*").alias("n"))
-        .groupBy("part_id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("mime"), F.col("n")))
-            ).alias("trie_hits")
-        )
-    )
-    counts = flat_out.groupBy("part_id").agg(F.count("*").alias("span_count"))
-    zero = spark.createDataFrame(
-        [(p, 0, {}) for p in empty_parts],
-        "part_id int, span_count long, trie_hits map<string,long>",
-    )
-    docs_in = F.create_map(*[F.lit(x) for p, n in doc_counts.items() for x in (p, n)])
-    return (
-        counts.join(hits, on="part_id", how="left")
-        .unionByName(zero)
-        .withColumn("doc_count", docs_in[F.col("part_id")].cast("long"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_at", F.current_timestamp())
-        .select(*LINEAGE_COLUMNS)
-    )
+def _mime_hits(batch: list[int]) -> list[Column]:
+    """Spans per unit and MIME (``"<part_id> <mime>"``): the trie-hit
+    histogram, one ``count_if`` per MIME the classifier can give."""
+    unit, mime = F.col("part_id"), F.col("mime")
+    return [
+        F.count_if((unit == p) & (mime == m)).alias(f"{p} {m}")
+        for p in batch
+        for m in _MIMES
+    ]
 
 
-def _docs_read(docs_in: Observation, batch: list[int]) -> dict[int, int]:
-    """Documents the batch read per unit, from ``docs_in``. AQE replaces
-    a shuffle stage that wrote no rows with an empty relation and drops
-    the metrics observed inside it (PySpark then fails to convert the
-    schema-less row it gets); every document has at least one exploded
-    row, so that happens only when the batch read no document."""
+def _observed(obs: Observation) -> defaultdict[str, int]:
+    """The metrics ``obs`` counted, 0 for any it has none for.
+
+    AQE replaces a shuffle stage that wrote no rows with an empty
+    relation and drops the metrics observed inside it (PySpark then
+    fails to convert the schema-less row it gets); every document has
+    at least one exploded row, so that happens only when the batch read
+    no document, and then every count is 0."""
     try:
-        seen = docs_in.get
+        seen = obs.get
     except Py4JJavaError:
         seen = {}
-    return {p: seen.get(str(p), 0) for p in batch}
+    return defaultdict(int, seen)
 
 
 def run_extract_job(
@@ -115,7 +99,6 @@ def run_extract_job(
     out_dir: str,
     run_id: str,
     num_parts: int = 16,
-    salt_buckets: int | None = None,
     fail_after: int | None = None,
     batch_size: int = 1,
 ) -> list[int]:
@@ -150,19 +133,22 @@ def run_extract_job(
         # exactly when it has spans.
         for path in unit_dirs.values():
             shutil.rmtree(path, ignore_errors=True)
-        # documents in per unit, counted by the write job itself: a
-        # document without spans has no row in the flat output
-        docs_in = Observation()
+        # the write job counts each unit's documents on its input (a
+        # document without spans has no flat row) and its spans and trie
+        # hits on its output, so lineage needs no re-read of the data
+        docs_in, spans_out = Observation(), Observation()
         per_unit = [F.count_if(F.col("part_id") == p).alias(str(p)) for p in batch]
         batch_docs = (
             docsp.filter(F.col("part_id").isin(batch))
             .observe(docs_in, *per_unit)
             .drop("part_id")
         )
-        flat = extract_spans(batch_docs, salt_buckets=salt_buckets)
+        flat = extract_spans(batch_docs)
         # part_id is a pure function of doc_id -> re-derive after
         # extraction and write all units of the batch in ONE job.
-        flat_p = with_part_id(flat, num_parts)
+        flat_p = with_part_id(flat, num_parts).observe(
+            spans_out, *per_unit, *_mime_hits(batch)
+        )
         (
             flat_p.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -171,17 +157,21 @@ def run_extract_job(
         )
         # the partitioned write makes no directory for a unit without
         # spans; an empty file keeps every committed unit readable.
-        empty = [p for p, path in unit_dirs.items() if not os.path.exists(path)]
-        for p in empty:
-            spark.createDataFrame([], flat.schema).write.parquet(unit_dirs[p])
+        for p, path in unit_dirs.items():
+            if not os.path.exists(path):
+                spark.createDataFrame([], flat.schema).write.parquet(path)
         # data committed -> now lineage + manifest (ordering = crash safety).
         # A kill between the two leaves the batch uncommitted; its resume
         # replaces these units' lineage rows rather than adding to them.
-        re_read = spark.read.parquet(f"{out_dir}/data").filter(
-            F.col("part_id").isin(batch)
-        )
+        docs_n, spans = _observed(docs_in), _observed(spans_out)
+        rows = [
+            (run_id, p, docs_n[str(p)], spans[str(p)],
+             {m: spans[f"{p} {m}"] for m in _MIMES if spans[f"{p} {m}"]})
+            for p in batch
+        ]
         (
-            _lineage_rows(re_read, run_id, _docs_read(docs_in, batch), empty)
+            spark.createDataFrame(rows, _LINEAGE_SCHEMA)
+            .withColumn("committed_at", F.current_timestamp())
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("part_id")

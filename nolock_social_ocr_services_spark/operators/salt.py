@@ -29,36 +29,23 @@ from pyspark.sql import functions as F
 from ..session import per_context
 
 
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int | None = None,
-) -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Repartition rows on a hash of ``(doc_id, offset)`` (deterministic, even).
 
     ``num_partitions``: fixed partition count, which AQE leaves alone.
     None: ``spark.sql.shuffle.partitions`` as a ceiling, coalesced by AQE.
 
-    ``salt_buckets``: optional cap on the spread of one document's rows.
-    When set, partitioning uses ``pmod(hash(doc_id, offset), salt_buckets)``
-    so one doc lands on at most ``salt_buckets`` partitions — only
-    useful when a downstream stage exploits per-doc locality; pick
-    ``salt_buckets >> num_partitions`` or accept empty partitions.
-    Default (None) spreads every row independently, which is the
-    balanced choice for pure per-row UDF stages.
-
-    Deterministic re-runs produce identical partition assignment (no
-    ``rand()``), which the checkpoint/resume protocol relies on.
+    Every row is spread independently, the balanced choice for the
+    per-row UDF stages that follow. Deterministic re-runs produce
+    identical partition assignment (no ``rand()``), which the
+    checkpoint/resume protocol relies on.
     """
-    key = _salt_key(salt_buckets)
+    key = _salt_key()
     if num_partitions is not None:
         return df.repartition(num_partitions, *key)
     return df.repartition(*key)
 
 
 @per_context
-def _salt_key(salt_buckets: int | None) -> tuple[Column, ...]:
-    key = (F.col("doc_id"), F.col("offset"))
-    if salt_buckets is not None:
-        key = (F.pmod(F.hash(*key), F.lit(salt_buckets)),)
-    return key
+def _salt_key() -> tuple[Column, ...]:
+    return (F.col("doc_id"), F.col("offset"))

@@ -100,7 +100,7 @@ def _has_offset() -> Column:
     return F.col("offset").isNotNull()
 
 
-def _extract(docs: DataFrame, salt_buckets: int | None) -> DataFrame:
+def _extract(docs: DataFrame) -> DataFrame:
     """Every layer over ``explode_spans(docs)``: one row per span plus
     the NULL-offset row of each document without spans.
 
@@ -115,7 +115,7 @@ def _extract(docs: DataFrame, salt_buckets: int | None) -> DataFrame:
     # (at least 1 MB), so a large input still fills every core. A small one
     # gets few tasks: each Python task pays ~0.25 CPU-s up front, mostly in
     # pyspark's setup_spark_files re-reading its zipimport directories.
-    salted = salted_repartition(exploded, salt_buckets=salt_buckets)
+    salted = salted_repartition(exploded)
     classified = classify_mime(salted, data_url_col="media_ref", out_col="mime")
     ocred = concat_pages(run_ocr(classified))
     extracted = ocred.withColumn("extracted_text", _extracted_text())
@@ -123,7 +123,7 @@ def _extract(docs: DataFrame, salt_buckets: int | None) -> DataFrame:
     return typed.select(*_output())
 
 
-def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
+def extract_spans(docs: DataFrame) -> DataFrame:
     """Flat extracted spans: classify + extract every span, one row per
     span. A document without spans, like a span without an offset, has
     no row here.
@@ -151,15 +151,15 @@ def extract_spans(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame
     it needs, so building this DataFrame again is a few hundred py4j
     calls, not thousands. The plan is the same either way.
     """
-    return _extract(docs, salt_buckets).filter(_has_offset())
+    return _extract(docs).filter(_has_offset())
 
 
-def extracted_documents(docs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
+def extracted_documents(docs: DataFrame) -> DataFrame:
     """Nested output: (doc_id, spans[]) with extracted text, offset order
     restored after the salted shuffle — the span-sequence contract. Every
     input document comes out exactly once; one whose ``spans`` is empty
     or NULL comes out with ``spans = []``."""
     return reassemble_spans(
-        _extract(docs, salt_buckets), span_fields=("kind", "text", "media_ref", "offset")
+        _extract(docs), span_fields=("kind", "text", "media_ref", "offset")
     )
 

@@ -24,7 +24,6 @@ def _default_driver_memory() -> str:
 def get_spark(
     app_name: str = "nolock_ocr_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -34,18 +33,16 @@ def get_spark(
 
     Args:
         cpus: local[] thread count; defaults to $SPARK_GRAFT_CPUS, else
-            the host's CPU count.
-        shuffle_partitions: defaults to cpus; the task-count ceiling after
-            both pipeline exchanges (AQE coalesces below it).
+            the host's CPU count. It is also spark.sql.shuffle.partitions,
+            the task-count ceiling after both pipeline exchanges (AQE
+            coalesces below it).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

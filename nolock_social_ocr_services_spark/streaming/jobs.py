@@ -35,7 +35,6 @@ def stream_extract(
     corpus_path: str,
     schema=None,
     max_files_per_trigger: int = 4,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Streaming DataFrame of extracted spans from a corpus directory."""
     if schema is None:
@@ -47,7 +46,7 @@ def stream_extract(
     )
     # salted_repartition uses repartition(), fine in streaming; the
     # per-doc reassembly (stateful agg) belongs to the sink side/batch.
-    return extract_spans(stream, salt_buckets=salt_buckets)
+    return extract_spans(stream)
 
 
 def windowed_stats(
@@ -122,83 +121,3 @@ def stream_dedup(
             list(keys)
         )
     return stream.dropDuplicates(list(keys))
-
-
-def priority_rate_limited_sink(
-    stream: DataFrame,
-    process,
-    priority_col: str = "priority",
-    order_col: str | None = None,
-):
-    """ST2/ST3 (rate limiting + priority grouping) the Spark way.
-
-    The reference's Rx pipeline windows requests into 1-second buckets
-    of <= RateLimitCount and serves higher-priority groups first
-    (ReactiveMistralOcrPipeline.cs:151-163,195-202; GroupBy :155). In
-    Structured Streaming the admission control belongs to the SOURCE —
-    ``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger`` plus
-    ``trigger(processingTime=...)`` cap rows-per-second, and anything
-    not admitted stays queued in the source (nothing is dropped, unlike
-    a sink-side ``limit``). What remains for the sink is ordering:
-    this ``foreachBatch`` wrapper hands ``process`` each micro-batch
-    sorted highest-priority-first (ties broken by ``order_col`` for
-    determinism), so downstream effects (writes, API calls) happen in
-    priority order within every admitted window.
-
-    Returns a ``DataStreamWriter`` — caller picks trigger/options and
-    calls ``.start()``.
-    """
-    cols = [F.col(priority_col).desc()]
-    if order_col is not None:
-        cols.append(F.col(order_col).asc())
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        process(batch_df.orderBy(*cols), batch_id)
-
-    return stream.writeStream.foreachBatch(handle)
-
-
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "1 minute",
-    within: str = "INTERVAL 1 MINUTE",
-) -> DataFrame:
-    """Watermarked stream-stream inner join: each left event joins
-    right events of the same key from the trailing ``within`` window.
-
-    The event-time range condition + both-side watermarks are what
-    BOUND the join state (Spark evicts right rows older than
-    left_watermark - within): without them a stream-stream join
-    buffers both streams forever. Columns are prefixed l_/r_ so
-    key/ts collisions can't occur.
-    """
-    lw = left.withWatermark(ts_col, watermark).select(
-        [F.col(c).alias(f"l_{c}") for c in left.columns]
-    )
-    rw = right.withWatermark(ts_col, watermark).select(
-        [F.col(c).alias(f"r_{c}") for c in right.columns]
-    )
-    cond = (
-        (F.col(f"l_{key}") == F.col(f"r_{key}"))
-        & (F.col(f"r_{ts_col}") <= F.col(f"l_{ts_col}"))
-        & (
-            F.col(f"r_{ts_col}")
-            >= F.expr(f"l_{ts_col} - {within}")
-        )
-    )
-    return lw.join(rw, cond, "inner")
-
-
-def enrich_with_dim(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Stream-static broadcast enrichment: join each micro-batch against
-    a small static dimension table (MIME -> routing metadata, tenant
-    configs, ...). The static side is broadcast, so the stream never
-    shuffles — per-trigger cost is a map-side hash lookup, which is the
-    only join shape that stays flat as trigger rate grows. The static
-    side is re-resolved per micro-batch, so a dim TABLE (e.g. a
-    parquet path re-read in foreachBatch) can be updated mid-stream.
-    """
-    return stream.join(F.broadcast(dim), on=on, how="left")

@@ -13,7 +13,7 @@ SF01_DIR = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="pytest", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="pytest", cpus=8)
     yield s
 
 

@@ -14,19 +14,6 @@ def test_no_false_negatives(spark):
     assert passed.count() == 50
 
 
-def test_prefilter_join_equals_plain_join(spark):
-    """The pre-filtered join returns exactly the plain join's rows —
-    false positives are removed by the exact join, false negatives
-    cannot happen."""
-    big = spark.createDataFrame([(i, i % 100) for i in range(2000)], "id long, fk long")
-    small = spark.createDataFrame([(j, f"dim{j}") for j in range(0, 100, 9)], "pk long, name string")
-    out = bj.bloom_prefilter_join(big, small, "fk", "pk")
-    plain = big.join(small, big["fk"] == small["pk"])
-    assert sorted((r.id, r.pk) for r in out.collect()) == sorted(
-        (r.id, r.pk) for r in plain.collect()
-    )
-
-
 def test_prefilter_is_selective(spark):
     """With a probe population mostly disjoint from the keys, the
     filter drops the bulk of the big side before any join: at

@@ -360,36 +360,6 @@ def test_incremental_dedup_near_dup_by_signature(spark, df):
     assert row.match_id in (0, 1, 4) and row.sig_agree >= 8
 
 
-def test_update_index_grows_by_unique_survivors_only(spark, df):
-    """The ingest loop's index advances by the batch's unique docs;
-    dups (exact or near) add no index rows."""
-    index = dd.dedup_index(df.filter("doc_id <= 3"), num_hashes=16, k=6)
-    batch = spark.createDataFrame(
-        [
-            (10, df.filter("doc_id = 0").first().text),    # dup -> dropped
-            (12, "totally novel content about astronomy telescopes and "
-                 "the orbital mechanics of binary star systems tonight"),
-        ],
-        "doc_id long, text string",
-    )
-    batch_index = dd.dedup_index(batch, num_hashes=16, k=6)
-    verdicts = dd.incremental_dedup(
-        batch, index, num_hashes=16, bands=8, k=6, min_agree=8
-    )
-    grown = dd.update_index(index, verdicts, batch_index)
-    assert grown.count() == index.count() + 1
-    assert {r.doc_id for r in grown.collect()} == {0, 1, 2, 3, 12}
-    # a re-sent copy of the survivor now dedups against the grown index
-    again = spark.createDataFrame(
-        [(30, batch.filter("doc_id = 12").first().text)],
-        "doc_id long, text string",
-    )
-    row = dd.incremental_dedup(
-        again, grown, num_hashes=16, bands=8, k=6, min_agree=8
-    ).first()
-    assert row.verdict == "exact_dup" and row.exact_dup_of == 12
-
-
 def test_contrastive_triplets_positives_and_exclusions(spark, df):
     out = dd.contrastive_triplets(
         df, num_hashes=16, bands=8, k=6, min_jaccard=0.5, neg_buckets=2

@@ -140,10 +140,31 @@ def test_doc_count_includes_documents_without_spans(spark, tmp_path):
     )
     out = str(tmp_path / "out")
     lineage.run_extract_job(spark, docs, out, run_id="r", num_parts=2, batch_size=2)
-    got = lineage.read_lineage(spark, out).agg(
-        F.sum("doc_count"), F.sum("span_count")
-    ).first()
+    lin = lineage.read_lineage(spark, out)
+    got = lin.agg(F.sum("doc_count"), F.sum("span_count")).first()
     assert tuple(got) == (3, 1)
+    # no media span anywhere: every unit's histogram is empty, whether
+    # its spans are all text or it has none
+    assert [r.trie_hits for r in lin.collect()] == [{}, {}]
+
+
+def test_one_batch_runs_in_four_spark_jobs(spark, docs, tmp_path):
+    """A batch of units that all have spans costs the data write (its
+    exchange's map stage and the write stage), the lineage write and the
+    manifest write: lineage is counted by the data write itself, not by
+    re-reading the batch's output."""
+    docs.count()  # materialize the cached input outside the counted group
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    sc.setJobGroup("one_batch", "one checkpoint batch")
+    try:
+        lineage.run_extract_job(spark, docs, out, run_id="j", num_parts=4, batch_size=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    lin = lineage.read_lineage(spark, out).collect()
+    assert sorted(r.part_id for r in lin) == [0, 1, 2, 3]
+    assert all(r.span_count > 0 for r in lin)
+    assert len(sc.statusTracker().getJobIdsForGroup("one_batch")) <= 4
 
 
 def test_batched_units_identical_to_per_unit(spark, docs, tmp_path_factory):

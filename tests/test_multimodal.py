@@ -44,24 +44,6 @@ def test_fake_decode_deterministic(payloads):
     assert a == b
 
 
-def test_frame_sample_offsets(spark):
-    df = spark.createDataFrame(
-        [(3500,), (0,), (1000,), (None,)], "dur long"
-    )
-    got = [
-        r.offs
-        for r in df.select(
-            mm.frame_sample_offsets(F.col("dur"), every_ms=1000).alias("offs")
-        ).collect()
-    ]
-    assert got[0] == [0, 1000, 2000, 3000]
-    # no frame exists in a zero-length or unknown-duration video —
-    # the plan must be empty, never a bogus offset 0
-    assert got[1] == []
-    assert got[2] == [0]
-    assert got[3] == []
-
-
 def test_resize_dims_builtin(spark):
     from nolock_social_ocr_services_spark.functions.multimodal import resize_dims
 

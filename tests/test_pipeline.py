@@ -27,9 +27,7 @@ def docs(spark, sf_dir):
 def test_identity_roundtrip_under_salting(spark, docs):
     """explode -> salt -> reassemble with no extraction reproduces every
     document's (kind, text, media_ref, offset) sequence in offset order."""
-    rebuilt = reassemble_spans(
-        salted_repartition(pipeline.explode_spans(docs), salt_buckets=16)
-    )
+    rebuilt = reassemble_spans(salted_repartition(pipeline.explode_spans(docs)))
     got = {r.doc_id: [tuple(s) for s in r.spans] for r in rebuilt.collect()}
     expected = {
         r.doc_id: sorted(
@@ -42,7 +40,7 @@ def test_identity_roundtrip_under_salting(spark, docs):
 
 
 def test_span_sequence_equality_vs_python_oracle(spark, docs, sf_dir):
-    got_rows = pipeline.extract_spans(docs, salt_buckets=16).collect()
+    got_rows = pipeline.extract_spans(docs).collect()
     got: dict[str, list] = {}
     for r in got_rows:
         got.setdefault(r.doc_id, []).append((r.kind, r.text, r.media_ref, r.offset))
@@ -60,7 +58,7 @@ def test_span_sequence_equality_vs_python_oracle(spark, docs, sf_dir):
 
 
 def test_extracted_documents_nested_order(spark, docs, sf_dir):
-    nested = pipeline.extracted_documents(docs, salt_buckets=8)
+    nested = pipeline.extracted_documents(docs)
     row = nested.filter(F.size("spans") >= 6).first()
     offsets = [s.offset for s in row.spans]
     assert offsets == sorted(offsets)
@@ -146,7 +144,7 @@ def test_new_context_rebuilds_memoized_columns(spark, docs, monkeypatch):
 def test_typed_receipt_fields(spark, docs):
     """Every receipt row, not whichever comes first: the row order after
     the salted exchange depends on its partition count."""
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     receipts = flat.filter(F.col("receipt").isNotNull())
     rows = receipts.select("receipt.*", "text").collect()
     assert rows
@@ -166,7 +164,7 @@ def test_typed_receipt_fields(spark, docs):
 
 
 def test_typed_check_fields(spark, docs):
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     rows = flat.filter(F.col("check").isNotNull()).select("check.*").collect()
     assert rows
     for c in rows:
@@ -177,7 +175,7 @@ def test_typed_check_fields(spark, docs):
 
 
 def test_empty_ocr_guard_for_unknown_payloads(spark, docs):
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     unknown = flat.filter(F.col("mime") == "application/octet-stream")
     assert unknown.count() > 0
     assert unknown.filter(F.col("extract_error") != "empty_ocr_text").count() == 0
@@ -187,7 +185,7 @@ def test_empty_ocr_guard_for_unknown_payloads(spark, docs):
 
 
 def test_confidence_defaults(spark, docs):
-    flat = pipeline.extract_spans(docs, salt_buckets=8)
+    flat = pipeline.extract_spans(docs)
     parsed = flat.filter(F.col("receipt").isNotNull() | F.col("check").isNotNull())
     assert parsed.filter(F.col("confidence") != 0.8).count() == 0
     text_spans = flat.filter(F.col("kind").isin("text", "html"))

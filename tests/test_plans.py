@@ -29,7 +29,7 @@ def corpus_path(spark, sf_dir, tmp_path_factory):
 
 def test_extract_pipeline_one_scan_one_shuffle(spark, corpus_path):
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     assert scan_count(flat) == 1
     assert exchange_count(flat) == 1  # the salted repartition only
     # repartition by columns only: a fixed count (REPARTITION_BY_NUM)
@@ -62,7 +62,7 @@ def test_salted_exchange_coalesced_to_input(spark, corpus_path):
     than the spark.sql.shuffle.partitions ceiling: AQE sized the
     post-exchange stage, not a constant."""
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     # execute through the SAME Dataset: only its QueryExecution carries
     # the final adaptive plan
     assert flat.collect()
@@ -82,7 +82,7 @@ def test_filtered_extract_single_ocr_stage(spark, corpus_path):
     row. _ocr_udf.asNondeterministic() pins the filter above the single
     OCR projection."""
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     filtered = flat.filter(F.col("receipt").isNotNull()).select(
         "doc_id", "offset", "receipt"
     )
@@ -98,7 +98,7 @@ def test_barrier_filter_tests_null_bit_only(spark, corpus_path):
     referenced by the predicate, Catalyst prunes it and re-inlines the
     whole extraction expression into a pre-projection Filter."""
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     filtered = pipeline.barrier_filter(flat, F.col("receipt").isNotNull()).select(
         "doc_id", "offset", F.col("receipt.merchant_name").alias("m")
     )
@@ -121,7 +121,7 @@ def test_cleanup_chain_materialized_once(spark, corpus_path):
     regexp_replace nodes (clean chain + boilerplate strip), not the
     ~300 of the per-field inlined form."""
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     n = explain_str(flat).count("regexp_replace")
     assert n <= 12, f"cleanup chain re-inlined: {n} regexp_replace nodes"
 
@@ -138,7 +138,7 @@ def test_classify_spans_has_no_arrow_stage(spark, sf_dir):
 
 def test_extracted_documents_two_shuffles_total(spark, corpus_path):
     docs = spark.read.parquet(corpus_path)
-    nested = pipeline.extracted_documents(docs, salt_buckets=16)
+    nested = pipeline.extracted_documents(docs)
     assert scan_count(nested) == 1
     assert exchange_count(nested) == 2  # salt + reassembly hash-agg
 
@@ -166,7 +166,7 @@ def test_classifier_udf_input_is_prefix_projection(spark, corpus_path):
     # the classifier's when-chain reads a decoded substring(...) slice of
     # media_ref, never the whole payload
     docs = spark.read.parquet(corpus_path)
-    flat = pipeline.extract_spans(docs, salt_buckets=16)
+    flat = pipeline.extract_spans(docs)
     plan = explain_str(flat)
     assert "unbase64" in plan and "substring" in plan
 

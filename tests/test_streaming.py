@@ -29,9 +29,11 @@ def test_stream_extract_matches_batch(spark, corpus_path, tmp_path_factory):
     got = spark.sql(
         "SELECT doc_id, offset, kind, mime, text, media_ref FROM stream_out"
     ).collect()
-    batch = pipeline.extract_spans(
-        spark.read.parquet(corpus_path), salt_buckets=16
-    ).select("doc_id", "offset", "kind", "mime", "text", "media_ref").collect()
+    batch = (
+        pipeline.extract_spans(spark.read.parquet(corpus_path))
+        .select("doc_id", "offset", "kind", "mime", "text", "media_ref")
+        .collect()
+    )
     assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
     assert len(got) > 0
 
@@ -136,104 +138,3 @@ def test_stream_dedup_within_watermark_bounds_state(spark, tmp_path_factory):
     # all dups fall inside one watermark horizon -> exactly one row per key
     assert out.count() == 5
     assert {r.k for r in out.collect()} == set(range(5))
-
-
-def test_priority_rate_limited_sink(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("prio"))
-    rows = [(i, i % 3, f"req-{i}") for i in range(30)]  # priorities 0,1,2
-    df = spark.createDataFrame(rows, "req_id long, priority long, body string")
-    # 6 files -> maxFilesPerTrigger=2 gives ~3 admitted windows (the
-    # rate limiter: un-admitted files stay queued in the source)
-    df.repartition(6).write.mode("overwrite").parquet(d)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 2).parquet(d)
-    )
-    batches = []
-
-    def process(batch_df, batch_id):
-        batches.append([(r.priority, r.req_id) for r in batch_df.collect()])
-
-    q = (
-        jobs.priority_rate_limited_sink(
-            stream, process, priority_col="priority", order_col="req_id"
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(batches) >= 2  # admission happened in rate-capped windows
-    seen = [x for b in batches for x in b]
-    assert len(seen) == 30 and len({r for _, r in seen}) == 30  # nothing dropped
-    for b in batches:  # within every admitted window: priority order
-        assert b == sorted(b, key=lambda pr: (-pr[0], pr[1]))
-
-
-def test_stream_stream_join_matches_batch(spark, tmp_path_factory):
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1)
-    lrows = [(i, i % 4, base + dt.timedelta(seconds=20 * i)) for i in range(40)]
-    rrows = [(100 + i, i % 4, base + dt.timedelta(seconds=20 * i + 5))
-             for i in range(40)]
-    ld = str(tmp_path_factory.mktemp("ssj_l"))
-    rd = str(tmp_path_factory.mktemp("ssj_r"))
-    lbatch = spark.createDataFrame(lrows, "event_id long, user_id long, ts timestamp")
-    rbatch = spark.createDataFrame(rrows, "event_id long, user_id long, ts timestamp")
-    lbatch.repartition(4).write.mode("overwrite").parquet(ld)
-    rbatch.repartition(4).write.mode("overwrite").parquet(rd)
-    schema = spark.read.parquet(ld).schema
-    ls = spark.readStream.schema(schema).parquet(ld)
-    rs = spark.readStream.schema(schema).parquet(rd)
-    q = (
-        jobs.stream_stream_join(ls, rs, watermark="30 seconds",
-                                within="INTERVAL 2 MINUTES")
-        .writeStream.format("memory")
-        .queryName("ssj_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.l_event_id, r.r_event_id) for r in spark.table("ssj_t").collect()
-    }
-    expected = {
-        (le, re)
-        for le, lu, lt in lrows
-        for re, ru, rt in rrows
-        if lu == ru and rt <= lt and rt >= lt - dt.timedelta(minutes=2)
-    }
-    assert got == expected and len(expected) > 0
-
-
-def test_stream_static_broadcast_enrichment(spark, corpus_path):
-    """Stream-static join: spans enriched against a static MIME routing
-    dim; result matches the same join done in batch."""
-    dim = spark.createDataFrame(
-        [("application/pdf", "ocr"), ("text/html", "strip"),
-         ("image/png", "ocr"), ("image/jpeg", "ocr")],
-        "mime string, route string",
-    )
-    stream = jobs.stream_extract(spark, corpus_path, max_files_per_trigger=4)
-    q = (
-        jobs.enrich_with_dim(stream, dim, on="mime")
-        .writeStream.format("memory")
-        .queryName("enriched_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "SELECT doc_id, offset, mime, route FROM enriched_out"
-    ).collect()
-    batch = (
-        pipeline.extract_spans(spark.read.parquet(corpus_path))
-        .join(F.broadcast(dim), on="mime", how="left")
-        .select("doc_id", "offset", "mime", "route")
-        .collect()
-    )
-    assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
-    routed = [r for r in got if r.route is not None]
-    assert routed and len(routed) < len(got)

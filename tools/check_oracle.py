@@ -95,7 +95,7 @@ def frame_rows(df) -> list[tuple]:
 def main() -> int:
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
     only = set(sys.argv[1:])
-    spark = get_spark(app_name="check_oracle", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="check_oracle", cpus=8)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -147,10 +147,26 @@ MARKERS = [
 ]
 
 
+#: tokens that differ between runs of the same plan: expression ids,
+#: plan ids, JVM object identities and the corpus cache key (a hash of
+#: the test data's mtime)
+VOLATILE = [
+    (re.compile(r"#\d+"), "#n"),
+    (re.compile(r"plan_id=\d+"), "plan_id=n"),
+    (re.compile(r"(\.[A-Z]\w*)@[0-9a-f]+\b"), r"\1@h"),
+    (re.compile(r"spark_graft_corpus_[0-9a-f]+"), "spark_graft_corpus_<key>"),
+]
+
+
 def formatted_plan(df) -> str:
+    """The formatted plan with its volatile tokens masked, so PLANS.md
+    changes only where a plan does."""
     from nolock_social_ocr_services_spark.plans.inspect import explain_str
 
-    return explain_str(df)
+    plan = explain_str(df)
+    for pat, repl in VOLATILE:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def marker_table(plan: str) -> str:
