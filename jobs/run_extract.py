@@ -9,9 +9,11 @@ Usage (cluster):
         --run-id run-2026-08-16 \
         --num-parts 256
 
-On a cluster the session comes from spark-submit's conf (master/executors
-set by the cluster manager); locally it falls back to session.get_spark's
-host-derived defaults ($SPARK_GRAFT_CPUS / $SPARK_DRIVER_MEM override them).
+Under spark-submit the master and sizing are spark-submit's (--master,
+executors from the cluster manager); session.get_spark adds only the
+pipeline's own confs. Run with plain ``python`` it builds a local-mode
+session sized from the host ($SPARK_GRAFT_CPUS / $SPARK_DRIVER_MEM
+override that).
 The job is resumable: re-submitting with the same --out continues from
 the last committed partition (see nolock_social_ocr_services_spark.lineage).
 """

@@ -5,8 +5,8 @@ parse, DOM heuristics").
 The reference delegates text cleanup to its OCR provider's markdown and
 to ``CleanJsonText`` (JsonExtractionService.cs:193-243); our engine owns
 the text path, so this module implements the classic boilerplate
-heuristics directly, fully vectorized (pandas ``.str`` regex ops run in
-C over the whole Arrow batch — no per-row Python):
+heuristics directly as JVM built-ins (regexp inside whole-stage codegen
+— no Python stage):
 
   1. drop non-content DOM regions: <script> <style> <head> <nav>
      <header> <footer> <aside> <form> (tag-block removal);
@@ -14,20 +14,16 @@ C over the whole Arrow batch — no per-row Python):
   3. unescape the common HTML entities;
   4. trim.
 
-``link_density`` exposes the anchor-text ratio heuristic as a quality
-signal column (boilerplate-heavy pages score high); callers can filter
-on it, which is the classic content/boilerplate discriminator.
+``main_content`` scores candidate DOM blocks by their non-anchor text,
+the classic content/boilerplate discriminator.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 _BLOCK_TAGS = ("script", "style", "head", "nav", "header", "footer", "aside", "form")
 _BLOCK_RE = re.compile(
@@ -45,27 +41,13 @@ _ENTITIES = (
 )
 
 
-def strip_boilerplate_series(html: pd.Series) -> pd.Series:
-    """Vectorized boilerplate strip over a pandas string Series (the
-    pandas-oracle twin of :func:`strip_boilerplate`; tests compare the
-    two)."""
-    s = html.astype("string")
-    s = s.str.replace(_COMMENT_RE, "", regex=True)
-    s = s.str.replace(_BLOCK_RE, "", regex=True)
-    s = s.str.replace(_TAG_RE, "", regex=True)
-    for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    return s.str.strip()
-
-
 def strip_boilerplate(col: Column) -> Column:
     """NULL-safe boilerplate strip — pure built-ins (JVM regexp, inside
     whole-stage codegen; no Python worker in this stage).
 
-    Same rule chain and patterns as :func:`strip_boilerplate_series`:
-    comments out, non-content DOM blocks out (backreferenced close tag),
-    remaining tags out, common entities unescaped (&amp; last so &amp;lt;
-    does not double-decode), trim. The pipeline builds this Column once
+    The rule chain: comments out, non-content DOM blocks out
+    (backreferenced close tag), remaining tags out, common entities
+    unescaped (&amp; last so &amp;lt; does not double-decode), trim. The pipeline builds this Column once
     per SparkContext (``pipeline._extracted_text``).
     """
     c = F.regexp_replace(col, _COMMENT_RE.pattern, "")
@@ -138,21 +120,3 @@ def main_content(col: Column) -> Column:
             F.size(blocks).alias("n_blocks"),
         )
     )
-
-
-def link_density(col: Column) -> Column:
-    """Anchor-text chars / total text chars — pure built-ins (JVM-side).
-
-    High values flag boilerplate-dominated spans (nav/footer link farms).
-    """
-    anchor_text = F.array_join(
-        F.transform(
-            F.split(col, "<a\\b"),
-            lambda seg: F.regexp_extract(seg, "(?s)[^>]*>(.*?)</a", 1),
-        ),
-        "",
-    )
-    total = F.length(F.regexp_replace(col, "<[^>]+>", ""))
-    return F.when(
-        col.isNull() | (total == 0), F.lit(None).cast("double")
-    ).otherwise(F.length(anchor_text) / total)

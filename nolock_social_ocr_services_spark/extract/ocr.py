@@ -4,7 +4,7 @@ Architectural stand-in for the reference's external OCR call
 (MistralOcrApiService.SendRequestAsync, MistralOcrApiService.cs:127-192):
 a scalar Arrow UDF, exactly where a real engine would put the network
 call — batches arrive via Arrow, results leave via Arrow, no per-row
-Python beyond vectorized pandas ops. The OCR text is a pure
+Python beyond one f-string per markdown. The OCR text is a pure
 function of ``md5(media_ref)`` (computed JVM-side with the built-in
 ``md5`` before the UDF), so goldens are stable, the pipeline has zero
 network dependencies, and the DuckDB oracle can recompute every field.
@@ -26,8 +26,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..corpus import DUCK, SPARK, Dialect
+from ..corpus import DUCK, Dialect
 from ..session import per_context
+from ..trie import OCTET_STREAM
 
 OCR_MODEL = "synth-ocr-v1"
 
@@ -79,90 +80,27 @@ def _money(c: int) -> str:
     return f"{c // 100}.{c % 100:02d}"
 
 
-def _digit_matrix(h_list: "list[str] | np.ndarray") -> np.ndarray:
-    """(n, 20) uint8 digit values: per row, the digits of the 32-char md5
-    hex in order, right-padded with 0 — the NumPy form of ``digits_of``.
-
-    One frombuffer + one stable argsort replaces the per-batch pandas
-    regex strip (profiled 2.8 µs/row -> ~0.1 µs/row): sorting the boolean
-    'is not a digit' stably moves the digit characters to the front of
-    each row without reordering them.
-    """
-    n = len(h_list)
-    if n == 0:
-        return np.zeros((0, 20), dtype=np.uint8)
-    try:
-        joined = "".join(h_list).encode("ascii")
-    except UnicodeEncodeError:
-        # arbitrary text reaches the public helper; non-ASCII chars are
-        # non-digits (the old regex stripped them) — take the ragged
-        # path with replacement, never abort the batch.
-        joined = None
-    if joined is None or len(joined) != n * 32:  # not all md5 hex
-        lens = np.fromiter((len(s) for s in h_list), dtype=np.int64, count=n)
-        if joined is not None and bool(np.all((lens == 0) | (lens == 32))):
-            # the _ocr_batch shape: md5 or '' (non-media row) — compute
-            # the nonempty block and scatter (empty row -> all-'0' row,
-            # matching the old strip+pad semantics)
-            nonempty = lens == 32
-            out = np.zeros((n, 20), dtype=np.uint8)
-            out[nonempty] = _digit_matrix(
-                [h_list[i] for i in np.flatnonzero(nonempty)]
-            )
-            return out
-        rows = [  # fully ragged — per-row slow path
-            bytes(
-                c for c in s.encode("ascii", "replace") if 48 <= c <= 57
-            )[:20].ljust(20, b"0")
-            for s in h_list
-        ]
-        return np.frombuffer(b"".join(rows), dtype=np.uint8).reshape(n, 20) - ord("0")
-    b = np.frombuffer(joined, dtype=np.uint8).reshape(n, 32).copy()
+def _digit_matrix(h: np.ndarray) -> np.ndarray:
+    """(n, 20) uint8: each md5 hex string's digits in order, right-padded
+    with 0. A stable argsort of 'is not a digit' moves each row's digits
+    to its front without reordering them."""
+    b = np.frombuffer("".join(h).encode("ascii"), dtype=np.uint8).reshape(-1, 32)
     not_digit = (b < 48) | (b > 57)
-    order = np.argsort(not_digit, axis=1, kind="stable")
-    b = np.take_along_axis(b, order, axis=1)
-    n_digits = 32 - not_digit.sum(axis=1)
-    b[np.arange(32)[None, :] >= n_digits[:, None]] = ord("0")
+    b = np.take_along_axis(b, np.argsort(not_digit, axis=1, kind="stable"), axis=1)
+    b[np.arange(32) >= 32 - not_digit.sum(axis=1)[:, None]] = ord("0")
     return b[:, :20] - ord("0")
-
-
-def _matrix_of(h: pd.Series, digits: pd.Series | None) -> np.ndarray:
-    """Digit matrix from the md5 series, or from a precomputed
-    ``digits_of`` string series (already exactly 20 chars/row)."""
-    if digits is None:
-        return _digit_matrix(h.astype(object).to_numpy())
-    n = len(digits)
-    if n == 0:
-        return np.zeros((0, 20), dtype=np.uint8)
-    joined = "".join(digits.astype(object).to_numpy()).encode("ascii")
-    return np.frombuffer(joined, dtype=np.uint8).reshape(n, 20) - ord("0")
 
 
 _P6 = np.array([100000, 10000, 1000, 100, 10, 1], dtype=np.int64)
 
 
-def digits_of(h: pd.Series) -> pd.Series:
-    """First 20 of (strip non-digits from md5 hex, right-pad '0') — the
-    shared derivation, as a string series (the markdown builders consume
-    the uint8 matrix directly; this form feeds tests and callers)."""
-    dig = _digit_matrix(h.astype(object).to_numpy())
-    out = np.frombuffer((dig + ord("0")).tobytes(), dtype="S20").astype("U20")
-    return pd.Series(out, index=h.index, dtype="string")
-
-
-def receipt_markdown(h: pd.Series, digits: pd.Series | None = None) -> pd.Series:
-    """Row-at-a-time f-string assembly over vectorized NumPy fields.
-
-    The original all-pandas form built the markdown in ~50 whole-series
-    string-concat passes (9 item lines x ~6 ops each); at 4096-row Arrow
-    batches that was 80% of the OCR stage's Python time (54 µs/row,
-    tools/profile_ocr_batch.py). One f-string per row over precomputed
-    int arrays is ~8x cheaper and byte-identical (mirrors the independent
-    pure-python oracle, tests/pandas_oracle.py:_ocr_text).
+def receipt_markdown(h: np.ndarray, dig: np.ndarray) -> list[str]:
+    """Receipt markdown of md5 strings ``h`` with digit matrix ``dig``:
+    one f-string per row over int fields computed once per batch, ~8x
+    cheaper than whole-series pandas string ops and byte-identical to the
+    independent oracle (tests/pandas_oracle.py:_ocr_text).
     """
-    dig = _matrix_of(h, digits)
     d = dig.astype(np.int64)  # uint8 arithmetic would wrap (e.g. *100)
-    hv = h.astype(object).to_numpy()
     # .tolist() once: indexing a Python list of ints in the row loop is
     # ~3x cheaper than pulling np.int64 scalars out per row
     mm = (1 + (d[:, 0] * 10 + d[:, 1]) % 12).tolist()
@@ -178,8 +116,8 @@ def receipt_markdown(h: pd.Series, digits: pd.Series | None = None) -> pd.Series
     d4_8 = (d[:, 4:8] @ _P6[2:]).tolist()
     phone = _digit_str(dig[:, 6:10]).tolist()
     out = []
-    for r in range(len(hv)):
-        hx = hv[r]
+    for r in range(len(h)):
+        hx = h[r]
         m = mode[r]
         pay = INVALID_PAYMENT if m == 1 else PAYMENT_CYCLE[pay_i[r]]
         ni = n_items[r]
@@ -204,13 +142,12 @@ def receipt_markdown(h: pd.Series, digits: pd.Series | None = None) -> pd.Series
                     f" @ {_money(unit)} = {_money(qty * unit)}"
                 )
         out.append(md)
-    return pd.Series(out, index=h.index, dtype="string")
+    return out
 
 
-def check_markdown(h: pd.Series, digits: pd.Series | None = None) -> pd.Series:
-    dig = _matrix_of(h, digits)
+def check_markdown(h: np.ndarray, dig: np.ndarray) -> list[str]:
+    """Check markdown, built like :func:`receipt_markdown`."""
     d = dig.astype(np.int64)  # uint8 arithmetic would wrap
-    hv = h.astype(object).to_numpy()
     amount_c = (d[:, 6:12] @ _P6).tolist()
     signed = (d[:, 12] % 2).tolist()
     mode = (d[:, 19] % 4).tolist()
@@ -221,8 +158,8 @@ def check_markdown(h: pd.Series, digits: pd.Series | None = None) -> pd.Series:
     routing = _digit_str(dig[:, 0:9]).tolist()
     account = _digit_str(dig[:, 10:18]).tolist()
     out = []
-    for r in range(len(hv)):
-        hx = hv[r]
+    for r in range(len(h)):
+        hx = h[r]
         m = mode[r]
         md = (
             f"# Check\n\nCheck Number: {number[r]}\nPayee: P-{hx[8:16]}"
@@ -237,7 +174,7 @@ def check_markdown(h: pd.Series, digits: pd.Series | None = None) -> pd.Series:
                 f"\nAccount Type: {acct}\nMemo: memo-{hx[28:32]}"
             )
         out.append(md)
-    return pd.Series(out, index=h.index, dtype="string")
+    return out
 
 
 def _digit_str(cols: np.ndarray) -> np.ndarray:
@@ -246,16 +183,6 @@ def _digit_str(cols: np.ndarray) -> np.ndarray:
     return np.frombuffer(
         np.ascontiguousarray(cols + ord("0")).tobytes(), dtype=f"S{k}"
     ).astype(f"U{k}")
-
-
-def n_pages_of(h: pd.Series, digits: pd.Series | None = None) -> pd.Series:
-    if digits is None:
-        digits = digits_of(h)
-    return 1 + digits.str.slice(16, 17).astype(int) % 3
-
-
-def appendix_markdown(h: pd.Series, page: int) -> pd.Series:
-    return f"Page {page} appendix " + h.str.slice(24, 28)
 
 
 OCR_RESULT_SCHEMA = T.StructType(
@@ -275,48 +202,35 @@ OCR_RESULT_SCHEMA = T.StructType(
 
 
 def _ocr_batch(h: pd.Series, mime: pd.Series) -> pd.DataFrame:
-    """One Arrow batch of synthetic OCR. ``h`` = md5(media_ref) or NULL
-    for non-media rows (the Arrow transfer then carries only nulls for
-    those rows — see run_ocr). Returns FLAT columns only; see
-    OCR_RESULT_SCHEMA."""
-    hs = h.astype("string").fillna("")
-    mime = mime.astype("string")
-    is_receipt = mime.str.startswith("image/").fillna(False) & (hs != "")
-    is_check = (mime == "application/pdf").fillna(False) & (hs != "")
-    known = (is_receipt | is_check).to_numpy()
-    is_media = (hs != "").to_numpy()
-    n = len(hs)
-
-    digits = digits_of(hs)
-    main = pd.Series([""] * n, dtype="string")
-    if is_receipt.any():
-        main[is_receipt] = receipt_markdown(hs[is_receipt], digits[is_receipt])
-    if is_check.any():
-        main[is_check] = check_markdown(hs[is_check], digits[is_check])
-    npages = np.zeros(n, dtype="int32")
-    app1 = pd.Series([""] * n, dtype="string")
-    app2 = pd.Series([""] * n, dtype="string")
-    tokvals = np.zeros(n, dtype="int32")
-    if known.any():
-        kn_idx = pd.Series(known)
-        npages[known] = n_pages_of(hs[kn_idx], digits[kn_idx]).to_numpy()
-        app1[kn_idx] = appendix_markdown(hs[kn_idx], 1)
-        app2[kn_idx] = appendix_markdown(hs[kn_idx], 2)
-        tokvals[known] = (100 + digits[kn_idx].str.slice(17, 19).astype(int)).to_numpy()
-    tokens = pd.Series(pd.array(tokvals, dtype="Int32"))
-    tokens[~known] = pd.NA
-    # media + unknown payload -> npages 0 (MistralOcrResult.Empty
-    # sentinel, MistralOcrResult.cs:11); non-media rows -> NULL npages.
-    np_out = pd.Series(pd.array(npages, dtype="Int32"))
-    np_out[~is_media] = pd.NA
+    """One Arrow batch of synthetic OCR over ``h`` = md5(media_ref), NULL
+    on non-media rows, and ``mime``; FLAT columns (OCR_RESULT_SCHEMA).
+    Rows with an md5 and an image/* (receipt) or pdf (check) mime render
+    from one digit matrix; another media row gets npages 0 and NULLs
+    (MistralOcrResult.Empty, MistralOcrResult.cs:11), a non-media row
+    NULL in every column."""
+    has_h = h.notna().to_numpy()
+    m = mime.astype("string")
+    is_receipt = has_h & m.str.startswith("image/").fillna(False).to_numpy(bool)
+    is_check = has_h & (m == "application/pdf").fillna(False).to_numpy(bool)
+    known = is_receipt | is_check
+    hk = h.to_numpy(dtype=object)[known]
+    dig = _digit_matrix(hk)
+    rec = is_receipt[known]
+    at = np.flatnonzero(known)
+    main, app1, app2 = np.full((3, len(h)), None, dtype=object)
+    main[at[rec]] = receipt_markdown(hk[rec], dig[rec])
+    main[at[~rec]] = check_markdown(hk[~rec], dig[~rec])
+    app1[at] = [f"Page 1 appendix {hx[24:28]}" for hx in hk]
+    app2[at] = [f"Page 2 appendix {hx[24:28]}" for hx in hk]
+    npages, tokens = np.zeros((2, len(h)), dtype=np.int32)
+    npages[at] = 1 + dig[:, 16] % 3
+    tokens[at] = 100 + dig[:, 17:19] @ _P6[4:]
     return pd.DataFrame(
         {
-            "main_md": main.where(pd.Series(known), None),
-            "app1_md": app1.where(pd.Series(known), None),
-            "app2_md": app2.where(pd.Series(known), None),
-            "npages": np_out,
-            "model": pd.Series(np.where(known, OCR_MODEL, None), dtype=object),
-            "tokens": tokens,
+            "main_md": main, "app1_md": app1, "app2_md": app2,
+            "npages": pd.arrays.IntegerArray(npages, ~has_h),
+            "model": np.where(known, OCR_MODEL, None),
+            "tokens": pd.arrays.IntegerArray(tokens, ~known),
         }
     )
 
@@ -399,8 +313,6 @@ def _page_text(pages_col: str) -> Column:
 
 # -- OCR result metadata: page regions, dimensions, meta map, timing ---------
 
-OCTET_STREAM_MIME = "application/octet-stream"
-
 IMAGE_REGION_SCHEMA = T.ArrayType(
     T.StructType(
         [
@@ -419,13 +331,6 @@ IMAGE_REGION_SCHEMA = T.ArrayType(
             ),
         ]
     )
-)
-
-DIMS_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("height", T.IntegerType(), False),
-    ]
 )
 
 
@@ -450,7 +355,7 @@ def with_ocr_metadata(
     known = (
         F.col(media_ref_col).isNotNull()
         & mime.isNotNull()
-        & (mime != OCTET_STREAM_MIME)
+        & (mime != OCTET_STREAM)
     )
     stripped = F.regexp_replace(F.md5(F.col(media_ref_col)), "[^0-9]", "")
     dgc = F.substring(F.concat(stripped, F.lit("0" * 20)), 1, 20)
@@ -511,18 +416,14 @@ def _sql_digits(d: Dialect, href: str) -> str:
     return f"substr(concat({stripped}, '00000000000000000000'), 1, 20)"
 
 
-def _sql_money(cents: str) -> str:
+def sql_money(cents: str) -> str:
+    """SQL rendering integer cents as 'dollars.cc' (the ``_money`` rule)."""
     s = f"CAST(CAST({cents} AS BIGINT) AS STRING)"
     padded = f"(CASE WHEN length({s}) < 3 THEN lpad({s}, 3, '0') ELSE {s} END)"
     return (
         f"concat(substr({padded}, 1, length({padded}) - 2), '.', "
         f"substr({padded}, length({padded}) - 1, 2))"
     )
-
-
-def sql_money(cents: str) -> str:
-    """Public alias for the shared money-rendering SQL fragment."""
-    return _sql_money(cents)
 
 
 def ocr_field_exprs(d: Dialect, h: str = "h") -> dict[str, str]:
@@ -551,8 +452,8 @@ def ocr_field_exprs(d: Dialect, h: str = "h") -> dict[str, str]:
             f"concat('2024-', lpad(CAST(1 + CAST(substr({dg}, 1, 2) AS INT) % 12 AS STRING), 2, '0'),"
             f" '-', lpad(CAST(1 + CAST(substr({dg}, 3, 2) AS INT) % 28 AS STRING), 2, '0'))"
         ),
-        "total_amount": _sql_money(f"substr({dg}, 5, 6)"),
-        "tax_amount": _sql_money(f"substr({dg}, 11, 4)"),
+        "total_amount": sql_money(f"substr({dg}, 5, 6)"),
+        "tax_amount": sql_money(f"substr({dg}, 11, 4)"),
         "payment_method": (
             f"CASE WHEN {mode} = 1 THEN NULL ELSE {pay_valid} END"
         ),
@@ -562,7 +463,7 @@ def ocr_field_exprs(d: Dialect, h: str = "h") -> dict[str, str]:
         "items_count": f"1 + CAST(substr({dg}, 16, 1) AS INT) % 9",
         "check_number": f"substr({dg}, 1, 6)",
         "payee": f"concat('P-', substr({h}, 9, 8))",
-        "check_amount": _sql_money(f"substr({dg}, 7, 6)"),
+        "check_amount": sql_money(f"substr({dg}, 7, 6)"),
         "bank_name": f"concat('B-', substr({h}, 17, 8))",
         "is_signed": f"CAST(substr({dg}, 13, 1) AS INT) % 2 = 1",
         "n_pages": f"1 + CAST(substr({dg}, 17, 1) AS INT) % 3",
@@ -577,7 +478,7 @@ def ocr_field_exprs(d: Dialect, h: str = "h") -> dict[str, str]:
             f" ' Main St')"
         ),
         "merchant_phone": f"concat('555-', substr({dg}, 7, 4))",
-        "subtotal": _sql_money(f"greatest({total_c} - {tax_c}, 0)"),
+        "subtotal": sql_money(f"greatest({total_c} - {tax_c}, 0)"),
         "subtotal_cents": f"greatest({total_c} - {tax_c}, 0)",
         "item_qty": f"(1 + (CAST(substr({dg}, 1, 2) AS INT) + 3 * i) % 9)",
         "item_unit_cents": (
@@ -612,8 +513,8 @@ def sql_receipt_item_line(d: Dialect, e: dict[str, str]) -> str:
     qty, unit = e["item_qty"], e["item_unit_cents"]
     return (
         f"concat(chr(10), 'Item ', CAST(i AS STRING), ': I-', {e['item_desc']},"
-        f" ' x', CAST({qty} AS STRING), ' @ ', {_sql_money(unit)},"
-        f" ' = ', {_sql_money(f'{qty} * {unit}')})"
+        f" ' x', CAST({qty} AS STRING), ' @ ', {sql_money(unit)},"
+        f" ' = ', {sql_money(f'{qty} * {unit}')})"
     )
 
 
@@ -677,7 +578,6 @@ __all__ = [
     "ACCOUNT_TYPE_CYCLE",
     "INVALID_PAYMENT",
     "INVALID_ACCOUNT_TYPE",
-    "SPARK",
     "DUCK",
 ]
 

@@ -9,8 +9,10 @@ strategy #3), so this module implements the protocol explicitly:
   Iceberg partitions; hash-of-key keeps the unit assignment stable
   across runs and cluster sizes);
 * each unit is extracted and written to ``data/part_id=K/`` with
-  idempotent overwrite; the same write job counts the unit's documents
-  in, spans out and trie hits per MIME with ``DataFrame.observe``. THEN
+  idempotent overwrite (a document without spans keeps one NULL-offset
+  row, so every document is in the output); the same write job counts
+  the unit's documents in, spans out and trie hits per MIME with
+  ``DataFrame.observe``. THEN
   a lineage row built on the driver from those counts (FIXTURES.md §5,
   overwritten the same way under ``_lineage/part_id=K/``) and a
   manifest marker are committed —
@@ -37,7 +39,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import extract_spans
+from .pipeline import extract_rows
 from .trie import OCTET_STREAM, lenient_trie
 
 
@@ -130,24 +132,27 @@ def run_extract_job(
         unit_dirs = {p: f"{out_dir}/data/part_id={p}" for p in batch}
         # a killed attempt may have left files in these uncommitted units;
         # clearing them means that after the write a unit has a directory
-        # exactly when it has spans.
+        # exactly when it has documents.
         for path in unit_dirs.values():
             shutil.rmtree(path, ignore_errors=True)
-        # the write job counts each unit's documents on its input (a
-        # document without spans has no flat row) and its spans and trie
-        # hits on its output, so lineage needs no re-read of the data
+        # the write job counts each unit's documents on its input and its
+        # spans (rows with an offset: a document without spans has one
+        # NULL-offset row) and trie hits on its output, so lineage needs
+        # no re-read of the data
         docs_in, spans_out = Observation(), Observation()
-        per_unit = [F.count_if(F.col("part_id") == p).alias(str(p)) for p in batch]
+        unit, has_offset = F.col("part_id"), F.col("offset").isNotNull()
         batch_docs = (
-            docsp.filter(F.col("part_id").isin(batch))
-            .observe(docs_in, *per_unit)
+            docsp.filter(unit.isin(batch))
+            .observe(docs_in, *[F.count_if(unit == p).alias(str(p)) for p in batch])
             .drop("part_id")
         )
-        flat = extract_spans(batch_docs)
+        flat = extract_rows(batch_docs)
         # part_id is a pure function of doc_id -> re-derive after
         # extraction and write all units of the batch in ONE job.
         flat_p = with_part_id(flat, num_parts).observe(
-            spans_out, *per_unit, *_mime_hits(batch)
+            spans_out,
+            *[F.count_if((unit == p) & has_offset).alias(str(p)) for p in batch],
+            *_mime_hits(batch),
         )
         (
             flat_p.write.mode("overwrite")
@@ -156,7 +161,7 @@ def run_extract_job(
             .parquet(f"{out_dir}/data")
         )
         # the partitioned write makes no directory for a unit without
-        # spans; an empty file keeps every committed unit readable.
+        # documents; an empty file keeps every committed unit readable.
         for p, path in unit_dirs.items():
             if not os.path.exists(path):
                 spark.createDataFrame([], flat.schema).write.parquet(path)
@@ -193,7 +198,9 @@ def _write_manifest(
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed extraction output only (uncommitted dirs are invisible)."""
+    """Committed extraction output only (uncommitted dirs are invisible):
+    one row per span, and for each document without spans one row whose
+    NULL ``offset`` (and NULL span fields) stands for it."""
     done = committed_parts(spark, out_dir)
     df = spark.read.option("basePath", f"{out_dir}/data").parquet(
         *[f"{out_dir}/data/part_id={p}" for p in sorted(done)]

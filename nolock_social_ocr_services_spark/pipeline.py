@@ -100,9 +100,11 @@ def _has_offset() -> Column:
     return F.col("offset").isNotNull()
 
 
-def _extract(docs: DataFrame) -> DataFrame:
+def extract_rows(docs: DataFrame) -> DataFrame:
     """Every layer over ``explode_spans(docs)``: one row per span plus
-    the NULL-offset row of each document without spans.
+    the NULL-offset row of each document without spans, so every input
+    document has at least one row (``lineage.run_extract_job`` writes
+    these rows).
 
     Every Column comes from a ``session.per_context`` memo, and each
     layer adds its columns in one projection per level it needs (OCR:
@@ -151,7 +153,7 @@ def extract_spans(docs: DataFrame) -> DataFrame:
     it needs, so building this DataFrame again is a few hundred py4j
     calls, not thousands. The plan is the same either way.
     """
-    return _extract(docs).filter(_has_offset())
+    return extract_rows(docs).filter(_has_offset())
 
 
 def extracted_documents(docs: DataFrame) -> DataFrame:
@@ -160,6 +162,6 @@ def extracted_documents(docs: DataFrame) -> DataFrame:
     input document comes out exactly once; one whose ``spans`` is empty
     or NULL comes out with ``spans = []``."""
     return reassemble_spans(
-        _extract(docs), span_fields=("kind", "text", "media_ref", "offset")
+        extract_rows(docs), span_fields=("kind", "text", "media_ref", "offset")
     )
 

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the extraction pipeline.
 
-Local-mode knobs here are the sandbox stand-ins for cluster settings; the
-same builder works under ``spark-submit --py-files`` on a real cluster
-(executor count then comes from the cluster manager, not ``master``).
+Local-mode sizing here applies to plain ``python`` runs; under
+``spark-submit --py-files`` on a real cluster the launcher's master and
+sizing stand, and only the pipeline's own confs are added.
 """
 
 from __future__ import annotations
@@ -28,39 +28,42 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    The driver heap defaults to $SPARK_DRIVER_MEM, else half the host's
-    physical memory.
+    Under ``spark-submit`` the launcher has started the JVM with its own
+    master and sizing (it hands PySpark the gateway port), so this only
+    adds the pipeline's own confs. Run from plain ``python``, it builds
+    a local-mode session sized from the host: the driver heap defaults
+    to $SPARK_DRIVER_MEM, else half the host's physical memory.
 
     Args:
         cpus: local[] thread count; defaults to $SPARK_GRAFT_CPUS, else
             the host's CPU count. It is also spark.sql.shuffle.partitions,
             the task-count ceiling after both pipeline exchanges (AQE
-            coalesces below it).
+            coalesces below it). Ignored under spark-submit.
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    builder = SparkSession.builder.appName(app_name)
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        if cpus is None:
+            cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config("spark.sql.shuffle.partitions", str(cpus))
+            .config("spark.default.parallelism", str(cpus))
+            .config(
+                "spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+            )
+            # shuffle/spill scratch on tmpfs: local-mode shuffles are disk
+            # round-trips; a spinning/virtio /tmp adds minutes of jitter
+            .config(
+                "spark.local.dir",
+                os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"),
+            )
+        )
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        builder.config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # large text payloads -> keep Arrow batches moderate (SURVEY.md §4 O6)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
-        )
-        # shuffle/spill scratch on tmpfs: local-mode shuffles are disk
-        # round-trips; a spinning/virtio /tmp adds minutes of jitter
-        .config(
-            "spark.local.dir",
-            os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/spark-local"),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

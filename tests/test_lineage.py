@@ -129,8 +129,8 @@ def test_kill_before_manifest_leaves_one_lineage_row_per_unit(
 
 
 def test_doc_count_includes_documents_without_spans(spark, tmp_path):
-    """doc_count counts the documents read for a unit, not those with a
-    flat output row: a document whose spans are [] or NULL has none."""
+    """A document whose spans are [] or NULL counts in doc_count, not in
+    span_count, and read_output has one row for it with NULL span fields."""
     schema = (
         "doc_id string, spans array<struct<"
         "kind:string,text:string,media_ref:string,offset:int>>"
@@ -146,6 +146,11 @@ def test_doc_count_includes_documents_without_spans(spark, tmp_path):
     # no media span anywhere: every unit's histogram is empty, whether
     # its spans are all text or it has none
     assert [r.trie_hits for r in lin.collect()] == [{}, {}]
+    # every document is in the output: a span-less one as one row whose
+    # span fields are NULL
+    out_rows = _rows(lineage.read_output(spark, out))
+    assert [r[0] for r in out_rows] == ["e1", "n1", "t1"]
+    assert [r[1:] for r in out_rows[:2]] == [(None,) * 5] * 2
 
 
 def test_one_batch_runs_in_four_spark_jobs(spark, docs, tmp_path):

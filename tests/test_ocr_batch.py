@@ -1,20 +1,22 @@
 """No-JVM unit tests for the synthetic-OCR batch generators.
 
-The markdown builders were rewritten from whole-series pandas ops to a
-NumPy digit matrix + per-row f-strings (extract/ocr.py); these tests pin
-them DIRECTLY against the independent pure-python oracle
-(tests/pandas_oracle.py:_ocr_text) and exercise the _digit_matrix fast /
-scatter / ragged paths, without paying for a SparkSession.
+The batch builds one NumPy digit matrix over the md5s it renders and
+per-row f-strings from it (extract/ocr.py); these tests pin it DIRECTLY
+against the independent pure-python oracle
+(tests/pandas_oracle.py:_ocr_text), without paying for a SparkSession.
 """
 
 from __future__ import annotations
 
 import hashlib
+import re
 
 import numpy as np
 import pandas as pd
 
+from nolock_social_ocr_services_spark.corpus import IMAGE_MIME_CYCLE
 from nolock_social_ocr_services_spark.extract import ocr
+from nolock_social_ocr_services_spark.trie import OCTET_STREAM
 
 from tests.pandas_oracle import _ocr_text
 
@@ -58,9 +60,44 @@ def test_ocr_batch_null_and_unknown_rows():
     assert out["main_md"][2].startswith("# Receipt")
 
 
+def test_mixed_shuffled_batch_matches_oracle():
+    """More than one Arrow batch's worth of receipt, check, octet-stream
+    and non-media rows, shuffled, under a non-default index: every row
+    against _ocr_text and the NULL / npages-0 sentinels."""
+    rng = np.random.default_rng(7)
+    mimes = [*IMAGE_MIME_CYCLE, "application/pdf", OCTET_STREAM, None]
+    cases = []
+    for i in range(5000):
+        m = mimes[rng.integers(len(mimes))]
+        ref = None if m is None else f"mix-{i}"
+        cases.append((ref, m))
+    h = pd.Series([None if r is None else _md5(r) for r, _ in cases],
+                  index=rng.permutation(len(cases)) + 10_000, dtype=object)
+    mime = pd.Series([m for _, m in cases], index=h.index, dtype=object)
+    out = ocr._ocr_batch(h, mime)
+    assert len(out) == len(cases)
+    rows = out.astype(object).where(out.notna(), None).to_dict("records")
+    for (ref, m), row in zip(cases, rows):
+        if m is None:  # non-media row: every column NULL
+            assert all(v is None for v in row.values()), row
+        elif m == OCTET_STREAM:  # unknown payload: npages 0, no pages
+            assert row["npages"] == 0, row
+            assert {k: v for k, v in row.items() if k != "npages"} == dict.fromkeys(
+                ("main_md", "app1_md", "app2_md", "model", "tokens"))
+        else:
+            hx = _md5(ref)
+            dg = (re.sub(r"[^0-9]", "", hx) + "0" * 20)[:20]
+            got = _pages_joined(row["main_md"], row["app1_md"],
+                                row["app2_md"], row["npages"])
+            assert got == _ocr_text(ref, m), (ref, m)
+            assert row["npages"] == 1 + int(dg[16]) % 3
+            assert row["tokens"] == 100 + int(dg[17:19])
+            assert row["model"] == ocr.OCR_MODEL
+
+
 def test_digit_matrix_paths_agree():
-    """fast (all 32-char), scatter (md5-or-empty), ragged — same digits."""
-    hxs = [_md5(f"r{i}") for i in range(64)]
+    """The md5 digit matrix: each row's digits in order, 0-padded."""
+    hxs = np.array([_md5(f"r{i}") for i in range(64)], dtype=object)
 
     def ref_digits(s: str) -> list[int]:
         d = [int(c) for c in s if c.isdigit()][:20]
@@ -69,30 +106,6 @@ def test_digit_matrix_paths_agree():
     fast = ocr._digit_matrix(hxs)
     assert fast.shape == (64, 20)
     assert fast.tolist() == [ref_digits(s) for s in hxs]
-
-    mixed = ["", hxs[0], "", hxs[1]]
-    scatter = ocr._digit_matrix(mixed)
-    assert scatter.tolist() == [ref_digits(s) for s in mixed]
-
-    ragged = ["abc123", "", "9" * 40, hxs[2]]
-    slow = ocr._digit_matrix(ragged)
-    assert slow.tolist() == [ref_digits(s) for s in ragged]
-
-
-def test_digits_of_series_roundtrip():
-    h = pd.Series([_md5("a"), "", _md5("b")], dtype="string",
-                  index=[5, 7, 9])  # non-default index must survive
-    d = ocr.digits_of(h)
-    assert list(d.index) == [5, 7, 9]
-    assert d[7] == "0" * 20
-    assert len(d[5]) == 20 and d[5].isdigit()
-
-
-def test_markdown_builders_accept_precomputed_digits():
-    h = pd.Series([_md5(f"q{i}") for i in range(32)], dtype="string")
-    digits = ocr.digits_of(h)
-    assert ocr.receipt_markdown(h).equals(ocr.receipt_markdown(h, digits))
-    assert ocr.check_markdown(h).equals(ocr.check_markdown(h, digits))
 
 
 def test_money_rendering_no_float():
@@ -109,20 +122,3 @@ def test_digit_str_blocks():
     # non-contiguous slice (the builders pass strided views)
     wide = np.arange(40, dtype=np.uint8).reshape(2, 20) % 10
     assert ocr._digit_str(wide[:, 3:6]).tolist() == ["345", "345"]
-
-
-def test_digit_matrix_non_ascii_degrades_not_crashes():
-    """Arbitrary text can reach the public helper: non-ASCII chars are
-    non-digits (the regex form stripped them) — one accented row must
-    not UnicodeEncodeError the whole Arrow batch."""
-
-    def ref_digits(s: str) -> list[int]:
-        d = [int(c) for c in s if c.isdigit() and c.isascii()][:20]
-        return d + [0] * (20 - len(d))
-
-    rows = ["café123", "", "résumé", "42", "é" * 32]
-    out = ocr._digit_matrix(rows)
-    assert out.tolist() == [ref_digits(s) for s in rows]
-    # and through the public Series API
-    d = ocr.digits_of(pd.Series(rows, dtype="string"))
-    assert d[0].startswith("123")

@@ -1,16 +1,22 @@
 """Microbenchmark the synthetic-OCR pandas batch (no Spark): where does
-the ArrowEvalPython stage's Python time actually go? Run on a quiet host
-(between scaling-campaign runs)."""
+the ArrowEvalPython stage's Python time actually go? Prints the best of
+five wall times for the full batch, the digit matrix and each markdown
+builder.
+
+    python tools/profile_ocr_batch.py [rows]
+"""
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from nolock_social_ocr_services_spark.extract import ocr  # noqa: E402
 
@@ -41,20 +47,16 @@ def main() -> None:
     print(f"batch n={n}")
     timeit("full _ocr_batch", lambda: ocr._ocr_batch(h, mime))
 
-    hs = h.astype("string").fillna("")
-    timeit("digits_of", lambda: ocr.digits_of(hs))
-    digits = ocr.digits_of(hs)
-    is_r = mime.astype("string").str.startswith("image/").fillna(False) & (hs != "")
-    hr, dr = hs[is_r], digits[is_r]
+    # the batch's own split: md5s of the rendered rows, their digit matrix
+    is_r = mime.str.startswith("image/").fillna(False).to_numpy(bool)
+    is_c = (mime == "application/pdf").fillna(False).to_numpy(bool)
+    hv = h.to_numpy(dtype=object)
+    hk = hv[is_r | is_c]
+    timeit("_digit_matrix", lambda: ocr._digit_matrix(hk))
+    hr, hc = hv[is_r], hv[is_c]
+    dr, dc = ocr._digit_matrix(hr), ocr._digit_matrix(hc)
     timeit("receipt_markdown", lambda: ocr.receipt_markdown(hr, dr))
-    is_c = (mime.astype("string") == "application/pdf").fillna(False) & (hs != "")
-    hc, dc = hs[is_c], digits[is_c]
     timeit("check_markdown", lambda: ocr.check_markdown(hc, dc))
-    timeit("n_pages_of", lambda: ocr.n_pages_of(hs, digits))
-    timeit("appendix x2", lambda: (ocr.appendix_markdown(hs, 1),
-                                   ocr.appendix_markdown(hs, 2)))
-    # breakdown: matrix build vs f-string assembly
-    timeit("_digit_matrix", lambda: ocr._digit_matrix(hr.astype(object).to_numpy()))
 
 
 if __name__ == "__main__":
