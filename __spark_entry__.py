@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from nolock_social_ocr_services_spark import corpus, pipeline
 from nolock_social_ocr_services_spark.extract.ocr import (
-    DUCK,
     ocr_field_exprs,
     oracle_ocr_text_sql,
     sql_money,
@@ -492,8 +491,8 @@ def oracle_sql() -> dict[str, str]:
     extra = {
         name: sql for name, (_fn, sql) in extra_queries().items() if sql is not None
     }
-    e = ocr_field_exprs(DUCK, h="md5(media_ref)")
-    ocr_text = oracle_ocr_text_sql(DUCK, mime="mime", h="md5(media_ref)")
+    e = ocr_field_exprs(corpus.DUCK, h="md5(media_ref)")
+    ocr_text = oracle_ocr_text_sql(corpus.DUCK, mime="mime", h="md5(media_ref)")
     # item money fragments for receipt_items: `i` is the unnested series
     # column there, so the lambda-style exprs compose directly.
     _money_unit = sql_money(e["item_unit_cents"])

@@ -7,7 +7,7 @@ Core surface:
     operators    — classify / salt / reassemble DataFrame stages
     extract      — html boilerplate strip, synthetic OCR, typed records
     pipeline     — end-to-end extract pipeline (flat spans, nested documents)
-    lineage      — per-partition lineage + checkpoint manifest + resume
+    lineage      — per-partition lineage rows (a unit's commit record) + resume
     functions    — text analysis, dedup, similarity, multimodal plumbing
     streaming    — Structured Streaming variants
 """

@@ -1,8 +1,2 @@
-from .html import strip_boilerplate  # noqa: F401
-from .ocr import concat_pages, run_ocr  # noqa: F401
-from .records import (  # noqa: F401
-    clean_extracted_text,
-    parse_check,
-    parse_receipt,
-    route_and_extract,
-)
+"""Extraction layers: html boilerplate strip (``html``), synthetic OCR
+(``ocr``) and typed records (``records``)."""

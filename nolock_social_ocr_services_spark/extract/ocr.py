@@ -26,7 +26,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..corpus import DUCK, Dialect
 from ..session import per_context
 from ..trie import OCTET_STREAM
 
@@ -411,7 +410,7 @@ def with_ocr_metadata(
 # -- oracle SQL fragments (DuckDB + Spark SQL) -------------------------------
 
 
-def _sql_digits(d: Dialect, href: str) -> str:
+def _sql_digits(d, href: str) -> str:
     stripped = d.re_strip(href, "[^0-9]")
     return f"substr(concat({stripped}, '00000000000000000000'), 1, 20)"
 
@@ -426,7 +425,7 @@ def sql_money(cents: str) -> str:
     )
 
 
-def ocr_field_exprs(d: Dialect, h: str = "h") -> dict[str, str]:
+def ocr_field_exprs(d, h: str = "h") -> dict[str, str]:
     """SQL expressions (dialect d) for every synthetic-OCR-derived field,
     given ``h`` = md5(media_ref). Used to build DuckDB oracles that
     recompute what the Spark pipeline must extract.
@@ -508,7 +507,7 @@ def ocr_field_exprs(d: Dialect, h: str = "h") -> dict[str, str]:
     }
 
 
-def sql_receipt_item_line(d: Dialect, e: dict[str, str]) -> str:
+def sql_receipt_item_line(d, e: dict[str, str]) -> str:
     """SQL for one receipt item markdown line (lambda var ``i``)."""
     qty, unit = e["item_qty"], e["item_unit_cents"]
     return (
@@ -518,7 +517,7 @@ def sql_receipt_item_line(d: Dialect, e: dict[str, str]) -> str:
     )
 
 
-def oracle_ocr_text_sql(d: Dialect, mime: str = "mime", h: str = "h") -> str:
+def oracle_ocr_text_sql(d, mime: str = "mime", h: str = "h") -> str:
     """SQL expression for the FULL concatenated OCR text (pages in index
     order) given mime + h = md5(media_ref). Lets the DuckDB oracle verify
     the Arrow-UDF OCR stage + ordered page concat end to end."""
@@ -578,6 +577,5 @@ __all__ = [
     "ACCOUNT_TYPE_CYCLE",
     "INVALID_PAYMENT",
     "INVALID_ACCOUNT_TYPE",
-    "DUCK",
 ]
 

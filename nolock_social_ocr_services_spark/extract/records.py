@@ -207,10 +207,6 @@ def parse_receipt(text: Column) -> Column:
     return _receipt_simple_from(_receipt_fields(text))
 
 
-def parse_check(text: Column) -> Column:
-    return _check_simple_from(_check_fields(text))
-
-
 _ITEM_LINE_RE = r"(?m)^Item \d+: (I-[0-9a-f]{4} x\d+ @ \d+\.\d{2} = \d+\.\d{2})$"
 
 

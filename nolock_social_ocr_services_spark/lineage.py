@@ -13,16 +13,26 @@ strategy #3), so this module implements the protocol explicitly:
   row, so every document is in the output); the same write job counts
   the unit's documents in, spans out and trie hits per MIME with
   ``DataFrame.observe``. THEN
-  a lineage row built on the driver from those counts (FIXTURES.md §5,
-  overwritten the same way under ``_lineage/part_id=K/``) and a
-  manifest marker are committed —
-  write-data-then-manifest ordering makes a kill at any point safe:
-  an uncommitted unit is simply re-overwritten on resume;
-* resume = anti-join the unit list against the committed manifest and
-  process only the remainder (``OcrRequestHandler``'s per-request
-  idempotence, lifted to partition granularity);
+* the unit's lineage row, built on the driver from those counts
+  (FIXTURES.md §5), is written the same way under
+  ``_lineage/part_id=K/``. That partition is the unit's commit record:
+  a unit is committed if and only if its lineage partition exists.
+  Spark's dynamic partition overwrite moves each partition directory
+  into place with one rename when the write job commits, so the
+  directory appears whole or not at all; and it is written only after
+  the unit's data has landed, so a kill at any point is safe: an
+  uncommitted unit is simply re-overwritten on resume;
+* resume = list the ``part_id=`` directories under ``_lineage`` (no
+  Spark job) and process only the remaining units
+  (``OcrRequestHandler``'s per-request idempotence, lifted to partition
+  granularity);
 * readers go through ``read_output``, which only exposes committed
-  units, so a killed run never leaks partial data.
+  units, so a killed run never leaks partial data; ``read_lineage``
+  has one row per committed unit and none for any other.
+
+Output written by earlier versions also has a ``_manifest`` table; it
+is ignored. A unit with a lineage row and no manifest row there is
+committed, because its data landed before its lineage row.
 
 The reference's progress/statistics events (ThroughWithProgress,
 ReactivePipelineExtensions.cs:199-251; PipelineStatistics,
@@ -61,12 +71,17 @@ def with_part_id(docs: DataFrame, num_parts: int) -> DataFrame:
 
 
 def committed_parts(spark: SparkSession, out_dir: str) -> set[int]:
-    """Units whose manifest marker exists (= fully committed)."""
-    manifest = f"{out_dir}/_manifest"
-    if not os.path.exists(manifest):
+    """Committed units: those whose lineage partition
+    ``_lineage/part_id=K/`` exists. A directory listing, no Spark job
+    (``spark`` is unused)."""
+    lin = f"{out_dir}/_lineage"
+    if not os.path.isdir(lin):
         return set()
-    rows = spark.read.parquet(manifest).select("part_id").distinct().collect()
-    return {r.part_id for r in rows}
+    return {
+        int(d.removeprefix("part_id="))
+        for d in os.listdir(lin)
+        if d.startswith("part_id=")
+    }
 
 
 def _mime_hits(batch: list[int]) -> list[Column]:
@@ -107,7 +122,7 @@ def run_extract_job(
     """Run (or resume) the checkpointed extraction job.
 
     Returns the list of part_ids processed by THIS invocation (already-
-    committed units are skipped via the manifest anti-check).
+    committed units, those with a lineage partition, are skipped).
     ``fail_after=k`` injects a crash after >= k units commit (kill/resume
     tests; checked at batch boundaries).
 
@@ -115,11 +130,11 @@ def run_extract_job(
     dynamic-partition-overwrite write per batch, i.e. ceil(P/B) scans
     for P units (the part_id filter is a hash of doc_id, so a scan reads
     the whole input). At 1 (default) every unit is its own job, the
-    finest resume granularity; at scale set batch_size ~ 8-64. Manifests
-    are committed per unit AFTER the batch's data lands, so a kill
-    mid-batch just re-extracts that batch's uncommitted units on resume
-    (idempotent overwrite). Resume granularity coarsens to the batch
-    only for in-flight work, never for committed units.
+    finest resume granularity; at scale set batch_size ~ 8-64. Lineage
+    rows, the units' commit records, are written AFTER the batch's data
+    lands, so a kill mid-batch just re-extracts that batch's uncommitted
+    units on resume (idempotent overwrite). Resume granularity coarsens
+    to the batch only for in-flight work, never for committed units.
     """
     docsp = with_part_id(docs, num_parts)
     done = committed_parts(spark, out_dir)
@@ -165,36 +180,29 @@ def run_extract_job(
         for p, path in unit_dirs.items():
             if not os.path.exists(path):
                 spark.createDataFrame([], flat.schema).write.parquet(path)
-        # data committed -> now lineage + manifest (ordering = crash safety).
-        # A kill between the two leaves the batch uncommitted; its resume
-        # replaces these units' lineage rows rather than adding to them.
+        # data landed -> now the lineage rows, which commit the units
+        # (ordering = crash safety)
         docs_n, spans = _observed(docs_in), _observed(spans_out)
-        rows = [
+        _write_lineage(spark, out_dir, [
             (run_id, p, docs_n[str(p)], spans[str(p)],
              {m: spans[f"{p} {m}"] for m in _MIMES if spans[f"{p} {m}"]})
             for p in batch
-        ]
-        (
-            spark.createDataFrame(rows, _LINEAGE_SCHEMA)
-            .withColumn("committed_at", F.current_timestamp())
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("part_id")
-            .parquet(f"{out_dir}/_lineage")
-        )
-        _write_manifest(spark, out_dir, run_id, batch)
+        ])
         processed.extend(batch)
     return processed
 
 
-def _write_manifest(
-    spark: SparkSession, out_dir: str, run_id: str, parts: list[int]
-) -> None:
-    rows = spark.createDataFrame(
-        [(run_id, p, "committed", f"{out_dir}/data/part_id={p}") for p in parts],
-        "run_id string, part_id int, status string, output_snapshot string",
-    ).withColumn("committed_at", F.current_timestamp())
-    rows.write.mode("append").parquet(f"{out_dir}/_manifest")
+def _write_lineage(spark: SparkSession, out_dir: str, rows: list[tuple]) -> None:
+    """Commit the batch's units: one job writes each unit's lineage row,
+    and its commit renames each ``_lineage/part_id=K/`` into place."""
+    (
+        spark.createDataFrame(rows, _LINEAGE_SCHEMA)
+        .withColumn("committed_at", F.current_timestamp())
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id")
+        .parquet(f"{out_dir}/_lineage")
+    )
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

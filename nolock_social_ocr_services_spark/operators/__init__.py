@@ -1,3 +1,3 @@
-from .classify import classify_mime, decode_data_url_prefix  # noqa: F401
-from .reassemble import reassemble_spans  # noqa: F401
-from .salt import salted_repartition  # noqa: F401
+"""DataFrame stages: MIME classification (``classify``), salted
+repartition (``salt``) and span reassembly (``reassemble``), plus the
+catalog's ``temporal``, ``grouped`` and ``layout`` operators."""

@@ -2,6 +2,7 @@
 committed partition, recomputes nothing already committed, and the final
 output is identical to an uninterrupted run (FIXTURES.md §5)."""
 
+import os
 import shutil
 
 import pytest
@@ -11,6 +12,10 @@ from nolock_social_ocr_services_spark import corpus, lineage
 
 
 N_PARTS = 6
+DOC_SCHEMA = (
+    "doc_id string, spans array<struct<"
+    "kind:string,text:string,media_ref:string,offset:int>>"
+)
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +30,10 @@ def _rows(df):
             "doc_id", "offset", "kind", "mime", "text", "media_ref"
         ).collect()
     )
+
+
+def _lineage_parts(spark, out_dir):
+    return {r.part_id for r in lineage.read_lineage(spark, out_dir).collect()}
 
 
 def test_kill_and_resume_byte_identical(spark, docs, tmp_path_factory):
@@ -43,6 +52,7 @@ def test_kill_and_resume_byte_identical(spark, docs, tmp_path_factory):
             spark, docs, killed_dir, run_id="run1", num_parts=N_PARTS, fail_after=2
         )
     assert lineage.committed_parts(spark, killed_dir) == {0, 1}
+    assert _lineage_parts(spark, killed_dir) == {0, 1}
 
     # partial output only exposes committed units
     partial = lineage.read_output(spark, killed_dir)
@@ -91,31 +101,34 @@ def test_lineage_rows_cover_corpus(spark, docs, tmp_path_factory):
     assert hist_total == media
 
 
-def test_kill_before_manifest_leaves_one_lineage_row_per_unit(
+def test_kill_at_a_batch_commit_shows_only_committed_units(
     spark, docs, tmp_path, monkeypatch
 ):
-    """A kill after a batch's lineage write but before its manifest
-    commit: the resume re-extracts the batch and replaces its lineage
-    rows, so every unit ends with exactly one."""
+    """A kill at the second batch's commit, after its data has landed:
+    read_lineage shows exactly the committed units, and the resume
+    re-extracts the rest, so every unit ends with exactly one row."""
     out = str(tmp_path / "out")
-    write_manifest = lineage._write_manifest
-    killed = []
+    write_lineage = lineage._write_lineage
+    calls = []
 
-    def kill_once(*args):
-        if not killed:
-            killed.append(True)
-            raise RuntimeError("killed before the manifest commit")
-        write_manifest(*args)
+    def kill_second(*args):
+        calls.append(args)
+        if len(calls) == 2:
+            raise RuntimeError("killed at the second commit")
+        write_lineage(*args)
 
-    monkeypatch.setattr(lineage, "_write_manifest", kill_once)
-    with pytest.raises(RuntimeError, match="before the manifest commit"):
+    monkeypatch.setattr(lineage, "_write_lineage", kill_second)
+    with pytest.raises(RuntimeError, match="second commit"):
         lineage.run_extract_job(
             spark, docs, out, run_id="k", num_parts=N_PARTS, batch_size=2
         )
-    assert lineage.committed_parts(spark, out) == set()
+    monkeypatch.undo()
+    assert os.path.isdir(f"{out}/data/part_id=2")
+    assert lineage.committed_parts(spark, out) == {0, 1}
+    assert _lineage_parts(spark, out) == {0, 1}
     assert lineage.run_extract_job(
         spark, docs, out, run_id="r", num_parts=N_PARTS, batch_size=2
-    ) == list(range(N_PARTS))
+    ) == list(range(2, N_PARTS))
     lin = lineage.read_lineage(spark, out)
     assert lin.columns == [
         "run_id", "part_id", "doc_count", "span_count", "trie_hits", "committed_at"
@@ -128,15 +141,38 @@ def test_kill_before_manifest_leaves_one_lineage_row_per_unit(
     assert tuple(got) == (N_PARTS, N_PARTS, docs.count(), n_spans)
 
 
+def test_committed_parts_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """committed_parts lists the lineage partitions: it finds no unit
+    before the first commit, even over landed data, and runs no Spark
+    job."""
+    docs = spark.createDataFrame([("t1", [("text", "hello", None, 0)])], DOC_SCHEMA)
+    out = str(tmp_path / "out")
+    assert lineage.committed_parts(spark, out) == set()
+
+    def kill(*args):
+        raise RuntimeError("killed at the first commit")
+
+    monkeypatch.setattr(lineage, "_write_lineage", kill)
+    with pytest.raises(RuntimeError, match="first commit"):
+        lineage.run_extract_job(spark, docs, out, run_id="k", num_parts=2, batch_size=2)
+    monkeypatch.undo()
+    assert os.path.isdir(f"{out}/data")
+    assert lineage.committed_parts(spark, out) == set()
+    lineage.run_extract_job(spark, docs, out, run_id="r", num_parts=2, batch_size=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("committed_parts", "find the committed units")
+    try:
+        assert lineage.committed_parts(spark, out) == {0, 1}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("committed_parts")) == []
+
+
 def test_doc_count_includes_documents_without_spans(spark, tmp_path):
     """A document whose spans are [] or NULL counts in doc_count, not in
     span_count, and read_output has one row for it with NULL span fields."""
-    schema = (
-        "doc_id string, spans array<struct<"
-        "kind:string,text:string,media_ref:string,offset:int>>"
-    )
     docs = spark.createDataFrame(
-        [("t1", [("text", "hello", None, 0)]), ("e1", []), ("n1", None)], schema
+        [("t1", [("text", "hello", None, 0)]), ("e1", []), ("n1", None)], DOC_SCHEMA
     )
     out = str(tmp_path / "out")
     lineage.run_extract_job(spark, docs, out, run_id="r", num_parts=2, batch_size=2)
@@ -153,11 +189,12 @@ def test_doc_count_includes_documents_without_spans(spark, tmp_path):
     assert [r[1:] for r in out_rows[:2]] == [(None,) * 5] * 2
 
 
-def test_one_batch_runs_in_four_spark_jobs(spark, docs, tmp_path):
+def test_one_batch_runs_in_three_spark_jobs(spark, docs, tmp_path):
     """A batch of units that all have spans costs the data write (its
-    exchange's map stage and the write stage), the lineage write and the
-    manifest write: lineage is counted by the data write itself, not by
-    re-reading the batch's output."""
+    exchange's map stage and the write stage) and the lineage write,
+    which is the units' commit record: lineage is counted by the data
+    write itself, not by re-reading the batch's output, and finding the
+    committed units reads no table."""
     docs.count()  # materialize the cached input outside the counted group
     out = str(tmp_path / "out")
     sc = spark.sparkContext
@@ -169,13 +206,13 @@ def test_one_batch_runs_in_four_spark_jobs(spark, docs, tmp_path):
     lin = lineage.read_lineage(spark, out).collect()
     assert sorted(r.part_id for r in lin) == [0, 1, 2, 3]
     assert all(r.span_count > 0 for r in lin)
-    assert len(sc.statusTracker().getJobIdsForGroup("one_batch")) <= 4
+    assert len(sc.statusTracker().getJobIdsForGroup("one_batch")) <= 3
 
 
 def test_batched_units_identical_to_per_unit(spark, docs, tmp_path_factory):
     """batch_size > 1 (one scan + dynamic-partition-overwrite per batch)
-    must produce byte-identical output, lineage coverage, and manifests
-    as the per-unit path — only the scan count differs."""
+    must produce byte-identical output, lineage coverage and committed
+    units as the per-unit path — only the scan count differs."""
     per_unit = str(tmp_path_factory.mktemp("per_unit"))
     batched = str(tmp_path_factory.mktemp("batched"))
     lineage.run_extract_job(
@@ -210,6 +247,7 @@ def test_batched_kill_resume(spark, docs, tmp_path_factory):
         )
     first = lineage.committed_parts(spark, out)
     assert len(first) == 2  # exactly one batch committed
+    assert _lineage_parts(spark, out) == first
     resumed = lineage.run_extract_job(
         spark, docs, out, run_id="b2r", num_parts=N_PARTS, batch_size=2
     )
@@ -228,7 +266,7 @@ def test_empty_units_still_commit(spark, sf_dir, batch_size, tmp_path):
     """A resume unit with zero documents writes no spans; it must still
     commit with a zero-count lineage row, and read_output must return
     every committed span — also when the run starts over the data files
-    of an attempt killed before its manifest commit."""
+    of an attempt killed before its lineage commit."""
     units = 4
     only_unit_0 = (
         corpus.synthesize_documents(spark, sf_dir)
@@ -243,8 +281,7 @@ def test_empty_units_still_commit(spark, sf_dir, batch_size, tmp_path):
     assert lineage.run_extract_job(
         spark, only_unit_0, out, run_id="r2", num_parts=units, batch_size=batch_size
     ) == []
-    # data files stay, commit records go: as if killed before the manifest
-    shutil.rmtree(f"{out}/_manifest")
+    # data files stay, commit records go: as if killed before the commit
     shutil.rmtree(f"{out}/_lineage")
     assert lineage.run_extract_job(
         spark, only_unit_0, out, run_id="r3", num_parts=units, batch_size=batch_size

@@ -7,7 +7,8 @@ functions) with ``ast``, starting from the entry points:
 ``__spark_entry__.py``, ``jobs/run_extract.py``, ``perfbench/*.py``,
 ``tools/*.py`` and ``bench.py``. A second walk from the job and the
 benchmark alone (the extraction core) checks that the core imports no
-module of the query catalog. Neither needs Spark.
+module of the query catalog, and a third, from the job alone, that it
+does not import ``corpus``. None needs Spark.
 """
 
 from __future__ import annotations
@@ -98,3 +99,10 @@ def test_extraction_core_imports_no_catalog_module():
         if any(m == f"{PKG}.{c}" or m.startswith(f"{PKG}.{c}.") for c in CATALOG)
     }
     assert not catalog, f"the extraction core imports catalog modules: {sorted(catalog)}"
+
+
+def test_checkpoint_job_does_not_import_the_corpus_synthesizer():
+    """The job reads any documents table; the synthesizer and the oracle
+    SQL dialects in ``corpus`` belong to the tests and the benchmark."""
+    job = _reachable(_package_modules(), ("jobs/run_extract.py",))
+    assert f"{PKG}.corpus" not in job
