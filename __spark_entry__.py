@@ -54,6 +54,32 @@ def entry(spark: SparkSession) -> DataFrame:
 # -- Spark-side query callables ----------------------------------------------
 
 
+def barrier_filter(df: DataFrame, cond) -> DataFrame:
+    """Filter on already-projected columns WITHOUT letting Catalyst
+    substitute the predicate below the projection.
+
+    PushPredicateThroughNonJoin only rewrites ``Filter(Project(...))``
+    when EVERY project expression is deterministic, so one throwaway
+    ``monotonically_increasing_id()`` column pins the filter above the
+    projection. The predicate must REFERENCE that column (OR'd with an
+    always-false test of it, inside one non-splittable disjunct) —
+    otherwise ColumnPruning deletes the unused nondeterministic field
+    first and the now-deterministic Project lets the filter through.
+    Why it matters here: a success filter like ``receipt.isNotNull()``
+    otherwise inlines the WHOLE extraction expression (the cleanup
+    regex chain per tested field) into a pre-projection predicate — the
+    plan then runs the regex battery once per field in the filter and
+    again in the projection. With the barrier the struct is computed
+    once and the filter tests its null bit. Costs one long column,
+    dropped immediately; row pruning still happens before any
+    downstream stage."""
+    return (
+        df.withColumn("__no_pushdown", F.monotonically_increasing_id())
+        .filter(cond | (F.col("__no_pushdown") < F.lit(0)))
+        .drop("__no_pushdown")
+    )
+
+
 def _q_classify_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1-C4 + P8: trie classification of every span's payload prefix."""
     spans = corpus.flat_spans(spark, sf_dir).select(
@@ -80,7 +106,7 @@ def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_extract_receipts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2-T8 receipt path: OCR -> ordered concat -> typed field parse."""
     flat = _extracted(spark, sf_dir)
-    return pipeline.barrier_filter(flat, F.col("receipt").isNotNull()).select(
+    return barrier_filter(flat, F.col("receipt").isNotNull()).select(
         "doc_id",
         "offset",
         F.col("receipt.merchant_name").alias("merchant_name"),
@@ -95,7 +121,7 @@ def _q_extract_receipts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_extract_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2-T8 check path."""
     flat = _extracted(spark, sf_dir)
-    return pipeline.barrier_filter(flat, F.col("check").isNotNull()).select(
+    return barrier_filter(flat, F.col("check").isNotNull()).select(
         "doc_id",
         "offset",
         F.col("check.check_number").alias("check_number"),
@@ -180,7 +206,7 @@ def _q_extract_receipts_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the simple model (schema_used='simple', full fields NULL)."""
     flat = _extracted(spark, sf_dir)
     rf = F.col("receipt_full")
-    return pipeline.barrier_filter(
+    return barrier_filter(
         flat, F.col("receipt").isNotNull() | rf.isNotNull()
     ).select(
         "doc_id",
@@ -202,7 +228,7 @@ def _q_receipt_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per line item (ReceiptModels.cs:260-290)."""
     flat = _extracted(spark, sf_dir)
     rf = F.col("receipt_full")
-    exploded = pipeline.barrier_filter(flat, rf.isNotNull()).select(
+    exploded = barrier_filter(flat, rf.isNotNull()).select(
         "doc_id", "offset", F.posexplode(rf["items"])
     )
     return exploded.select(
@@ -222,7 +248,7 @@ def _q_extract_checks_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL full fields."""
     flat = _extracted(spark, sf_dir)
     cf = F.col("check_full")
-    return pipeline.barrier_filter(
+    return barrier_filter(
         flat, F.col("check").isNotNull() | cf.isNotNull()
     ).select(
         "doc_id",

@@ -266,12 +266,13 @@ def run_ocr(
     downstream order-by-index concat (T3) is genuinely exercised.
     """
     res, fields = _ocr_exprs(media_ref_col, mime_col)
-    # two projections: the UDF result, then the page fields read out of it
-    return df.withColumn(_H, res).withColumns(fields).drop(_H)
+    # two projections: the UDF result, then the page fields read out of
+    # it in its place
+    return df.withColumn(_H, res).select(*df.columns, *fields)
 
 
 @per_context
-def _ocr_exprs(media_ref_col: str, mime_col: str) -> tuple[Column, dict[str, Column]]:
+def _ocr_exprs(media_ref_col: str, mime_col: str) -> tuple[Column, tuple[Column, ...]]:
     res = _ocr_udf(F.md5(F.col(media_ref_col)), F.col(mime_col))
     r = F.col(_H)
     # reversed full page array [idx2, idx1, idx0]; slice keeps the LAST
@@ -285,7 +286,9 @@ def _ocr_exprs(media_ref_col: str, mime_col: str) -> tuple[Column, dict[str, Col
     pages = F.when(npages.isNull(), F.lit(None).cast(PAGE_SCHEMA)).otherwise(
         F.slice(full, F.lit(4) - npages, npages)
     )
-    return res, {"ocr_pages": pages, "ocr_model": r["model"], "ocr_tokens": r["tokens"]}
+    return res, (
+        pages.alias("ocr_pages"), r["model"].alias("ocr_model"), r["tokens"].alias("ocr_tokens")
+    )
 
 
 def concat_pages(df: DataFrame, pages_col: str = "ocr_pages", out_col: str = "ocr_text") -> DataFrame:

@@ -60,6 +60,11 @@ _LINEAGE_SCHEMA = (
     "run_id string, part_id int, doc_count long, span_count long, "
     "trie_hits map<string,long>"
 )
+#: the input documents' shape (corpus.py), for the columns of an empty output
+_DOCS_SCHEMA = (
+    "doc_id string, spans array<struct<"
+    "kind:string,text:string,media_ref:string,offset:int>>"
+)
 #: every MIME the pipeline's (lenient) classifier can give a media span
 _MIMES = (*lenient_trie().get_all_mime_types(), OCTET_STREAM)
 
@@ -208,8 +213,12 @@ def _write_lineage(spark: SparkSession, out_dir: str, rows: list[tuple]) -> None
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """Committed extraction output only (uncommitted dirs are invisible):
     one row per span, and for each document without spans one row whose
-    NULL ``offset`` (and NULL span fields) stands for it."""
+    NULL ``offset`` (and NULL span fields) stands for it. With no
+    committed unit it is empty, with the same columns."""
     done = committed_parts(spark, out_dir)
+    if not done:  # no path to read: no rows, with the columns the job writes
+        no_docs = spark.createDataFrame([], _DOCS_SCHEMA)
+        return spark.createDataFrame([], extract_rows(no_docs).schema)
     df = spark.read.option("basePath", f"{out_dir}/data").parquet(
         *[f"{out_dir}/data/part_id={p}" for p in sorted(done)]
     )
@@ -217,5 +226,10 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    """One row per committed unit (``_lineage`` is partitioned by part_id)."""
-    return spark.read.parquet(f"{out_dir}/_lineage").select(*LINEAGE_COLUMNS)
+    """One row per committed unit (``_lineage`` is partitioned by
+    part_id); none, with the same columns, before the first commit."""
+    if not committed_parts(spark, out_dir):
+        lin = spark.createDataFrame([], f"{_LINEAGE_SCHEMA}, committed_at timestamp")
+    else:
+        lin = spark.read.parquet(f"{out_dir}/_lineage")
+    return lin.select(*LINEAGE_COLUMNS)

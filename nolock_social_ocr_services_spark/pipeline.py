@@ -11,6 +11,13 @@ SURVEY.md §3, re-expressed as one declarative Spark plan):
       -> typed field extraction (built-ins)     T4-T8
       -> per-doc ordered re-assembly            W1 invariant
 
+Every stage up to the html strip is the span-text core (``_span_text``),
+which both outputs share. Each output builds only the layers it reads,
+as the reference runs only the chain an endpoint needs
+(Program.cs:75-102): ``extracted_documents`` reassembles the core's span
+fields, and ``extract_rows`` is the one place that adds the typed field
+extraction (``route_and_extract``) on top of it.
+
 Every stage keeps per-row failures as data (error columns), never
 failing the job for one row (ST6, ReactivePipelineExtensions.cs:180-188).
 """
@@ -28,31 +35,7 @@ from .operators.reassemble import reassemble_spans
 from .operators.salt import salted_repartition
 from .session import per_context
 
-
-def barrier_filter(df: DataFrame, cond) -> DataFrame:
-    """Filter on already-projected columns WITHOUT letting Catalyst
-    substitute the predicate below the projection.
-
-    PushPredicateThroughNonJoin only rewrites ``Filter(Project(...))``
-    when EVERY project expression is deterministic, so one throwaway
-    ``monotonically_increasing_id()`` column pins the filter above the
-    projection. The predicate must REFERENCE that column (OR'd with an
-    always-false test of it, inside one non-splittable disjunct) —
-    otherwise ColumnPruning deletes the unused nondeterministic field
-    first and the now-deterministic Project lets the filter through.
-    Why it matters here: a success filter like ``receipt.isNotNull()``
-    otherwise inlines the WHOLE extraction expression (the cleanup
-    regex chain per tested field) into a pre-projection predicate — the
-    plan then runs the regex battery once per field in the filter and
-    again in the projection. With the barrier the struct is computed
-    once and the filter tests its null bit. Costs one long column,
-    dropped immediately; row pruning still happens before any
-    downstream stage."""
-    return (
-        df.withColumn("__no_pushdown", F.monotonically_increasing_id())
-        .filter(cond | (F.col("__no_pushdown") < F.lit(0)))
-        .drop("__no_pushdown")
-    )
+SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -73,6 +56,21 @@ def _explode_exprs() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
     )
 
 
+def _span_text(docs: DataFrame) -> DataFrame:
+    """The span-text core: explode -> salted exchange -> classify -> OCR
+    -> page text -> ``extracted_text``, the extraction result per kind.
+    One row per span plus the NULL-offset row of each document without
+    spans. Both outputs build on it; neither builds it another way."""
+    # No count: AQE coalesces the exchange below spark.sql.shuffle.partitions
+    # from its shuffle bytes; parallelismFirst aims at bytes/defaultParallelism
+    # (at least 1 MB), so a large input still fills every core. A small one
+    # gets few tasks: each Python task pays ~0.25 CPU-s up front, mostly in
+    # pyspark's setup_spark_files re-reading its zipimport directories.
+    salted = salted_repartition(explode_spans(docs))
+    classified = classify_mime(salted, data_url_col="media_ref", out_col="mime")
+    return concat_pages(run_ocr(classified)).withColumn("extracted_text", _extracted_text())
+
+
 @per_context
 def _extracted_text() -> Column:
     html_only = F.when(F.col("kind") == "html", F.col("text"))  # masked input
@@ -83,16 +81,25 @@ def _extracted_text() -> Column:
     )
 
 
-@per_context
-def _output() -> tuple[Column, ...]:
-    names = (
-        "doc_id", "offset", "kind", "mime", "text", "media_ref", "receipt", "check",
-        "receipt_full", "check_full", "schema_used", "extract_error", "confidence",
-        "ocr_model", "ocr_tokens",
-    )
+def _renamed(names: tuple[str, ...]) -> tuple[Column, ...]:
+    """``names`` as Columns, with ``text`` read from ``extracted_text``."""
     return tuple(
         F.col("extracted_text").alias("text") if c == "text" else F.col(c) for c in names
     )
+
+
+@per_context
+def _output() -> tuple[Column, ...]:
+    return _renamed((
+        "doc_id", "offset", "kind", "mime", "text", "media_ref", "receipt", "check",
+        "receipt_full", "check_full", "schema_used", "extract_error", "confidence",
+        "ocr_model", "ocr_tokens",
+    ))
+
+
+@per_context
+def _span_columns() -> tuple[Column, ...]:
+    return _renamed(("doc_id", "offset", "kind", "text", "media_ref"))
 
 
 @per_context
@@ -101,27 +108,20 @@ def _has_offset() -> Column:
 
 
 def extract_rows(docs: DataFrame) -> DataFrame:
-    """Every layer over ``explode_spans(docs)``: one row per span plus
-    the NULL-offset row of each document without spans, so every input
-    document has at least one row (``lineage.run_extract_job`` writes
-    these rows).
+    """Every layer, the typed field extraction on top of the span-text
+    core: one row per span plus the NULL-offset row of each document
+    without spans, so every input document has at least one row
+    (``lineage.run_extract_job`` writes these rows). The only
+    composition of ``route_and_extract``: ``extract_spans``, the
+    checkpoint job, the streaming job and the query catalog all reach
+    the records layer through it.
 
     Every Column comes from a ``session.per_context`` memo, and each
     layer adds its columns in one projection per level it needs (OCR:
-    the UDF result, then the page fields; records: cleaned text, masked
-    fields, structs, outcome), so a build after the first is ~200 py4j
-    calls and ~16 plan analyses."""
-    exploded = explode_spans(docs)
-    # No count: AQE coalesces the exchange below spark.sql.shuffle.partitions
-    # from its shuffle bytes; parallelismFirst aims at bytes/defaultParallelism
-    # (at least 1 MB), so a large input still fills every core. A small one
-    # gets few tasks: each Python task pays ~0.25 CPU-s up front, mostly in
-    # pyspark's setup_spark_files re-reading its zipimport directories.
-    salted = salted_repartition(exploded)
-    classified = classify_mime(salted, data_url_col="media_ref", out_col="mime")
-    ocred = concat_pages(run_ocr(classified))
-    extracted = ocred.withColumn("extracted_text", _extracted_text())
-    typed = route_and_extract(extracted, text_col="ocr_text")
+    the UDF result, then the page fields in its place; records: cleaned
+    text, masked fields, structs, outcome), so a build after the first
+    is 15 plan analyses."""
+    typed = route_and_extract(_span_text(docs), text_col="ocr_text")
     return typed.select(*_output())
 
 
@@ -160,8 +160,11 @@ def extracted_documents(docs: DataFrame) -> DataFrame:
     """Nested output: (doc_id, spans[]) with extracted text, offset order
     restored after the salted shuffle — the span-sequence contract. Every
     input document comes out exactly once; one whose ``spans`` is empty
-    or NULL comes out with ``spans = []``."""
-    return reassemble_spans(
-        extract_rows(docs), span_fields=("kind", "text", "media_ref", "offset")
-    )
+    or NULL comes out with ``spans = []``.
 
+    Reassembles the span-text core's span fields and builds no records
+    layer, which its output would not read: a build after the first is
+    10 plan analyses and under a hundred py4j calls. Its optimized plan
+    is the one Catalyst derives from ``extract_rows`` projected to the
+    span fields, whose records columns ColumnPruning removes."""
+    return reassemble_spans(_span_text(docs).select(*_span_columns()), span_fields=SPAN_FIELDS)

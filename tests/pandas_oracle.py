@@ -111,11 +111,14 @@ def _strip_html(html: str) -> str:
 
 
 def _extracted_text(kind: str, text: str | None, media_ref: str | None) -> str | None:
-    """One span's extraction result, by kind."""
+    """One span's extraction result, by kind. Any other kind is media:
+    the OCR text of its payload, or None when it has none."""
     if kind == "text":
         return text
     if kind == "html":
         return _strip_html(text)
+    if media_ref is None:
+        return None
     payload = base64.b64decode(media_ref.split(";base64,", 1)[1])
     return _ocr_text(media_ref, _TRIE.search(payload) or OCTET_STREAM)
 

@@ -144,10 +144,19 @@ def test_kill_at_a_batch_commit_shows_only_committed_units(
 def test_committed_parts_runs_no_spark_job(spark, tmp_path, monkeypatch):
     """committed_parts lists the lineage partitions: it finds no unit
     before the first commit, even over landed data, and runs no Spark
-    job."""
+    job. Until then read_output and read_lineage are empty, with the
+    columns they have after it."""
     docs = spark.createDataFrame([("t1", [("text", "hello", None, 0)])], DOC_SCHEMA)
     out = str(tmp_path / "out")
     assert lineage.committed_parts(spark, out) == set()
+    os.makedirs(out)
+
+    def empty_reads():
+        output, lin = lineage.read_output(spark, out), lineage.read_lineage(spark, out)
+        assert output.count() == 0 and lin.count() == 0
+        return output.dtypes, lin.dtypes
+
+    before = empty_reads()
 
     def kill(*args):
         raise RuntimeError("killed at the first commit")
@@ -158,7 +167,11 @@ def test_committed_parts_runs_no_spark_job(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert os.path.isdir(f"{out}/data")
     assert lineage.committed_parts(spark, out) == set()
+    assert empty_reads() == before
     lineage.run_extract_job(spark, docs, out, run_id="r", num_parts=2, batch_size=2)
+    output, lin = lineage.read_output(spark, out), lineage.read_lineage(spark, out)
+    assert (output.dtypes, lin.dtypes) == before
+    assert output.count() == 1 and lin.count() == 2
     sc = spark.sparkContext
     sc.setJobGroup("committed_parts", "find the committed units")
     try:

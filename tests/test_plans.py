@@ -91,15 +91,18 @@ def test_filtered_extract_single_ocr_stage(spark, corpus_path):
 
 
 def test_barrier_filter_tests_null_bit_only(spark, corpus_path):
-    """pipeline.barrier_filter pins a success filter ABOVE the extraction
-    projection: the Filter node must test the struct's null bit, not an
-    inlined copy of the per-field regex battery. Guards the ColumnPruning
-    interaction — if the throwaway nondeterministic column stops being
-    referenced by the predicate, Catalyst prunes it and re-inlines the
-    whole extraction expression into a pre-projection Filter."""
+    """__spark_entry__.barrier_filter pins a success filter ABOVE the
+    extraction projection: the Filter node must test the struct's null
+    bit, not an inlined copy of the per-field regex battery. Guards the
+    ColumnPruning interaction — if the throwaway nondeterministic column
+    stops being referenced by the predicate, Catalyst prunes it and
+    re-inlines the whole extraction expression into a pre-projection
+    Filter."""
+    from __spark_entry__ import barrier_filter
+
     docs = spark.read.parquet(corpus_path)
     flat = pipeline.extract_spans(docs)
-    filtered = pipeline.barrier_filter(flat, F.col("receipt").isNotNull()).select(
+    filtered = barrier_filter(flat, F.col("receipt").isNotNull()).select(
         "doc_id", "offset", F.col("receipt.merchant_name").alias("m")
     )
     plan = explain_str(filtered)
